@@ -56,8 +56,7 @@ RUNNER = textwrap.dedent("""
     def pipeline():
         return flagship_vectors(turns, state,
                                 state_cols=["state_score", "state_tag"],
-                                hot_keys=["mega"], salt_buckets=8,
-                                num_partitions=max(2 * cpus, 8))
+                                hot_keys=["mega"], salt_buckets=8)
 
     pipeline().limit(50000).write.format("noop").mode("overwrite").save()
     t0 = time.time()

@@ -61,8 +61,7 @@ RUNNER = textwrap.dedent("""
         # into the join stage (see aloha_spark/plans/flagship.py)
         return flagship_vectors(turns, state,
                                 state_cols=["state_score", "state_tag"],
-                                hot_keys=["mega"], salt_buckets=8,
-                                num_partitions=max(2 * cpus, 8))
+                                hot_keys=["mega"], salt_buckets=8)
 
     # warm-up (JIT, python workers) on a slice
     pipeline().limit(50000).write.format("noop").mode("overwrite").save()
@@ -293,13 +292,13 @@ def render_md(summary, reps):
     levels = sorted(results)
     # walls may be POOLED across same-protocol runs (the pooling is a
     # post-step editing last_scaling.json) — report the real count
-    reps = max(reps, *(len(results[c].get("all_walls", []))
-                       for c in levels))
+    reps = max([reps] + [len(results[c].get("all_walls", []))
+                         for c in levels])
     effs = summary["efficiencies"]
     pairs = [(a, b) for a in levels for b in levels
              if b == 4 * a and f"{a}->{b}" in effs]
 
-    rows_n = results[levels[0]]["rows"]
+    rows_n = results[levels[0]]["rows"] if levels else 0
     table = "\n".join(
         f"| local[{c}] | {results[c]['wall_sec']} | "
         f"{results[c]['rows_per_sec']:,} | "
@@ -308,7 +307,8 @@ def render_md(summary, reps):
     eff_lines = "\n".join(
         f"- **N={a} -> 4N={b}: efficiency = {effs[f'{a}->{b}']:.3f}**"
         for a, b in pairs)
-    best = max(results.values(), key=lambda r: r["rows_per_sec"])
+    best = max(results.values(), key=lambda r: r["rows_per_sec"],
+               default={"rows_per_sec": 0})
     qual = summary.get("value_pair")
     md = f"""# BENCH/BASELINE — throughput + N->4N scaling evidence
 

@@ -75,8 +75,7 @@ RUNNER = textwrap.dedent("""
 
     def build():
         kw = dict(state_cols=["state_score", "state_tag"],
-                  hot_keys=["mega"], salt_buckets=8,
-                  num_partitions=max(2 * cpus, 8))
+                  hot_keys=["mega"], salt_buckets=8)
         if part == "jvm":
             return point_in_time_features(turns, state, **kw)
         return flagship_vectors(turns, state, **kw)

@@ -185,20 +185,9 @@ def q_asof_strict(spark, sf_dir):
     return out.select("conv_id", "turn_idx", "state_score")
 
 
-def q_asof_merge(spark, sf_dir):
-    """As-of join, merge mode (mapInPandas streaming two-pointer with
-    O(1) state carry) — same DuckDB ASOF oracle as the window mode."""
-    from aloha_spark.operators.asof import asof_join
-    t = transcripts_from_events(spark, sf_dir)
-    s = state_from_events(spark, sf_dir)
-    out = asof_join(t, s, on="ts", by="conv_id", state_cols=["state_score"],
-                    mode="merge")
-    return out.select("conv_id", "turn_idx", "state_score")
-
-
 def q_asof_forward(spark, sf_dir):
     """Forward as-of join (earliest state with state.ts >= turn.ts —
-    label/outcome attachment): window mode, the descending-scan dual of
+    label/outcome attachment): the descending-scan dual of
     the backward fill (operators/asof.py).  DuckDB's ASOF JOIN takes
     the <= comparator directly."""
     from aloha_spark.operators.asof import asof_join
@@ -923,7 +912,7 @@ def q_feature_vectors_jvm(spark, sf_dir):
                      {"name": "half", "spec": "${y} / 2"}],
         "namespaces": {}, "numBits": 18, "numMissingThreshold": 2})
     out = FeaturePipeline(spec).to_sparse_vectors(
-        ev, keep_cols=["event_id"], impl="jvm")
+        ev, keep_cols=["event_id"])
     return (out.select(
         "event_id",
         F.posexplode_outer(
@@ -2076,7 +2065,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "session_stats": q_session_stats,
         "rolling_tool_count": q_rolling_tool_count,
         "asof_strict": q_asof_strict,
-        "asof_merge": q_asof_merge,
         "asof_forward": q_asof_forward,
         "asof_nearest": q_asof_nearest,
         "asof_tolerance": q_asof_tolerance,
@@ -2206,10 +2194,6 @@ FROM transcripts t ASOF LEFT JOIN state s
 SELECT t.conv_id, t.turn_idx, s.state_score
 FROM transcripts t ASOF LEFT JOIN state s
   ON t.conv_id = s.conv_id AND t.ts > s.ts""",
-        "asof_merge": f"""{T}
-SELECT t.conv_id, t.turn_idx, s.state_score
-FROM transcripts t ASOF LEFT JOIN state s
-  ON t.conv_id = s.conv_id AND t.ts >= s.ts""",
         "asof_forward": f"""{T}
 SELECT t.conv_id, t.turn_idx, s.state_score
 FROM transcripts t ASOF LEFT JOIN state s
@@ -2455,10 +2439,17 @@ s3 AS (
          len(regexp_extract_all(t2, '\\+[0-9][0-9()\\-. ]{6,}[0-9]')) AS c3,
          regexp_replace(t2, '\\+[0-9][0-9()\\-. ]{6,}[0-9]',
                         '<PHONE>', 'g') AS t3
-  FROM s2)
-SELECT doc_id, t3 AS text_scrubbed,
-       CAST(c0 + c1 + c2 + c3 AS BIGINT) AS n_redactions
-FROM s3""",
+  FROM s2),
+s4 AS (
+  SELECT doc_id, c0, c1, c2, c3,
+         len(regexp_extract_all(t3,
+             '\\b[0-9]{3}-[0-9]{3,4}-[0-9]{4}\\b')) AS c4,
+         regexp_replace(t3, '\\b[0-9]{3}-[0-9]{3,4}-[0-9]{4}\\b',
+                        '<PHONE>', 'g') AS t4
+  FROM s3)
+SELECT doc_id, t4 AS text_scrubbed,
+       CAST(c0 + c1 + c2 + c3 + c4 AS BIGINT) AS n_redactions
+FROM s4""",
         "doc_curate": """
 WITH injected AS (
   SELECT doc_id,
@@ -2536,11 +2527,18 @@ s3 AS (
          regexp_replace(t2, '\\+[0-9][0-9()\\-. ]{6,}[0-9]',
                         '<PHONE>', 'g') AS t3
   FROM s2),
-scr AS (
-  SELECT doc_id, t3 AS text,
-         CAST(c0 + c1 + c2 + c3 AS BIGINT) AS n_redactions,
-         quality_score
+s4 AS (
+  SELECT doc_id, quality_score, c0, c1, c2, c3,
+         len(regexp_extract_all(t3,
+             '\\b[0-9]{3}-[0-9]{3,4}-[0-9]{4}\\b')) AS c4,
+         regexp_replace(t3, '\\b[0-9]{3}-[0-9]{3,4}-[0-9]{4}\\b',
+                        '<PHONE>', 'g') AS t4
   FROM s3),
+scr AS (
+  SELECT doc_id, t4 AS text,
+         CAST(c0 + c1 + c2 + c3 + c4 AS BIGINT) AS n_redactions,
+         quality_score
+  FROM s4),
 keep AS (SELECT MIN(doc_id) AS doc_id FROM scr GROUP BY text)
 SELECT s.doc_id, s.text, s.n_redactions, s.quality_score
 FROM scr s JOIN keep USING (doc_id)""",

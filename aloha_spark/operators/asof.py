@@ -11,8 +11,8 @@ The reference engine (eHarmony/aloha) has no joins at all — it is
 stateless per-row scoring; its only sequential primitive is
 ``StatefulRowCreator.statefulMap`` (aloha-core/.../dataset/
 StatefulRowCreator.scala:36-75), whose doc prescribes "a separate
-starting state for each unit of parallelism" — exactly the
-per-partition carry used here.
+starting state for each unit of parallelism" — here every key's window
+partition is that unit.
 
 Design (Spark-first, scales to 10^12 rows):
 
@@ -20,23 +20,17 @@ Design (Spark-first, scales to 10^12 rows):
    payload, turn rows carry the turn payload.  One DataFrame means one
    shuffle co-partitions both sides by construction; there is no need to
    force identical range boundaries across two separate DataFrames.
-2. ``repartition(num_partitions, key)`` — hash partition by the join
-   key, so every conversation's turns AND state land in one partition.
-3. ``sortWithinPartitions(key, ts, side)`` — within a partition each
-   conversation is a contiguous run ordered by time; ``side`` breaks
-   timestamp ties so that state sorts before turns when exact matches
-   are allowed (and after when strict).  This leverages Spark's
-   spill-to-disk external sort, so a partition larger than memory is fine.
-4. ``mapInPandas`` single forward pass: forward-fill the state payload
-   within each key group (vectorized pandas ``groupby().ffill()`` over
-   a row-position indirection so multi-column state rows stay atomic),
-   emit only turn rows.  Because rows arrive sorted, the carry between
-   Arrow batches is O(1): only the *last* key's latest state can span a
-   batch boundary.  A mega-conversation therefore streams through in
-   batch-sized chunks — it never has to fit in memory (unlike
-   ``groupBy(key).applyInPandas``).
+2. Pack the state payload into one struct (NULL on turn rows; a struct
+   keeps multi-column state rows atomic) and forward-fill it with
+   ``last(struct, ignorenulls=True)`` over ``Window.partitionBy(key)
+   .orderBy(ts, side)``.  ``side`` breaks timestamp ties so that state
+   sorts before turns when exact matches are allowed (and after when
+   strict).  The window's exchange + sort is Spark's spill-to-disk
+   external sort, so a key larger than memory is fine.
+3. Keep turn rows.  The whole join is a Catalyst plan: one shuffle, zero
+   Python, whole-stage-codegen'd.
 
-Skew: a hot key makes one task long, not incorrect.  ``salt_hot_keys``
+Skew: a hot key makes one task long, not incorrect.  Salting (``hot_keys``)
 splits a hot key's turns across ``salt_buckets`` sub-partitions and
 replicates the hot key's state rows into every sub-partition
 (replicate-the-small-side salting).  Each salted task then computes its
@@ -47,106 +41,12 @@ functions of (turn ts, full state history).
 
 from __future__ import annotations
 
-import math
-from typing import Iterable, Iterator, Optional, Sequence
+from typing import Iterable, Optional, Sequence
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 _SIDE = "__asof_side"
 _SALT = "__asof_salt"
-
-
-def _merge_schema(turns: DataFrame, state_cols: Sequence[str],
-                  state: DataFrame) -> StructType:
-    state_fields = {f.name: f for f in state.schema.fields}
-    fields = list(turns.schema.fields)
-    for c in state_cols:
-        f = state_fields[c]
-        fields.append(StructField(f.name, f.dataType, nullable=True))
-    return StructType(fields)
-
-
-def _make_merge_fn(turn_cols: list[str], state_cols: list[str],
-                   by_cols: list[str], on: str):
-    """Build the per-partition streaming merge for mapInPandas.
-
-    Grouping uses the raw key columns (never a concatenated string — a
-    synthetic separator can be corrupted in Arrow transport, which would
-    silently merge adjacent groups and leak state across them)."""
-
-    def merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry_key: Optional[tuple] = None     # last key of previous batch
-        carry_state: Optional[tuple] = None   # its latest state payload
-        out_cols = turn_cols + state_cols
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            n = len(pdf)
-            is_state = pdf[_SIDE].to_numpy() != 1  # turn side is always 1
-            key_arrays = [pdf[c].to_numpy() for c in by_cols]
-
-            # Row-position indirection keeps multi-column state rows
-            # atomic (a NULL inside a state row must NOT inherit an
-            # older row's value).
-            pos = np.where(is_state, np.arange(n, dtype=np.float64), np.nan)
-            pos_filled = (
-                pd.Series(pos)
-                .groupby([pd.Series(a) for a in key_arrays], sort=False)
-                .ffill()
-                .to_numpy()
-            )
-
-            # Splice in the carry from the previous batch: rows of the
-            # first key-run that have no state yet inherit carry_state.
-            use_carry = None
-            if carry_state is not None:
-                first_run = np.ones(n, dtype=bool)
-                for arr, ck in zip(key_arrays, carry_key):
-                    first_run &= arr == ck
-                if first_run.any() and first_run[0]:
-                    # first key run is a prefix (sorted input)
-                    run_end = int(np.argmin(first_run)) if not first_run.all() else n
-                    use_carry = np.zeros(n, dtype=bool)
-                    use_carry[:run_end] = np.isnan(pos_filled[:run_end])
-
-            turn_mask = ~is_state
-            out = {c: pdf[c].to_numpy()[turn_mask] for c in turn_cols}
-            gather = pos_filled[turn_mask]
-            has_state = ~np.isnan(gather)
-            gather_idx = np.where(has_state, gather, 0).astype(np.int64)
-            for ci, c in enumerate(state_cols):
-                vals = pd.Series(pdf[c].to_numpy()[gather_idx])
-                # int/bool batches with no nulls arrive as non-nullable
-                # dtypes; objectify so masking to None survives Arrow
-                if vals.dtype.kind in "iub":
-                    vals = vals.astype(object)
-                vals = vals.mask(~has_state, None)
-                if use_carry is not None:
-                    uc = use_carry[turn_mask]
-                    if uc.any():
-                        cv = carry_state[ci]
-                        if vals.dtype.kind in "iub" and cv is None:
-                            vals = vals.astype(object)
-                        vals = vals.mask(uc, cv)
-                out[c] = vals.to_numpy()
-            yield pd.DataFrame(out, columns=out_cols)
-
-            # Update the carry: latest state for the LAST key in this
-            # batch (earlier keys are complete — input is sorted by key).
-            last_key = tuple(arr[-1] for arr in key_arrays)
-            last_pos = pos_filled[-1]
-            if not math.isnan(last_pos):
-                carry_key = last_key
-                carry_state = tuple(pdf[c].iloc[int(last_pos)] for c in state_cols)
-            elif carry_key != last_key:
-                carry_key = last_key
-                carry_state = None
-            # else: keep previous carry (last key continues, no new state)
-
-    return merge
 
 
 def detect_hot_keys(df: DataFrame, by: str, threshold: int) -> list:
@@ -165,12 +65,10 @@ def asof_join(
     state_cols: Optional[Sequence[str]] = None,
     *,
     allow_exact: bool = True,
-    num_partitions: Optional[int] = None,
     tiebreaker: Optional[str] = None,
     hot_keys: Optional[Iterable] = None,
     hot_key_threshold: Optional[int] = None,
     salt_buckets: int = 8,
-    mode: str = "window",
     direction: str = "backward",
     tolerance: Optional[float] = None,
 ) -> DataFrame:
@@ -184,28 +82,16 @@ def asof_join(
       (``>`` when strict) — label/outcome attachment.
     - ``"nearest"``: whichever of the two candidates is closer in
       ``|state[on] - turns[on]|``; exact ties go to the backward row
-      (pandas' rule).  Window mode only (it is the composition of both
-      fills over ONE exchange; the streaming merge is single-direction
-      by construction).
+      (pandas' rule) — the composition of both fills over ONE exchange.
 
-    ``mode="window"`` (default): after the union, the merge is a pure
-    Catalyst plan — pack the state payload into one struct (NULL on turn
-    rows; a struct keeps multi-column state rows atomic) and take
-    ``last(struct, ignorenulls=True)`` over
-    ``Window.partitionBy(key).orderBy(ts, side)`` with an
-    unbounded-preceding frame, then keep turn rows.  One shuffle, zero
-    Python, whole-stage-codegen'd — and downstream turn windows that
-    partition by the same key reuse the exchange.  (PySpark local-mode
+    The join is a pure Catalyst plan (module docstring): one shuffle,
+    zero Python, whole-stage-codegen'd — and downstream turn windows
+    that partition by the same key reuse the exchange.  (PySpark local-mode
     lesson baked in here: a mapInPandas stage pipelined into a shuffle
     runs a Python worker AND a JVM thread per task; at full-machine
     parallelism that oversubscribes every core and the stage stops
     scaling.  Keeping the join JVM-side is what preserves >=0.8 N->4N
     efficiency.)
-
-    ``mode="merge"``: the explicit partition-local two-pointer streaming
-    merge in mapInPandas (pd.merge_asof semantics) — kept as the
-    reference implementation and for engines where the window above
-    can't express extensions (e.g. per-row custom carry logic).
 
     ``tiebreaker``: optional state column; among state rows sharing
     (by, on) the one with the greatest tiebreaker wins (deterministic).
@@ -218,20 +104,13 @@ def asof_join(
     staleness bound every point-in-time feature store needs ("a score
     from last month must not decorate today's turn").  Units: seconds
     for timestamp/date ``on`` columns, the column's own units for
-    numeric ``on``.  Window mode only (the state struct carries its
-    own timestamp, so the bound is one map-side comparison after the
-    fill; the streaming merge kernel does not carry state timestamps).
+    numeric ``on``.  The state struct carries its own timestamp, so the
+    bound is one map-side comparison after the fill.
     """
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"unknown asof direction: {direction!r}")
-    if tolerance is not None:
-        if mode != "window":
-            raise ValueError("tolerance requires mode='window' (the "
-                             "merge kernel does not carry state "
-                             "timestamps)")
-        if not tolerance >= 0:
-            raise ValueError(f"tolerance must be >= 0: {tolerance}")
-    spark = turns.sparkSession
+    if tolerance is not None and not tolerance >= 0:
+        raise ValueError(f"tolerance must be >= 0: {tolerance}")
     if state_cols is None:
         state_cols = [c for c in state.columns if c not in (by, on)]
     state_cols = list(state_cols)
@@ -241,19 +120,16 @@ def asof_join(
                          f"rename before joining")
 
     turn_cols = list(turns.columns)
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
 
     # side: state sorts before turns at equal ts iff exact matches allowed
     state_side, turn_side = (0, 1) if allow_exact else (2, 1)
 
     t = turns
     # NULL join keys never match (SQL equi-join / pd.merge_asof
-    # semantics): drop NULL-key state rows up front so BOTH modes agree
-    # — without this the window mode's partitionBy groups NULL keys
-    # together and forward-fills state onto NULL-key turns, while the
-    # merge mode's pandas groupby drops NaN keys and leaves them NULL.
-    # NULL-key TURN rows pass through with NULL state columns.
+    # semantics): drop NULL-key state rows up front — without this the
+    # window's partitionBy groups NULL keys together and forward-fills
+    # state onto NULL-key turns.  NULL-key TURN rows pass through with
+    # NULL state columns.
     s = state.select(by, on, *state_cols).where(F.col(by).isNotNull())
     for c in state_cols:
         t = t.withColumn(c, F.lit(None).cast(s.schema[c].dataType))
@@ -290,102 +166,68 @@ def asof_join(
 
     unioned = t.unionByName(s)
 
-    # Scan order within a key: toward-the-turn time order, state before
-    # turns at equal ts iff exact matches allowed.  Backward scans ts
-    # ascending; forward scans ts DESCENDING (forward as-of is backward
-    # as-of on reversed time), and the side/tiebreaker rules carry over
-    # unchanged because both are stated relative to scan order.
-    ts_asc = direction != "forward"
-    sort_cols: list[Column] = [
-        F.col(by).asc(), F.col(_SALT).asc(),
-        F.col(on).asc() if ts_asc else F.col(on).desc(),
-        F.col(_SIDE).asc()]
-    if tiebreaker is not None:
-        # among equal-ts state rows the greatest tiebreaker must win the
-        # forward fill -> sort it last among state rows
-        sort_cols.append(F.when(F.col(_SIDE) == state_side,
-                                F.col(tiebreaker)).asc_nulls_first())
+    # state struct carries its own `on` value so the nearest
+    # direction can compare distances without a second join
+    packed = unioned.withColumn(
+        "__state",
+        F.when(F.col(_SIDE) != turn_side,
+               F.struct(F.col(on).alias("__s_ts"),
+                        *[F.col(c).alias(c) for c in state_cols])))
 
-    if mode == "window":
-        from pyspark.sql import Window
+    def fill(asc: bool) -> Column:
+        order_cols: list[Column] = [
+            F.col(on).asc() if asc else F.col(on).desc(),
+            F.col(_SIDE).asc()]
+        if tiebreaker is not None:
+            order_cols.append(F.when(F.col(_SIDE) == state_side,
+                                     F.col(tiebreaker)).asc_nulls_first())
+        w = (Window.partitionBy(*part_cols).orderBy(*order_cols)
+             .rowsBetween(Window.unboundedPreceding, 0))
+        return F.last("__state", ignorenulls=True).over(w)
 
-        # state struct carries its own `on` value so the nearest
-        # direction can compare distances without a second join
-        packed = unioned.withColumn(
-            "__state",
-            F.when(F.col(_SIDE) != turn_side,
-                   F.struct(F.col(on).alias("__s_ts"),
-                            *[F.col(c).alias(c) for c in state_cols])))
+    # distance arithmetic needs a numeric: timestamps (incl.
+    # TIMESTAMP_NTZ, which cannot cast to double) go through
+    # unix_micros, plain numerics cast directly
+    on_tn = unioned.schema[on].dataType.typeName()
+    on_is_time = on_tn.startswith("timestamp") or on_tn == "date"
 
-        def fill(asc: bool) -> Column:
-            order_cols: list[Column] = [
-                F.col(on).asc() if asc else F.col(on).desc(),
-                F.col(_SIDE).asc()]
-            if tiebreaker is not None:
-                order_cols.append(F.when(F.col(_SIDE) == state_side,
-                                         F.col(tiebreaker)).asc_nulls_first())
-            w = (Window.partitionBy(*part_cols).orderBy(*order_cols)
-                 .rowsBetween(Window.unboundedPreceding, 0))
-            return F.last("__state", ignorenulls=True).over(w)
+    def num(c: Column) -> Column:
+        if on_is_time:
+            return F.unix_micros(c.cast("timestamp"))
+        return c.cast("double")
 
-        # distance arithmetic needs a numeric: timestamps (incl.
-        # TIMESTAMP_NTZ, which cannot cast to double) go through
-        # unix_micros, plain numerics cast directly
-        on_tn = unioned.schema[on].dataType.typeName()
-        on_is_time = on_tn.startswith("timestamp") or on_tn == "date"
-
-        def num(c: Column) -> Column:
-            if on_is_time:
-                return F.unix_micros(c.cast("timestamp"))
-            return c.cast("double")
-
-        if direction == "nearest":
-            # both fills partition identically -> ONE exchange, two
-            # sorts; pick per row by |state ts - turn ts|, exact ties
-            # to the backward row (pandas' rule: strictly-closer wins)
-            filled = (packed.withColumn("__fb", fill(True))
-                            .withColumn("__ff", fill(False)))
-
-            dist_b = num(F.col(on)) - num(F.col("__fb.__s_ts"))
-            dist_f = num(F.col("__ff.__s_ts")) - num(F.col(on))
-            choose_f = (F.col("__fb").isNull()
-                        | (F.col("__ff").isNotNull() & (dist_f < dist_b)))
-            filled = filled.withColumn(
-                "__filled",
-                F.when(choose_f, F.col("__ff")).otherwise(F.col("__fb")))
-        else:
-            filled = packed.withColumn("__filled", fill(ts_asc))
-        if tolerance is not None:
-            # staleness bound, applied AFTER the fill: |Δ| <= tolerance
-            # keeps the match (inclusive, pd.merge_asof semantics); one
-            # map-side comparison, no extra exchange.  The fill always
-            # returns the closest candidate in its direction, so a
-            # filtered match can never hide an in-tolerance one.
-            tol = float(tolerance) * (1e6 if on_is_time else 1.0)
-            dist = F.abs(num(F.col(on)) - num(F.col("__filled.__s_ts")))
-            filled = filled.withColumn(
-                "__filled",
-                F.when(F.col("__filled").isNotNull() & (dist <= tol),
-                       F.col("__filled")))
-        out = filled.where(F.col(_SIDE) == turn_side).select(
-            *turn_cols,
-            *[F.col("__filled")[c].alias(c) for c in state_cols])
-        return out
-
-    if mode != "merge":
-        raise ValueError(f"unknown asof mode: {mode!r}")
     if direction == "nearest":
-        raise ValueError(
-            "direction='nearest' requires mode='window' (it composes the "
-            "backward and forward fills over one exchange; the streaming "
-            "merge is single-direction by construction)")
+        # both fills partition identically -> ONE exchange, two
+        # sorts; pick per row by |state ts - turn ts|, exact ties
+        # to the backward row (pandas' rule: strictly-closer wins)
+        filled = (packed.withColumn("__fb", fill(True))
+                        .withColumn("__ff", fill(False)))
 
-    schema = _merge_schema(turns, state_cols, state)
-    merge = _make_merge_fn(turn_cols, state_cols, by_cols=[by, _SALT], on=on)
-
-    arranged = (
-        unioned
-        .repartition(num_partitions, *part_cols)
-        .sortWithinPartitions(*sort_cols)
-    )
-    return arranged.mapInPandas(merge, schema=schema)
+        dist_b = num(F.col(on)) - num(F.col("__fb.__s_ts"))
+        dist_f = num(F.col("__ff.__s_ts")) - num(F.col(on))
+        choose_f = (F.col("__fb").isNull()
+                    | (F.col("__ff").isNotNull() & (dist_f < dist_b)))
+        filled = filled.withColumn(
+            "__filled",
+            F.when(choose_f, F.col("__ff")).otherwise(F.col("__fb")))
+    else:
+        # forward as-of is backward as-of on reversed time: the fill
+        # scans ts DESCENDING, and the side/tiebreaker rules carry over
+        # unchanged because both are stated relative to scan order
+        filled = packed.withColumn("__filled",
+                                   fill(direction != "forward"))
+    if tolerance is not None:
+        # staleness bound, applied AFTER the fill: |Δ| <= tolerance
+        # keeps the match (inclusive, pd.merge_asof semantics); one
+        # map-side comparison, no extra exchange.  The fill always
+        # returns the closest candidate in its direction, so a
+        # filtered match can never hide an in-tolerance one.
+        tol = float(tolerance) * (1e6 if on_is_time else 1.0)
+        dist = F.abs(num(F.col(on)) - num(F.col("__filled.__s_ts")))
+        filled = filled.withColumn(
+            "__filled",
+            F.when(F.col("__filled").isNotNull() & (dist <= tol),
+                   F.col("__filled")))
+    return filled.where(F.col(_SIDE) == turn_side).select(
+        *turn_cols,
+        *[F.col("__filled")[c].alias(c) for c in state_cols])

@@ -227,12 +227,14 @@ def with_fingerprint(df: DataFrame, text: str = "text") -> DataFrame:
 # matters and is part of the contract: URLs are redacted FIRST so an
 # address embedded in a URL (http://x.com/a@b.c) is swallowed by <URL>
 # rather than split into two placeholders; IPv4 before phone so dotted
-# quads never half-match the phone run.
+# quads never half-match the phone run; `+`-prefixed numbers before
+# unprefixed NNN-NNN(N)-NNNN ones so "+1 555-123-4567" is ONE <PHONE>.
 PII_PATTERNS = (
     ("<URL>", r"https?://[^\s]+"),
     ("<EMAIL>", r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"),
     ("<IP>", r"\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b"),
     ("<PHONE>", r"\+[0-9][0-9()\-. ]{6,}[0-9]"),
+    ("<PHONE>", r"\b[0-9]{3}-[0-9]{3,4}-[0-9]{4}\b"),
 )
 
 

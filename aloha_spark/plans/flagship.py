@@ -81,7 +81,6 @@ def point_in_time_features(
     state_cols: Optional[list] = None,
     hot_keys: Optional[Iterable] = None,
     salt_buckets: int = 8,
-    num_partitions: Optional[int] = None,
     gap_seconds: float = 1800.0,
 ) -> DataFrame:
     """Stages 1-2: windowed turn features + salted as-of state attach."""
@@ -91,8 +90,7 @@ def point_in_time_features(
     x = with_session_id(x, gap_seconds=gap_seconds, order=("turn_idx",))
     return asof_join(
         x, state, on="ts", by="conv_id", state_cols=state_cols,
-        hot_keys=hot_keys, salt_buckets=salt_buckets,
-        num_partitions=num_partitions)
+        hot_keys=hot_keys, salt_buckets=salt_buckets)
 
 
 def flagship_vectors(
@@ -103,14 +101,13 @@ def flagship_vectors(
     state_cols: Optional[list] = None,
     hot_keys: Optional[Iterable] = None,
     salt_buckets: int = 8,
-    num_partitions: Optional[int] = None,
     rebalance_to: Optional[int] = None,
     keep_cols: Optional[list] = None,
 ) -> DataFrame:
     """Full flagship: point-in-time features -> hashed sparse vectors."""
     x = point_in_time_features(
         turns, state, state_cols=state_cols, hot_keys=hot_keys,
-        salt_buckets=salt_buckets, num_partitions=num_partitions)
+        salt_buckets=salt_buckets)
     pipe = FeaturePipeline(PipelineSpec.from_json(spec or FLAGSHIP_SPEC))
     if rebalance_to:
         # only for unsalted skewed inputs — see module docstring

@@ -4,29 +4,39 @@ Execution model (reference lifecycle analog, SURVEY §3.1):
 spec JSON is compiled ONCE on the driver into (a) native Column
 expressions for scalar specs (Catalyst tier) and (b) batch callables for
 bag-producing specs; executors evaluate everything over Arrow batches in
-a single ``mapInPandas`` stage — the Arrow batch is the analog of the
+a single ``mapInArrow`` stage — the Arrow batch is the analog of the
 reference's ``--parallel`` chunk (datasetCli.scala:101-124), and the
 task boundary is its thread boundary.  Only a plain picklable
 ``_ExecPlan`` (compiled python callables + metadata, no JVM handles)
 ships to executors.
 
+Every output is built by ONE evaluator, ``_batch_eval_flat``: it
+returns whole-batch (key, value, row, feature) arrays and each sink
+assembles its Arrow output from them, so no per-row Python object
+crosses the worker boundary.
+
 Outputs:
 * ``featurize``        — per-feature ``map<string,double>`` bags +
   ``missing_features`` / ``erring_features`` bookkeeping columns
-  (FeatureExtractorFunction.scala:48-66 semantics)
+  (FeatureExtractorFunction.scala:48-66 semantics), built directly as
+  a ``ListArray`` of ``MapArray`` slots
 * ``to_sparse_vectors`` — hashed (indices, values) arrays: murmur-hashed
   keys masked to numBits, sorted, deduped last-wins
   (LibSvmRowCreator.scala:21-48) — the whole batch hashes in ONE
-  vectorized numpy call
+  vectorized numpy call; all-scalar plans stay pure Catalyst
 * ``to_vw_lines`` / ``to_libsvm_lines`` — training-line string column
 * multi-sink fan-out = cache the featurized frame, call several sinks
   (datasetCli.scala:84-124 analog)
+
+The per-row dict evaluator these outputs are checked against lives in
+``tests/featurize_oracle.py``, beside the golden-tested row builders in
+``aloha_spark.sinks``.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Callable, Iterator, Optional
+from typing import Callable, Optional
 
 import numpy as np
 import pandas as pd
@@ -34,9 +44,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions.formatting import decimal_format, java_double_to_string
 from ..functions.hashing import STRING_SEED, string_hash_array
-from ..functions.scalars import UNK_BAG
-from ..sinks.libsvm import labeled_libsvm_line
-from ..sinks.vw import labeled_vw_line, unlabeled_vw_line
 from .spec import (
     PipelineSpec,
     compile_batch_fn,
@@ -109,104 +116,15 @@ class _ExecPlan:
     num_missing_threshold: Optional[int]
 
 
-def _batch_eval(plan: _ExecPlan, pdf: pd.DataFrame):
-    """Evaluate all features for one Arrow batch.
-
-    Returns (order, prefixed_bags, missing, erring)."""
-    n = len(pdf)
-    bags: dict[str, list] = {}
-    missing = [[] for _ in range(n)]
-    erring = [[] for _ in range(n)]
-
-    for fp in plan.features:
-        name = fp.name
-        if fp.kind in ("column", "string_column"):
-            colv = pdf[_PREFIX + name]
-            vals = colv.to_numpy()
-            isna = colv.isna().to_numpy()
-            as_ind = fp.kind == "string_column"
-            row_bags = []
-            for i in range(n):
-                if isna[i]:
-                    missing[i].append(name)
-                    row_bags.append(dict(UNK_BAG))
-                elif as_ind:
-                    row_bags.append({f"={vals[i]}": 1.0})
-                else:
-                    row_bags.append({"": float(vals[i])})
-            bags[name] = row_bags
-            continue
-
-        if fp.kind == "vbatch":
-            src = _src(fp, fp.variables[0])
-            series = pdf[src]
-            isna = series.isna().to_numpy()
-            outs = fp.fn(series)
-            row_bags = []
-            for i in range(n):
-                b = outs[i]
-                if b is None or isna[i]:
-                    missing[i].append(name)
-                row_bags.append(dict(UNK_BAG) if b is None else b)
-            bags[name] = row_bags
-            continue
-
-        var_lists = {}
-        for v in fp.variables:
-            src = _src(fp, v)
-            if src not in pdf.columns:
-                raise KeyError(f"feature '{name}' needs column '{src}'")
-            var_lists[v] = pdf[src].tolist()
-        var_items = list(var_lists.items())
-        row_bags = []
-        for i in range(n):
-            kwargs = {}
-            # a var that is NULL with no spec default marks the feature
-            # missing even when the function still yields a default bag
-            # (GenAggFunc.accessorOutputMissing, func/package.scala:61-92)
-            var_missing = False
-            for v, vals_ in var_items:
-                val = vals_[i]
-                if val is None or (isinstance(val, float) and val != val):
-                    if v in fp.defaults:
-                        val = fp.defaults[v]
-                    else:
-                        val = None
-                        var_missing = True
-                kwargs[v] = val
-            try:
-                out = fp.fn(**kwargs)
-                bag = _lift_to_bag(out, name)
-                errored = False
-            except Exception:
-                erring[i].append(name)
-                bag = None
-                errored = True
-            if (bag is None and not errored) or (var_missing and not errored):
-                missing[i].append(name)
-            if bag is None:
-                bag = dict(UNK_BAG)
-            row_bags.append(bag)
-        bags[name] = row_bags
-
-    order = [fp.name for fp in plan.features]
-    # feature-name key prefixing (RegressionFeatures.scala:83)
-    prefixed = [
-        [{name + k: v for k, v in b.items()} for b in bags[name]]
-        for name in order
-    ]
-    return order, prefixed, missing, erring
-
-
 def _batch_eval_flat(plan: _ExecPlan, pdf: pd.DataFrame, hash_fn, rb=None):
-    """Dict-free evaluator for the flat sinks: returns
-    (hashed_idx, vals, row_ids, feat_ids, missing) with feature-name
-    prefixing applied during flattening and ``hash_fn`` applied per
-    feature chunk — murmur stringHash + numBits mask for the hashed
-    sinks, or an identity that returns the key strings themselves for
-    the VW line sink.  Entries are feature-major; downstream lexsorts
-    re-group by row while their stability preserves emission (=
-    insertion) order.
+    """The one feature evaluator: returns
+    (hashed_idx, vals, row_ids, feat_ids, missing, erring) with
+    feature-name prefixing applied during flattening and ``hash_fn``
+    applied per feature chunk — murmur stringHash + numBits mask for the
+    hashed sinks, or an identity that returns the key strings themselves
+    for ``featurize`` and the VW line sink.  Entries are feature-major;
+    downstream sorts re-group by row while their stability preserves
+    emission (= insertion) order.
 
     Features with a flat kernel (bag / 2-grams) never materialize
     per-row dicts and hash only their per-batch unique-key table; the
@@ -223,6 +141,7 @@ def _batch_eval_flat(plan: _ExecPlan, pdf: pd.DataFrame, hash_fn, rb=None):
     # the end (rows with no missing share ONE immutable empty tuple —
     # n per-row list allocations per batch were ~5% of kernel time)
     miss_marks: list = []
+    err_marks: list = []     # generic tier only: the one that can raise
     arange = np.arange(n, dtype=np.int64)
     cache = TokenCache(pdf, rb=rb)
 
@@ -323,7 +242,7 @@ def _batch_eval_flat(plan: _ExecPlan, pdf: pd.DataFrame, hash_fn, rb=None):
         var_items = [(v, pdf[_src(fp, v)].tolist())
                      for v in fp.variables]
         keys, vals_, rids = [], [], []
-        f_miss = []
+        f_miss, f_err = [], []
         for i in range(n):
             kwargs = {}
             var_missing = False
@@ -342,6 +261,7 @@ def _batch_eval_flat(plan: _ExecPlan, pdf: pd.DataFrame, hash_fn, rb=None):
             except Exception:
                 bag = None
                 errored = True
+                f_err.append(i)
             if (bag is None and not errored) or (var_missing and not errored):
                 f_miss.append(i)
             if bag is None:
@@ -356,16 +276,11 @@ def _batch_eval_flat(plan: _ExecPlan, pdf: pd.DataFrame, hash_fn, rb=None):
         emit(keys, vals_, rids)
         if f_miss:
             miss_marks.append((np.asarray(f_miss, dtype=np.int64), name))
+        if f_err:
+            err_marks.append((np.asarray(f_err, dtype=np.int64), name))
 
-    missing: list = [_EMPTY_MISS] * n
-    for rows_arr, mname in miss_marks:
-        for i in rows_arr.tolist():
-            cur = missing[i]
-            if cur is _EMPTY_MISS:
-                missing[i] = [mname]
-            else:
-                cur.append(mname)
-
+    missing = _marks_to_rows(miss_marks, n)
+    erring = _marks_to_rows(err_marks, n)
     if row_id_chunks:
         idx = np.concatenate(idx_chunks)
         vals = np.concatenate(val_chunks)
@@ -376,15 +291,29 @@ def _batch_eval_flat(plan: _ExecPlan, pdf: pd.DataFrame, hash_fn, rb=None):
         vals = np.empty(0, dtype=np.float64)
         row_ids = np.empty(0, dtype=np.int64)
         feat_ids = np.empty(0, dtype=np.int64)
-    return idx, vals, row_ids, feat_ids, missing
+    return idx, vals, row_ids, feat_ids, missing, erring
 
 
 _IDENTITY_KEYS = lambda keys: np.asarray(keys, dtype=object)  # noqa: E731
 
-#: shared immutable "no missing features" row — consumers only len() it,
-#: iterate it, or hand it to pa.array(list_(string())), all of which
-#: accept a tuple; rows that DO have missing marks get a private list
+#: shared immutable "no marks" row — consumers only len() it, iterate
+#: it, or hand it to pa.array(list_(string())), all of which accept a
+#: tuple; rows that DO have marks get a private list
 _EMPTY_MISS: tuple = ()
+
+
+def _marks_to_rows(marks: list, n: int) -> list:
+    """(rows, feature-name) chunks in feature-declaration order -> one
+    list of feature names per row."""
+    out: list = [_EMPTY_MISS] * n
+    for rows_, name in marks:
+        for i in rows_.tolist():
+            cur = out[i]
+            if cur is _EMPTY_MISS:
+                out[i] = [name]
+            else:
+                cur.append(name)
+    return out
 
 
 def _fmt_values(vals: np.ndarray, fmt_fn, int_suffix: str = "",
@@ -430,7 +359,7 @@ def _join_rows(tokens: np.ndarray, rows: np.ndarray, n: int) -> list:
 
 def _ns_layout(plan: _ExecPlan):
     """Per-feature namespace MEMBERSHIPS (a feature may be listed in
-    several namespaces — the dict tier emits it once per namespace),
+    several namespaces — the VW row builder emits it once per namespace),
     flattened as (memb_ns, memb_pos) with per-feature offsets, plus the
     header strings.  Iteration order mirrors _append_namespace: default
     namespace first, then declared order."""
@@ -460,7 +389,7 @@ def _assemble_vw_bodies(plan: _ExecPlan, pdf: pd.DataFrame, rb=None):
     numpy arrays; the only per-row work is the final string join.
     Returns (body_strings list aligned with rows, missing)."""
     n = len(pdf)
-    keys, vals, rows, fids, missing = \
+    keys, vals, rows, fids, missing, _erring = \
         _batch_eval_flat(plan, pdf, _IDENTITY_KEYS, rb=rb)
     if len(rows) == 0:
         return [""] * n, missing
@@ -479,7 +408,7 @@ def _assemble_vw_bodies(plan: _ExecPlan, pdf: pd.DataFrame, rb=None):
     memb_ns, memb_pos, moff, mcounts, headers = _ns_layout(plan)
     ecounts = mcounts[fids]
     if (ecounts != 1).any():
-        # a feature in k namespaces emits each entry k times (dict-tier
+        # a feature in k namespaces emits each entry k times (row-builder
         # parity); expand via segmented arange over memberships
         rep = np.repeat(np.arange(len(fids), dtype=np.int64), ecounts)
         seg = np.arange(len(rep), dtype=np.int64) \
@@ -542,10 +471,17 @@ def _session_tz(df: DataFrame) -> str:
     return df.sparkSession.conf.get("spark.sql.session.timeZone") or "UTC"
 
 
+def _out_schema(pre: DataFrame, keep: list, tail: str) -> str:
+    """DDL schema of a stage output: the keep-columns' types, then
+    ``tail``."""
+    return ", ".join([f"{c} {pre.schema[c].dataType.simpleString()}"
+                      for c in keep] + [tail])
+
+
 def _fmt17(v) -> str:
     if isinstance(v, (int, np.integer)):
         return str(int(v))
-    # negative zero must not take the int fast path: the dict tier's
+    # negative zero must not take the int fast path: the row builders'
     # decimal_format(-0.0, 17) renders "-0", matching Double.toString
     if isinstance(v, float) and v == int(v) and abs(v) < 1e15 \
             and not (v == 0.0 and np.signbit(v)):
@@ -559,8 +495,8 @@ def _assemble_libsvm_lines(plan: _ExecPlan, pdf: pd.DataFrame, hash_fn,
     last-wins dedupe (one pass), java Double.toString rendering with an
     integer fast path; per-row work is the final join only."""
     n = len(pdf)
-    idx, vals, rows, _fids, missing = _batch_eval_flat(plan, pdf, hash_fn,
-                                                       rb=rb)
+    idx, vals, rows, _fids, missing, _erring = \
+        _batch_eval_flat(plan, pdf, hash_fn, rb=rb)
     lines = [""] * n
     if len(rows):
         # single packed int64 key beats a 2-key lexsort ~8x; idx is
@@ -695,30 +631,60 @@ class FeaturePipeline:
     def featurize(self, df: DataFrame,
                   keep_cols: Optional[list] = None) -> DataFrame:
         """Adds ``features`` (array of per-feature bags in declaration
-        order), ``missing_features``, ``erring_features``."""
+        order — one ``map<string,double>`` per feature, empty maps
+        included), ``missing_features``, ``erring_features``.
+
+        One ``mapInArrow`` stage over the flat evaluator with identity
+        keys: a stable sort groups the entries by (row, feature) slot
+        and the output is built directly as a ``ListArray`` of
+        ``MapArray`` slots; keep-columns pass through zero-copy."""
+        import pyarrow as pa
+
         keep = keep_cols if keep_cols is not None else list(df.columns)
         pre = self._with_precomputed(df)
         plan = self.plan
-        keep_t = ", ".join(f"{c} {pre.schema[c].dataType.simpleString()}"
-                           for c in keep)
-        schema = (keep_t + ", " if keep_t else "") + \
-            "features array<map<string,double>>, " \
-            "missing_features array<string>, erring_features array<string>"
+        n_feats = len(plan.features)
+        schema = _out_schema(
+            pre, keep, "features array<map<string,double>>, "
+            "missing_features array<string>, erring_features array<string>")
+        tz = _session_tz(pre)
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if pdf.empty:
+        def run(batches):
+            for rb in batches:
+                n = rb.num_rows
+                if n == 0:
                     continue
-                order, bags, missing, erring = _batch_eval(plan, pdf)
-                rows = [[bags[fi][i] for fi in range(len(order))]
-                        for i in range(len(pdf))]
-                out = {c: pdf[c] for c in keep}
-                out["features"] = rows
-                out["missing_features"] = missing
-                out["erring_features"] = erring
-                yield pd.DataFrame(out)
+                pdf = _rb_to_pandas(rb, tz)
+                keys, vals, rows, fids, missing, erring = \
+                    _batch_eval_flat(plan, pdf, _IDENTITY_KEYS, rb=rb)
+                slot = rows * n_feats + fids
+                order = np.argsort(slot, kind="stable")
+                slot, keys, vals = slot[order], keys[order], vals[order]
+                # a bag is a dict: a key repeated within one slot keeps
+                # its last value
+                dup = pd.DataFrame({"s": slot, "k": keys}) \
+                    .duplicated(keep="last").to_numpy()
+                if dup.any():
+                    slot, keys, vals = slot[~dup], keys[~dup], vals[~dup]
+                offsets = np.concatenate(
+                    ([0], np.cumsum(np.bincount(slot, minlength=n * n_feats))))
+                # (a batch without entries concatenates to an empty
+                # numeric array, hence the astype)
+                maps = pa.MapArray.from_arrays(
+                    pa.array(offsets, pa.int32()),
+                    pa.array(keys.astype(object, copy=False), pa.string()),
+                    pa.array(vals, pa.float64()))
+                feats = pa.ListArray.from_arrays(
+                    pa.array(np.arange(n + 1) * n_feats, pa.int32()), maps)
+                names = rb.schema.names
+                arrays = [rb.column(names.index(c)) for c in keep]
+                arrays += [feats, pa.array(missing, pa.list_(pa.string())),
+                           pa.array(erring, pa.list_(pa.string()))]
+                yield pa.RecordBatch.from_arrays(
+                    arrays, keep + ["features", "missing_features",
+                                    "erring_features"])
 
-        return pre.mapInPandas(run, schema=schema)
+        return pre.mapInArrow(run, schema=schema)
 
     def _lines_transform(self, df: DataFrame, keep_cols: list,
                          line_fn: Callable, out_col: str) -> DataFrame:
@@ -729,9 +695,7 @@ class FeaturePipeline:
 
         pre = self._with_precomputed(df)
         plan = self.plan
-        keep_t = ", ".join(f"{c} {pre.schema[c].dataType.simpleString()}"
-                           for c in keep_cols)
-        schema = (keep_t + ", " if keep_t else "") + f"{out_col} string"
+        schema = _out_schema(pre, keep_cols, f"{out_col} string")
         tz = _session_tz(pre)
 
         def run(batches):
@@ -750,18 +714,16 @@ class FeaturePipeline:
 
     def to_vw_lines(self, df: DataFrame, keep_cols: Optional[list] = None,
                     labeled: Optional[bool] = None,
-                    out_col: str = "vw_line",
-                    impl: str = "flat") -> DataFrame:
-        """VW training lines.  ``impl='flat'`` (default) assembles lines
-        from the dict-free flat arrays — vectorized epsilon filtering,
-        value formatting, and namespace grouping; ``impl='dict'`` keeps
-        the per-row kernel path as the semantics oracle (A/B-gated in
-        tests/test_flat_lines.py)."""
+                    out_col: str = "vw_line") -> DataFrame:
+        """VW training lines, assembled from the flat arrays —
+        vectorized epsilon filtering, value formatting, and namespace
+        grouping (byte-identical to the per-row oracle in
+        tests/featurize_oracle.py, gated in tests/test_flat_lines.py)."""
         if labeled is None:
             labeled = self.spec.label is not None
         keep = keep_cols if keep_cols is not None else []
 
-        def mk_flat(plan: _ExecPlan, pdf: pd.DataFrame, rb=None) -> list:
+        def mk(plan: _ExecPlan, pdf: pd.DataFrame, rb=None) -> list:
             bodies, missing = _assemble_vw_bodies(plan, pdf, rb=rb)
             thr = plan.num_missing_threshold
             labels = _eval_dv(plan, pdf, "label") if labeled else None
@@ -788,36 +750,7 @@ class FeaturePipeline:
                 lines.append(head + t + (iv if iv else "|"))
             return lines
 
-        def mk_dict(plan: _ExecPlan, pdf: pd.DataFrame, rb=None) -> list:
-            order, bags, missing, erring = _batch_eval(plan, pdf)
-            labels = _eval_dv(plan, pdf, "label") if labeled else None
-            imps = _eval_dv(plan, pdf, "importance") if labeled else None
-            tags = _eval_dv(plan, pdf, "tag") if labeled else None
-            thr = plan.num_missing_threshold
-            lines = []
-            for i in range(len(pdf)):
-                row = [bags[fi][i] for fi in range(len(order))]
-                if thr is not None and len(missing[i]) > thr:
-                    lines.append(None)  # abort row (RegressionFeatures:99-110)
-                    continue
-                if labeled:
-                    lab = labels[i] if labels else None
-                    # an importance SPEC that yields None for a row must
-                    # pass None through (labeled_vw_line then emits the
-                    # unlabeled form); only a missing spec defaults to 1
-                    imp = imps[i] if imps is not None else 1.0
-                    tag = tags[i] if tags is not None else (
-                        decimal_format(lab, 17) if lab is not None else None)
-                    lines.append(labeled_vw_line(
-                        row, lab, imp, tag,
-                        plan.default_ns, plan.namespaces))
-                else:
-                    lines.append(unlabeled_vw_line(row, plan.default_ns,
-                                                   plan.namespaces))
-            return lines
-
-        return self._lines_transform(
-            df, keep, mk_flat if impl == "flat" else mk_dict, out_col)
+        return self._lines_transform(df, keep, mk, out_col)
 
     def to_cb_lines(self, df: DataFrame, action_spec: str, cost_spec: str,
                     prob_spec: str, keep_cols: Optional[list] = None,
@@ -873,8 +806,7 @@ class FeaturePipeline:
 
     def to_libsvm_lines(self, df: DataFrame, keep_cols: Optional[list] = None,
                         out_col: str = "libsvm_line",
-                        seed: int = STRING_SEED,
-                        impl: str = "flat") -> DataFrame:
+                        seed: int = STRING_SEED) -> DataFrame:
         keep = keep_cols if keep_cols is not None else []
         labeled = self.spec.label is not None
         num_bits = self.spec.num_bits
@@ -883,34 +815,18 @@ class FeaturePipeline:
         def hash_fn(keys):
             return string_hash_array(keys, seed) & mask
 
-        def _label_strs(plan, pdf):
-            labels = _eval_dv(plan, pdf, "label") if labeled else None
-            if labels is None:
-                return None
-            return [None if v is None else decimal_format(float(v), 17)
-                    for v in labels]
-
-        def mk_flat(plan: _ExecPlan, pdf: pd.DataFrame, rb=None) -> list:
+        def mk(plan: _ExecPlan, pdf: pd.DataFrame, rb=None) -> list:
             bodies, _missing = _assemble_libsvm_lines(plan, pdf, hash_fn,
                                                       rb=rb)
-            labs = _label_strs(plan, pdf)
-            if labs is None:
+            labels = _eval_dv(plan, pdf, "label") if labeled else None
+            if labels is None:
                 return bodies
+            labs = [None if v is None else decimal_format(float(v), 17)
+                    for v in labels]
             return [b if l is None else (f"{l} {b}" if b else l)
                     for l, b in zip(labs, bodies)]
 
-        def mk_dict(plan: _ExecPlan, pdf: pd.DataFrame, rb=None) -> list:
-            order, bags, missing, erring = _batch_eval(plan, pdf)
-            labs = _label_strs(plan, pdf)
-            lines = []
-            for i in range(len(pdf)):
-                row = [bags[fi][i] for fi in range(len(order))]
-                lab = labs[i] if labs is not None else None
-                lines.append(labeled_libsvm_line(row, lab, plan.num_bits, seed))
-            return lines
-
-        return self._lines_transform(
-            df, keep, mk_flat if impl == "flat" else mk_dict, out_col)
+        return self._lines_transform(df, keep, mk, out_col)
 
     def to_multilabel_blocks(self, df: DataFrame, n_labels: int,
                              positive_col: str,
@@ -953,10 +869,7 @@ class FeaturePipeline:
         keep = keep_cols if keep_cols is not None else []
         pre = self._with_precomputed(df)
         plan = self.plan
-        keep_t = ", ".join(f"{c} {pre.schema[c].dataType.simpleString()}"
-                           for c in keep)
-        schema = (keep_t + ", " if keep_t else "") + \
-            f"{out_col} array<string>"
+        schema = _out_schema(pre, keep, f"{out_col} array<string>")
 
         import pyarrow as pa
 
@@ -995,41 +908,27 @@ class FeaturePipeline:
 
     def to_sparse_vectors(self, df: DataFrame,
                           keep_cols: Optional[list] = None,
-                          seed: int = STRING_SEED,
-                          impl: str = "auto") -> DataFrame:
+                          seed: int = STRING_SEED) -> DataFrame:
         """Hashed sparse vectors: the whole Arrow batch's keys hash in a
         single vectorized murmur call; per row: mask, sort, dedupe
         (last wins).
 
-        ``impl``: ``'auto'`` (default) picks the pure-Catalyst plan when
-        every feature is a scalar Column-tier spec (static key space —
-        the murmur hashes are driver-side compile-time literals, so the
-        whole sink stays inside whole-stage codegen with zero Python
-        workers); otherwise the Arrow path.  ``'jvm'`` forces the
-        Catalyst plan (raises if a feature needs a Python tier),
-        ``'arrow'`` forces the Arrow path (the A/B semantics oracle).
+        When every feature is a scalar Column-tier or binning spec
+        (static key space — the murmur hashes are driver-side
+        compile-time literals) the sink is a pure-Catalyst plan that
+        stays inside whole-stage codegen with zero Python workers;
+        otherwise it is the Arrow kernel of :meth:`make_arrow_kernel`.
 
         Arrow path (``mapInArrow``): keep-columns pass through
         zero-copy, and the ragged (indices, values) output is built
         directly as ``ListArray.from_arrays(offsets, flat)`` — no
         ``np.split`` into per-row objects, no pandas->Arrow reassembly
         (measured ~1.2s/30k-row batch in the old path, ~0 now)."""
-        import pyarrow as pa
-
         keep = keep_cols if keep_cols is not None else list(df.columns)
         pre = self._with_precomputed(df)
-        plan = self.plan
-        if impl != "arrow":
-            jvm_ok = all(fp.kind == "column" or fp.name in self._binning
-                         for fp in plan.features)
-            if impl == "jvm" and not jvm_ok:
-                bad = [fp.name for fp in plan.features
-                       if fp.kind != "column" and fp.name not in self._binning]
-                raise ValueError(
-                    f"impl='jvm' needs every feature on the Column or "
-                    f"binning tier with a numeric source; not eligible: {bad}")
-            if jvm_ok:
-                return self._to_sparse_vectors_jvm(pre, keep, seed)
+        if all(fp.kind == "column" or fp.name in self._binning
+               for fp in self.plan.features):
+            return self._to_sparse_vectors_jvm(pre, keep, seed)
         run, schema = self.make_arrow_kernel(pre, keep, seed)
         return pre.mapInArrow(run, schema=schema)
 
@@ -1049,11 +948,8 @@ class FeaturePipeline:
 
         plan = self.plan
         mask = np.int32((1 << plan.num_bits) - 1)
-        keep_t = ", ".join(f"{c} {pre.schema[c].dataType.simpleString()}"
-                           for c in keep)
-        schema = (keep_t + ", " if keep_t else "") + \
-            "indices array<int>, values array<double>, " \
-            "missing_features array<string>"
+        schema = _out_schema(pre, keep, "indices array<int>, values "
+                             "array<double>, missing_features array<string>")
         # columns the evaluator reads (feature sources + precomputed)
         eval_cols = set()
         for fp in plan.features:
@@ -1076,7 +972,7 @@ class FeaturePipeline:
                 pdf = _rb_to_pandas(
                     rb, tz, columns=[c for c in rb.schema.names
                                      if c in eval_cols])
-                idx, vals, row_ids, _fids, missing = \
+                idx, vals, row_ids, _fids, missing, _erring = \
                     _batch_eval_flat(plan, pdf, hash_fn, rb=rb)
                 # numMissingThreshold abort (RegressionFeatures.scala:
                 # 99-110, parity with to_vw_lines): too-missing rows

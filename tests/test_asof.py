@@ -9,10 +9,16 @@ values), skew salting equivalence, and stable output ordering.
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from aloha_spark.data.transcripts import make_state, make_transcripts
 from aloha_spark.operators.asof import asof_join
 from aloha_spark.operators.windows import stable_output_order
+
+#: the as-of join has one plan, the Catalyst window fill; the ``mode``
+#: parametrizations below only name it in the test ids
+WINDOW = ["window"]
 
 
 def _oracle(turns_pd, state_pd, state_cols, allow_exact=True,
@@ -51,12 +57,12 @@ def small(spark):
 
 
 class TestAsofJoin:
-    @pytest.mark.parametrize("mode", ["window", "merge"])
+    @pytest.mark.parametrize("mode", WINDOW)
     def test_null_keys_never_match(self, spark, mode):
         """NULL join keys follow SQL equi-join / pd.merge_asof
-        semantics in BOTH modes: NULL-key state rows match nothing and
-        NULL-key turns keep NULL state (the window mode's partitionBy
-        would otherwise group NULLs together and forward-fill)."""
+        semantics: NULL-key state rows match nothing and NULL-key turns
+        keep NULL state (the window's partitionBy would otherwise group
+        NULLs together and forward-fill)."""
         turns = spark.createDataFrame(
             [("a", 0, 100.0), (None, 0, 100.0), (None, 1, 200.0)],
             "conv_id string, turn_idx long, ts double")
@@ -64,7 +70,7 @@ class TestAsofJoin:
             [("a", 50.0, 1.5), (None, 50.0, 9.9)],
             "conv_id string, ts double, state_score double")
         got = _collect_sorted(
-            asof_join(turns, state, state_cols=["state_score"], mode=mode))
+            asof_join(turns, state, state_cols=["state_score"]))
         by_key = {(r["conv_id"] if pd.notna(r["conv_id"]) else None,
                    r["turn_idx"]):
                   r["state_score"] for _, r in got.iterrows()}
@@ -72,18 +78,16 @@ class TestAsofJoin:
         assert pd.isna(by_key[(None, 0)])
         assert pd.isna(by_key[(None, 1)])
 
-    @pytest.mark.parametrize("mode", ["window", "merge"])
+    @pytest.mark.parametrize("mode", WINDOW)
     def test_matches_pandas_merge_asof(self, spark, small, mode):
         turns, state, tp, sp = small
         got = _collect_sorted(
-            asof_join(turns, state, state_cols=["state_score", "state_tag"],
-                      mode=mode))
+            asof_join(turns, state, state_cols=["state_score", "state_tag"]))
         exp = _oracle(tp, sp, ["state_score", "state_tag"])
         _assert_frames_match(got, exp, ["state_score", "state_tag"])
 
     @pytest.mark.parametrize("mode,direction", [
-        ("window", "forward"), ("merge", "forward"),
-        ("window", "nearest")])
+        ("window", "forward"), ("window", "nearest")])
     def test_directions_match_pandas(self, spark, small, mode, direction):
         turns, state, tp, sp = small
         # the fixture has duplicate state rows at the same (conv_id,
@@ -97,12 +101,12 @@ class TestAsofJoin:
         for allow in (True, False):
             got = _collect_sorted(asof_join(
                 turns, state2, state_cols=["state_score", "state_tag"],
-                mode=mode, direction=direction, allow_exact=allow))
+                direction=direction, allow_exact=allow))
             exp = _oracle(tp, sp2, ["state_score", "state_tag"],
                           allow_exact=allow, direction=direction)
             _assert_frames_match(got, exp, ["state_score", "state_tag"])
 
-    @pytest.mark.parametrize("mode", ["window", "merge"])
+    @pytest.mark.parametrize("mode", WINDOW)
     def test_forward_tiebreaker_greatest_wins(self, spark, mode):
         turns = spark.createDataFrame(
             [("a", 0, 100.0)], "conv_id string, turn_idx int, ts double")
@@ -110,8 +114,7 @@ class TestAsofJoin:
             [("a", 150.0, 1.0, "lo"), ("a", 150.0, 9.0, "hi")],
             "conv_id string, ts double, pri double, tag string")
         got = asof_join(turns, state, state_cols=["pri", "tag"],
-                        mode=mode, direction="forward",
-                        tiebreaker="pri").collect()
+                        direction="forward", tiebreaker="pri").collect()
         assert (got[0].pri, got[0].tag) == (9.0, "hi")
 
     def test_nearest_tie_goes_backward(self, spark):
@@ -131,12 +134,6 @@ class TestAsofJoin:
                           "tag": ["B", "F"]}),
             on="ts", by="conv_id", direction="nearest")
         assert exp["tag"].iloc[0] == "B"
-
-    def test_nearest_merge_mode_raises(self, spark, small):
-        turns, state, _, _ = small
-        with pytest.raises(ValueError, match="nearest"):
-            asof_join(turns, state, state_cols=["state_score"],
-                      mode="merge", direction="nearest")
 
     def test_forward_salted_equals_unsalted(self, spark, small):
         turns, state, tp, sp = small
@@ -162,13 +159,12 @@ class TestAsofJoin:
         sp2 = state2.toPandas()
 
         for allow in (True, False):
-            for mode in ("window", "merge"):
-                got = _collect_sorted(asof_join(
-                    turns, state2, state_cols=["state_score", "state_tag"],
-                    allow_exact=allow, mode=mode))
-                exp = _oracle(tp, sp2, ["state_score", "state_tag"],
-                              allow_exact=allow)
-                _assert_frames_match(got, exp, ["state_score", "state_tag"])
+            got = _collect_sorted(asof_join(
+                turns, state2, state_cols=["state_score", "state_tag"],
+                allow_exact=allow))
+            exp = _oracle(tp, sp2, ["state_score", "state_tag"],
+                          allow_exact=allow)
+            _assert_frames_match(got, exp, ["state_score", "state_tag"])
 
     def test_zero_leakage(self, spark, small):
         turns, state, _, _ = small
@@ -200,12 +196,10 @@ class TestAsofJoin:
             "conv_id string, ts_s string, state_score double, state_tag string"
         ).selectExpr("conv_id", "cast(ts_s as timestamp) as ts",
                      "state_score", "state_tag")
-        for mode in ("window", "merge"):
-            got = _collect_sorted(asof_join(
-                turns, state, state_cols=["state_score", "state_tag"],
-                mode=mode))
-            assert got["state_tag"].tolist() == ["tagA", "tagA", None], mode
-            assert got["state_score"].tolist() == [1.0, 1.0, 2.0], mode
+        got = _collect_sorted(asof_join(
+            turns, state, state_cols=["state_score", "state_tag"]))
+        assert got["state_tag"].tolist() == ["tagA", "tagA", None]
+        assert got["state_score"].tolist() == [1.0, 1.0, 2.0]
 
     def test_no_state_for_conv(self, spark):
         turns = spark.createDataFrame(
@@ -227,29 +221,15 @@ class TestAsofJoin:
         state = make_state(spark, turns).cache()
         cols = ["state_score", "state_tag"]
         plain = _collect_sorted(asof_join(turns, state, state_cols=cols))
-        for mode in ("window", "merge"):
-            salted = _collect_sorted(asof_join(
-                turns, state, state_cols=cols, hot_keys=["mega"],
-                salt_buckets=4, mode=mode))
-            _assert_frames_match(salted, plain, cols)
+        salted = _collect_sorted(asof_join(
+            turns, state, state_cols=cols, hot_keys=["mega"],
+            salt_buckets=4))
+        _assert_frames_match(salted, plain, cols)
         # auto-detection path
         detected = _collect_sorted(asof_join(
             turns, state, state_cols=cols, hot_key_threshold=100,
             salt_buckets=4))
         _assert_frames_match(detected, plain, cols)
-
-    def test_tiny_batches_carry(self, spark, small):
-        """Force 1-row Arrow batches so every carry path executes."""
-        turns, state, tp, sp = small
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-        try:
-            got = _collect_sorted(asof_join(
-                turns, state, state_cols=["state_score", "state_tag"],
-                num_partitions=2, mode="merge"))
-            exp = _oracle(tp, sp, ["state_score", "state_tag"])
-            _assert_frames_match(got, exp, ["state_score", "state_tag"])
-        finally:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
 
     def test_stable_output_order(self, spark, small):
         turns, state, _, _ = small
@@ -261,107 +241,95 @@ class TestAsofJoin:
 
 
 # ---------------------------------------------------------------------------
-# hypothesis fuzz: the streaming merge kernel vs a brute-force oracle
+# hypothesis fuzz: asof_join vs a brute-force oracle, many cases per job
+
+_STATE_COLS = ["state_score", "state_tag"]
+_CONFIGS = [("backward", True), ("backward", False),
+            ("forward", True), ("forward", False)]
+
 
 class TestMergeKernelFuzz:
-    """Property-fuzz `_make_merge_fn` — the partition-local streaming
-    merge behind mode="merge" — against a brute-force backward-as-of
-    oracle.  The kernel's one hard invariant is the O(1) carry between
-    Arrow batches (only the last key's latest state may span a batch
-    boundary), so the fuzz slices the sorted union frame at ARBITRARY
-    batch boundaries: every cut point is a chance for the carry splice
-    (operators/asof.py:104-147) to leak, drop, or mis-key state.
+    """Property-fuzz ``asof_join`` against a brute-force as-of oracle
+    over backward / forward directions, exact and strict.
 
-    Pure pandas (no Spark jobs), so 300 examples run in seconds; the
-    Spark-side integration of the same kernel is covered by
-    test_tiny_batches_carry / test_matches_pandas_merge_asof above.
+    Hypothesis draws 300 independent cases first; they are then packed
+    into ONE pair of DataFrames — the case id is folded into the ``by``
+    key (NULL keys stay NULL), so cases cannot see each other's state —
+    and the four (direction, allow_exact) groups run as one unioned
+    plan: 300 cases cost one collect, not 300 Spark jobs.  A failure
+    reports the offending cases themselves.
     """
 
-    @staticmethod
-    def _run_kernel(turns, states, allow_exact, cuts):
-        from aloha_spark.operators.asof import _SALT, _SIDE, _make_merge_fn
-
-        turn_cols = ["conv_id", "turn_idx", "ts"]
-        state_cols = ["state_score", "state_tag"]
-        state_side, turn_side = (0, 1) if allow_exact else (2, 1)
-        rows = []
-        for i, (k, ts) in enumerate(turns):
-            rows.append({"conv_id": k, "turn_idx": i, "ts": ts,
-                         "state_score": None, "state_tag": None,
-                         _SIDE: turn_side, _SALT: 0})
-        for k, ts, score, tag in states:
-            rows.append({"conv_id": k, "turn_idx": None, "ts": ts,
-                         "state_score": score, "state_tag": tag,
-                         _SIDE: state_side, _SALT: 0})
-        pdf = pd.DataFrame(rows, columns=turn_cols + state_cols
-                           + [_SIDE, _SALT])
-        if pdf.empty:
-            return pd.DataFrame(columns=turn_cols + state_cols)
-        # the production sort: (key, salt, ts, side), stable
-        pdf = pdf.sort_values(["conv_id", _SALT, "ts", _SIDE],
-                              na_position="first",
-                              kind="mergesort").reset_index(drop=True)
-        bounds = sorted({c for c in cuts if 0 < c < len(pdf)})
-        edges = [0] + bounds + [len(pdf)]
-        pieces = [pdf.iloc[a:b] for a, b in zip(edges, edges[1:])]
-        merge = _make_merge_fn(turn_cols, state_cols,
-                               by_cols=["conv_id", _SALT], on="ts")
-        outs = list(merge(iter([p.reset_index(drop=True)
-                                for p in pieces if len(p)])))
-        if not outs:
-            return pd.DataFrame(columns=turn_cols + state_cols)
-        return pd.concat(outs, ignore_index=True)
-
-    @staticmethod
-    def _brute(turns, states, allow_exact):
-        want = {}
-        for i, (k, ts) in enumerate(turns):
-            best = None
-            for k2, ts2, score, tag in states:
-                if k is None or k2 != k:
-                    continue
-                if ts2 < ts or (allow_exact and ts2 == ts):
-                    if best is None or ts2 > best[0]:
-                        best = (ts2, score, tag)
-            want[i] = (None, None) if best is None else (best[1], best[2])
-        return want
-
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
     keys = st.sampled_from(["a", "b", "c"])
-
-    @settings(max_examples=300, deadline=None)
-    @given(
-        turns=st.lists(st.tuples(st.one_of(st.none(), keys),
-                                 st.integers(0, 8)), max_size=16),
+    case = st.tuples(
+        st.lists(st.tuples(st.one_of(st.none(), keys),
+                           st.integers(0, 8)), max_size=16),
         # unique (key, ts) per state row: with duplicates the winner
         # among equal-ts states is an explicit tiebreaker's job (covered
-        # by test_strict_mode_excludes_equal_ts), not the kernel's
-        states=st.lists(
+        # by test_forward_tiebreaker_greatest_wins), not the fill's
+        st.lists(
             st.tuples(keys, st.integers(0, 8),
                       st.one_of(st.none(), st.floats(-5, 5, width=32)),
                       st.one_of(st.none(), st.text("xy", max_size=2))),
             max_size=12, unique_by=lambda s: (s[0], s[1])),
-        allow_exact=st.booleans(),
-        cuts=st.sets(st.integers(0, 27), max_size=12),
+        st.sampled_from(_CONFIGS),
     )
-    def test_kernel_matches_brute_force(self, turns, states, allow_exact,
-                                        cuts):
-        got = self._run_kernel(turns, states, allow_exact, cuts)
-        want = self._brute(turns, states, allow_exact)
-        assert len(got) == len(turns)
-        got_map = {}
-        for _, r in got.iterrows():
-            score = r["state_score"]
-            tag = r["state_tag"]
-            got_map[int(r["turn_idx"])] = (
-                None if pd.isna(score) else float(score),
-                None if tag is None or (isinstance(tag, float)
-                                        and pd.isna(tag)) else tag)
-        want_norm = {i: (None if s is None else float(s), t)
-                     for i, (s, t) in want.items()}
-        assert got_map == want_norm
+
+    @staticmethod
+    def _brute(turns, states, direction, allow_exact):
+        want = []
+        for k, ts in turns:
+            best = None
+            for k2, ts2, score, tag in states:
+                if k is None or k2 != k:
+                    continue
+                ahead = ts2 < ts if direction == "backward" else ts2 > ts
+                if ahead or (allow_exact and ts2 == ts):
+                    if best is None or abs(ts2 - ts) < abs(best[0] - ts):
+                        best = (ts2, score, tag)
+            want.append((None, None) if best is None
+                        else (None if best[1] is None else float(best[1]),
+                              best[2]))
+        return want
+
+    def test_kernel_matches_brute_force(self, spark):
+        cases = []
+
+        @settings(max_examples=300, deadline=None)
+        @given(self.case)
+        def draw(case):
+            cases.append(case)
+
+        draw()
+        turn_rows = {cfg: [] for cfg in _CONFIGS}
+        state_rows = {cfg: [] for cfg in _CONFIGS}
+        want, case_of = {}, {}
+        for c, (turns, states, cfg) in enumerate(cases):
+            for (k, ts), w in zip(turns, self._brute(turns, states, *cfg)):
+                tid = len(want)
+                turn_rows[cfg].append(
+                    (None if k is None else f"{c}:{k}", tid, float(ts)))
+                want[tid], case_of[tid] = w, c
+            state_rows[cfg] += [(f"{c}:{k}", float(ts), score, tag)
+                                for k, ts, score, tag in states]
+        out = None
+        for cfg in _CONFIGS:
+            direction, allow_exact = cfg
+            joined = asof_join(
+                spark.createDataFrame(
+                    turn_rows[cfg],
+                    "conv_id string, turn_idx long, ts double"),
+                spark.createDataFrame(
+                    state_rows[cfg], "conv_id string, ts double, "
+                    "state_score double, state_tag string"),
+                state_cols=_STATE_COLS, direction=direction,
+                allow_exact=allow_exact).select("turn_idx", *_STATE_COLS)
+            out = joined if out is None else out.unionByName(joined)
+        got = {r.turn_idx: (r.state_score, r.state_tag)
+               for r in out.collect()}
+        assert len(cases) >= 300 and got.keys() == want.keys()
+        bad = sorted({case_of[t] for t in want if got[t] != want[t]})
+        assert not bad, [cases[c] for c in bad[:3]]
 
 
 class TestAsofTolerance:
@@ -411,9 +379,6 @@ class TestAsofTolerance:
 
     def test_tolerance_contract_errors(self, spark, small):
         turns, state, _, _ = small
-        with pytest.raises(ValueError, match="mode='window'"):
-            asof_join(turns, state, state_cols=["state_score"],
-                      mode="merge", tolerance=5.0)
         with pytest.raises(ValueError, match=">= 0"):
             asof_join(turns, state, state_cols=["state_score"],
                       tolerance=-1.0)

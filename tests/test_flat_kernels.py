@@ -149,6 +149,40 @@ class TestFlatPipelineParity:
                 list(b["missing_features"][i]), i
 
 
+    def test_flagship_spec_flat_vs_generic(self, spark):
+        """Every flat kernel the flagship spec compiles (bags, n-grams,
+        skip-grams, indicators, SOS2 bins) against the same features on
+        the per-row tiers (``flat_fn=None``), through the flagship's own
+        point-in-time frame."""
+        from aloha_spark.data.transcripts import make_state, make_transcripts
+        from aloha_spark.plans.flagship import (FLAGSHIP_SPEC,
+                                                point_in_time_features)
+
+        turns = make_transcripts(spark, n_convs=12, turns_per_conv=10,
+                                 mega_turns=40)
+        x = point_in_time_features(turns, make_state(spark, turns),
+                                   state_cols=["state_score"]).cache()
+        spec = PipelineSpec.from_json(FLAGSHIP_SPEC)
+        flat_pipe = FeaturePipeline(spec)
+        assert sum(1 for fp in flat_pipe.plan.features
+                   if fp.flat_fn is not None) >= 5
+        generic_pipe = FeaturePipeline(spec)
+        for fp in generic_pipe.plan.features:
+            fp.flat_fn = None
+        keep = ["conv_id", "turn_idx"]
+        a = flat_pipe.to_sparse_vectors(x, keep_cols=keep) \
+            .orderBy(*keep).toPandas()
+        b = generic_pipe.to_sparse_vectors(x, keep_cols=keep) \
+            .orderBy(*keep).toPandas()
+        x.unpersist()
+        assert len(a) == len(b) == turns.count()
+        for i in range(len(a)):
+            assert np.array_equal(a["indices"][i], b["indices"][i]), i
+            assert np.allclose(a["values"][i], b["values"][i]), i
+            assert list(a["missing_features"][i]) == \
+                list(b["missing_features"][i]), i
+
+
 class TestCsos2Flat:
     def test_csos2_flat_matches_dict_tier(self, spark):
         from aloha_spark.plans.pipeline import FeaturePipeline
@@ -185,10 +219,10 @@ class TestCsos2Flat:
         doc = {"features": [{"name": "c",
                              "spec": "csos2(${x}, [0, 100, 300, 800])"}],
                "namespaces": {}}
+        from tests.featurize_oracle import vw_lines
+
         flat = {r.id: r.vw_line for r in
                 FeaturePipeline(PipelineSpec.from_json(doc))
-                .to_vw_lines(df, keep_cols=["id"], impl="flat").collect()}
-        dic = {r.id: r.vw_line for r in
-               FeaturePipeline(PipelineSpec.from_json(doc))
-               .to_vw_lines(df, keep_cols=["id"], impl="dict").collect()}
+                .to_vw_lines(df, keep_cols=["id"]).collect()}
+        dic = vw_lines(FeaturePipeline(PipelineSpec.from_json(doc)), df, "id")
         assert flat == dic

@@ -1,5 +1,6 @@
 """A/B parity: flat (vectorized) VW/LibSVM line assembly vs the
-per-row dict tier — byte-identical lines over specs exercising bags,
+per-row dict oracle (tests/featurize_oracle.py) — byte-identical lines
+over specs exercising bags,
 counts > 1, weighted values, epsilon filtering, namespaces, defaults,
 missing -> UNK, labels/importance/tags, and numMissingThreshold."""
 
@@ -8,6 +9,7 @@ from pyspark.sql import functions as F  # noqa: F401
 
 from aloha_spark.plans.pipeline import FeaturePipeline
 from aloha_spark.plans.spec import PipelineSpec
+from tests.featurize_oracle import libsvm_lines, vw_lines
 
 
 def _df(spark):
@@ -50,11 +52,8 @@ def test_vw_flat_matches_dict(spark, extra):
     doc = dict(SPEC, **extra)
     df = _df(spark)
     pipe = FeaturePipeline(PipelineSpec.from_json(doc))
-    flat = _collect(pipe.to_vw_lines(df, keep_cols=["id"], impl="flat"),
-                    "vw_line")
-    pipe2 = FeaturePipeline(PipelineSpec.from_json(doc))
-    dic = _collect(pipe2.to_vw_lines(df, keep_cols=["id"], impl="dict"),
-                   "vw_line")
+    flat = _collect(pipe.to_vw_lines(df, keep_cols=["id"]), "vw_line")
+    dic = vw_lines(FeaturePipeline(PipelineSpec.from_json(doc)), df, "id")
     assert flat == dic
     # sanity: lines are real (namespaces present on a normal row)
     if not extra:
@@ -68,11 +67,9 @@ def test_libsvm_flat_matches_dict(spark, with_label):
         doc["label"] = "${w}"
     df = _df(spark)
     pipe = FeaturePipeline(PipelineSpec.from_json(doc))
-    flat = _collect(pipe.to_libsvm_lines(df, keep_cols=["id"], impl="flat"),
+    flat = _collect(pipe.to_libsvm_lines(df, keep_cols=["id"]),
                     "libsvm_line")
-    pipe2 = FeaturePipeline(PipelineSpec.from_json(doc))
-    dic = _collect(pipe2.to_libsvm_lines(df, keep_cols=["id"], impl="dict"),
-                   "libsvm_line")
+    dic = libsvm_lines(FeaturePipeline(PipelineSpec.from_json(doc)), df, "id")
     assert flat == dic
     assert any(":" in v for v in flat.values())
 
@@ -82,11 +79,8 @@ def test_vw_flat_default_namespace_only(spark):
            "namespaces": {}}
     df = _df(spark)
     pipe = FeaturePipeline(PipelineSpec.from_json(doc))
-    flat = _collect(pipe.to_vw_lines(df, keep_cols=["id"], impl="flat"),
-                    "vw_line")
-    pipe2 = FeaturePipeline(PipelineSpec.from_json(doc))
-    dic = _collect(pipe2.to_vw_lines(df, keep_cols=["id"], impl="dict"),
-                   "vw_line")
+    flat = _collect(pipe.to_vw_lines(df, keep_cols=["id"]), "vw_line")
+    dic = vw_lines(FeaturePipeline(PipelineSpec.from_json(doc)), df, "id")
     assert flat == dic
     assert flat[0].startswith("| ")
     # bag counts render as weights: 'the' x3 in row 0
@@ -95,16 +89,13 @@ def test_vw_flat_default_namespace_only(spark):
 
 def test_vw_flat_feature_in_multiple_namespaces(spark):
     # a feature listed in several namespaces is emitted once per
-    # namespace (dict-tier semantics); the flat tier must match
+    # namespace (row-builder semantics); the flat tier must match
     doc = {"features": [{"name": "x", "spec": "ind(${lang})"},
                         {"name": "y", "spec": "bag(${text})"}],
            "namespaces": {"a": ["x", "y"], "b": ["x"]}}
     df = _df(spark)
     flat = _collect(FeaturePipeline(PipelineSpec.from_json(doc))
-                    .to_vw_lines(df, keep_cols=["id"], impl="flat"),
-                    "vw_line")
-    dic = _collect(FeaturePipeline(PipelineSpec.from_json(doc))
-                   .to_vw_lines(df, keep_cols=["id"], impl="dict"),
-                   "vw_line")
+                    .to_vw_lines(df, keep_cols=["id"]), "vw_line")
+    dic = vw_lines(FeaturePipeline(PipelineSpec.from_json(doc)), df, "id")
     assert flat == dic
     assert flat[0].count("x=en") == 2    # once in |a, once in |b

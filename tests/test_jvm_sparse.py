@@ -1,8 +1,8 @@
 """JVM (pure-Catalyst) sparse-vector sink vs the Arrow tier.
 
-All-scalar plans have static key spaces, so ``to_sparse_vectors`` can
-stay entirely inside whole-stage codegen (no Python workers).  The
-Arrow path remains the semantics oracle: these are byte-level A/B
+All-scalar plans have static key spaces, so ``to_sparse_vectors``
+stays entirely inside whole-stage codegen (no Python workers).  The
+Arrow kernel (``make_arrow_kernel``) is the semantics oracle: these are byte-level A/B
 parity gates over nulls, NaN, defaults, forced hash collisions
 (tiny numBits), and the numMissingThreshold abort
 (RegressionFeatures.scala:99-110)."""
@@ -79,12 +79,22 @@ def _mkdf(spark):
     return spark.createDataFrame(data, "rid int, x double, y double")
 
 
+def _plan_string(df):
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted").lower()
+
+
 def _ab(spark, spec_doc, df):
-    pipe_a = FeaturePipeline(PipelineSpec.from_json(spec_doc))
-    pipe_b = FeaturePipeline(PipelineSpec.from_json(spec_doc))
-    jvm = pipe_a.to_sparse_vectors(df, keep_cols=["rid"], impl="jvm")
-    arrow = pipe_b.to_sparse_vectors(df, keep_cols=["rid"], impl="arrow")
-    return _rows(jvm), _rows(arrow)
+    """(Catalyst sink rows, Arrow kernel rows) for one all-scalar spec:
+    ``to_sparse_vectors`` must pick the Catalyst plan, and the Arrow
+    kernel is driven through the public ``make_arrow_kernel``."""
+    jvm = FeaturePipeline(PipelineSpec.from_json(spec_doc)) \
+        .to_sparse_vectors(df, keep_cols=["rid"])
+    assert "mapinarrow" not in _plan_string(jvm)
+    pipe = FeaturePipeline(PipelineSpec.from_json(spec_doc))
+    pre = pipe._with_precomputed(df)
+    run, schema = pipe.make_arrow_kernel(pre, ["rid"])
+    return _rows(jvm), _rows(pre.mapInArrow(run, schema=schema))
 
 
 def test_jvm_matches_arrow_scalar(spark):
@@ -125,8 +135,7 @@ def test_jvm_binning_plan_python_free(spark):
         (F.col("id") * 1.3).alias("x"),
         (F.col("id") + 0.5).alias("y"))
     out = pipe.to_sparse_vectors(df, keep_cols=["rid"])
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted").lower()
+    plan = _plan_string(out)
     assert "mapinarrow" not in plan and "python" not in plan
 
 
@@ -148,9 +157,7 @@ def test_auto_picks_jvm_and_plan_is_python_free(spark):
         (F.col("id") * 1.5).alias("x"),
         F.when(F.col("id") % 2 == 0, F.col("id") + 1.0).alias("y"))
     out = pipe.to_sparse_vectors(df, keep_cols=["rid"])
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted")
-    low = plan.lower()
+    low = _plan_string(out)
     assert "mapinarrow" not in low and "python" not in low
     # scalar feature computation is codegen'd; the higher-order
     # array_sort/filter/transform assembly is interpreted but JVM-side
@@ -163,11 +170,8 @@ def test_auto_falls_back_to_arrow_for_bags(spark):
     df = spark.createDataFrame([(0, "a b")], "rid int, t string")
     pipe = FeaturePipeline(PipelineSpec.from_json(doc))
     out = pipe.to_sparse_vectors(df, keep_cols=["rid"])
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted").lower()
+    plan = _plan_string(out)
     assert "mapinarrow" in plan or "python" in plan
-    with pytest.raises(ValueError):
-        pipe.to_sparse_vectors(df, keep_cols=["rid"], impl="jvm")
 
 
 def test_jvm_matches_arrow_fuzz(spark):
@@ -205,7 +209,8 @@ def test_duplicate_feature_names_rejected(spark):
 def test_jvm_values_exact(spark):
     """Spot-check actual numbers, not just A/B agreement."""
     pipe = FeaturePipeline(PipelineSpec.from_json(SCALAR_SPEC))
-    out = pipe.to_sparse_vectors(_mkdf(spark), keep_cols=["rid"], impl="jvm")
+    out = pipe.to_sparse_vectors(_mkdf(spark), keep_cols=["rid"])
+    assert "mapinarrow" not in _plan_string(out)
     r0 = [r for r in out.collect() if r.rid == 0][0]
     got = dict(zip(r0.indices, r0.values))
     # a=3, b=3, c=log2(8)=3, d=14, e=2 (hash keys distinct at 18 bits)

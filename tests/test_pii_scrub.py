@@ -40,8 +40,9 @@ def test_ipv4_and_phone(spark):
 
 
 def test_ip_before_phone_no_half_match(spark):
-    # a dotted quad must be fully redacted as <IP>; the phone pattern
-    # (which requires a leading +) must not touch plain number runs
+    # a dotted quad must be fully redacted as <IP>; the phone patterns
+    # (a leading + or the dashed NNN-NNN(N)-NNNN layout) must not touch
+    # plain space-separated number runs
     s, n = _scrub_one(spark, "10.0.0.1 then 555 1234 5678")
     assert s == "<IP> then 555 1234 5678"
     assert n == 1
@@ -67,3 +68,15 @@ def test_jvm_only_plan(spark):
     df = spark.createDataFrame([("t http://a.b",)], "text string")
     plan = with_pii_scrubbed(df)._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan and "ArrowEvalPython" not in plan
+
+
+def test_unprefixed_phone(spark):
+    # the NNN-NNNN-NNNN numbers data/documents.py plants, and the
+    # NNN-NNN-NNNN form; a '+'-prefixed number stays ONE placeholder
+    s, n = _scrub_one(spark, "call 555-0042-1234. or 415-555-0100 "
+                             "or +1 555-123-4567 now")
+    assert s == "call <PHONE>. or <PHONE> or <PHONE> now"
+    assert n == 3
+    # digit runs without the dash layout are not phone numbers
+    s, n = _scrub_one(spark, "id 5551234567 v1-2-3 2024-01-15")
+    assert (s, n) == ("id 5551234567 v1-2-3 2024-01-15", 0)

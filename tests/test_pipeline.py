@@ -121,3 +121,71 @@ def test_libsvm_lines(spark):
     mask = (1 << 18) - 1
     assert parts[str(string_hash("w=a") & mask)] == "2.0"
     assert parts[str(string_hash("w=b") & mask)] == "1.0"
+
+
+#: one feature per evaluator tier: Column (numeric and string), vbatch
+#: without a flat kernel, flat bag / nGrams (n = 2 pair kernel and the
+#: general one), the generic tier with features that raise on some rows,
+#: and an accessor-path variable; ``half``'s sub-unit bins truncate to
+#: the same key, which a bag (a dict) keeps once, last value winning
+TIERS_SPEC = {
+    "features": [
+        {"name": "w", "spec": "clamp(${w}, -100, 100)"},
+        {"name": "lang", "spec": "${lang}"},
+        {"name": "lind", "spec": "ind(${lang})"},
+        {"name": "bow3", "spec": "bag(${text}, '=', '', ' ', 3)"},
+        {"name": "bow", "spec": "bag(${text})"},
+        {"name": "g2", "spec": "nGrams(${text:-''}, 2)"},
+        {"name": "g3", "spec": "nGrams(${text}, 3)"},
+        {"name": "ntok", "spec": "len(${text}.split())"},
+        {"name": "inv", "spec": "1.0 / len(${text:-''})"},
+        {"name": "src", "spec": "bag(${meta.src})"},
+        {"name": "half", "spec": "sos2(${w}, 0, 2, 0.5)"},
+    ],
+    "namespaces": {},
+    "numBits": 18,
+}
+
+
+def _tiers_df(spark):
+    rows = [
+        (0, "the cat sat on the mat the cat", "en", 42.0, ("web", 1)),
+        (1, "a:b c|d a_b a:b", "de", -1.5, ("mail", 2)),
+        (2, None, None, None, None),
+        (3, "", "fr", 250.0, ("", 3)),
+        (4, "one two three four", None, 0.3, (None, 4)),
+        (5, "x " * 20 + "y", "en", float("nan"), ("web chat", 5)),
+    ]
+    return spark.createDataFrame(
+        rows, "id long, text string, lang string, w double, "
+              "meta struct<src: string, n: int>")
+
+
+def test_featurize_matches_oracle_every_tier(spark):
+    from tests.featurize_oracle import featurize_rows
+
+    df = _tiers_df(spark)
+    pipe = FeaturePipeline(PipelineSpec.from_json(TIERS_SPEC))
+    got = {r.id: r for r in pipe.featurize(df, keep_cols=["id"]).collect()}
+    kinds = {fp.name: (fp.kind, fp.flat_fn is not None)
+             for fp in pipe.plan.features}
+    assert kinds["w"][0] == "column" and kinds["lang"][0] == "string_column"
+    assert kinds["bow3"] == ("vbatch", False)
+    assert all(kinds[f][1] for f in ("lind", "bow", "g2", "g3", "src"))
+    assert kinds["ntok"] == ("batch", False) == kinds["inv"]
+
+    want = featurize_rows(FeaturePipeline(PipelineSpec.from_json(TIERS_SPEC)),
+                          df, "id")
+    assert sorted(got) == sorted(want)
+    for i, (feats, missing, erring) in want.items():
+        row = got[i]
+        assert [dict(m) for m in row.features] == feats, i
+        assert list(row.missing_features) == missing, i
+        assert list(row.erring_features) == erring, i
+    # the cases the comparison must have covered
+    assert want[2][2] == ["ntok", "inv"] and want[3][2] == ["inv"]
+    assert want[3][0][5] == {} and not want[3][1]  # empty bag, not missing
+    assert "bow" in want[2][1] and "src" in want[2][1]
+    assert got[4].features[9] == {"src=UNK": 1.0}
+    assert list(got[4].features[10]) == ["half=0"]
+    assert got[4].features[10]["half=0"] == pytest.approx(0.6)

@@ -146,8 +146,8 @@ def test_first_order_regression_is_jvm_only(spark, sf_dir):
     import __spark_entry__ as em
     plan = _plan(em.q_regression_spline(spark, sf_dir), "simple")
     n_python = plan.count("ArrowEvalPython") + plan.count("BatchEvalPython")
-    # exactly one Python stage: the featurize mapInPandas; scoring adds none
-    assert plan.count("MapInPandas") == 1
+    # exactly one Python stage: the featurize mapInArrow; scoring adds none
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
     assert n_python == 0
 
 

@@ -203,7 +203,7 @@ class TestAsofProperty:
 
 class TestFlatLineParityFuzz:
     """Hypothesis fuzz: the flat VW/LibSVM line assemblers must equal the
-    per-row dict tier byte-for-byte on arbitrary token content (incl.
+    per-row dict oracle byte-for-byte on arbitrary token content (incl.
     separators, ':' '|' tokens), near-epsilon weights, NULLs, and
     multi-namespace membership — evaluated directly on pandas frames
     (no Spark session), so hundreds of examples run in seconds."""
@@ -230,8 +230,9 @@ class TestFlatLineParityFuzz:
     @settings(max_examples=120, deadline=None,
               suppress_health_check=[HealthCheck.too_slow])
     def test_vw_flat_equals_dict(self, rows):
-        from aloha_spark.plans.pipeline import (
-            _assemble_vw_bodies, _batch_eval, unlabeled_vw_line)
+        from aloha_spark.plans.pipeline import _assemble_vw_bodies
+        from aloha_spark.sinks.vw import unlabeled_vw_line
+        from tests.featurize_oracle import batch_eval
 
         doc = {"features": [
                    {"name": "bow", "spec": "bag(${text})"},
@@ -256,7 +257,7 @@ class TestFlatLineParityFuzz:
                 fp.kind = "string_column"
                 pdf["__als_lang"] = pdf["lang"]
         flat, _ = _assemble_vw_bodies(plan, pdf)
-        order, bags, missing, erring = _batch_eval(plan, pdf)
+        order, bags, missing, erring = batch_eval(plan, pdf)
         dic = [unlabeled_vw_line([bags[fi][i] for fi in range(len(order))],
                                  plan.default_ns, plan.namespaces)
                for i in range(len(pdf))]
@@ -266,8 +267,8 @@ class TestFlatLineParityFuzz:
     @settings(max_examples=80, deadline=None,
               suppress_health_check=[HealthCheck.too_slow])
     def test_libsvm_flat_equals_dict(self, texts):
-        from aloha_spark.plans.pipeline import (
-            _assemble_libsvm_lines, _batch_eval)
+        from aloha_spark.plans.pipeline import _assemble_libsvm_lines
+        from tests.featurize_oracle import batch_eval
         from aloha_spark.sinks.libsvm import labeled_libsvm_line
 
         doc = {"features": [{"name": "bow", "spec": "bag(${text})"},
@@ -281,7 +282,7 @@ class TestFlatLineParityFuzz:
             return string_hash_array(keys) & mask
 
         flat, _ = _assemble_libsvm_lines(plan, pdf, hash_fn)
-        order, bags, missing, erring = _batch_eval(plan, pdf)
+        order, bags, missing, erring = batch_eval(plan, pdf)
         dic = [labeled_libsvm_line([bags[fi][i] for fi in range(len(order))],
                                    None, 18)
                for i in range(len(pdf))]

@@ -114,14 +114,14 @@ def test_ind_array_column_all_tiers(spark):
         "features": [{"name": "t", "spec": "ind(${tags})"}],
         "namespaces": {}, "numBits": 18})
     pipe = FeaturePipeline(spec)
-    # dict tier (featurize / ind_batch)
+    # featurize: per-feature map bags
     feats = {r.id: r for r in
              pipe.featurize(df, keep_cols=["id"]).collect()}
     assert feats[1].features[0] == {"t=a": 1.0, "t=b": 1.0}
     assert feats[2].features[0] == {}            # empty list: empty bag
     assert feats[3].features[0] == {"t=UNK": 1.0}
     assert feats[3].missing_features == ["t"]
-    # flat tier (to_sparse_vectors / ind_flat) — previously crashed
+    # hashed vectors (to_sparse_vectors / ind_flat) — previously crashed
     vecs = {r.id: r for r in
             pipe.to_sparse_vectors(df, keep_cols=["id"]).collect()}
     assert len(vecs[1].indices) == 2

@@ -11,20 +11,18 @@ from pyspark.sql import functions as F
 
 from aloha_spark.plans.pipeline import FeaturePipeline, _fmt17
 from aloha_spark.plans.spec import PipelineSpec
+from tests.featurize_oracle import vw_lines
 
 
-def _collect(df, col):
-    return {r.id: r[col] for r in df.collect()}
+def _collect(df, col, key="id"):
+    return {r[key]: r[col] for r in df.collect()}
 
 
 def _parity(spark, doc, rows, schema="id long, text string, w double"):
     df = spark.createDataFrame(rows, schema)
     flat = _collect(FeaturePipeline(PipelineSpec.from_json(doc))
-                    .to_vw_lines(df, keep_cols=["id"], impl="flat"),
-                    "vw_line")
-    dic = _collect(FeaturePipeline(PipelineSpec.from_json(doc))
-                   .to_vw_lines(df, keep_cols=["id"], impl="dict"),
-                   "vw_line")
+                    .to_vw_lines(df, keep_cols=["id"]), "vw_line")
+    dic = vw_lines(FeaturePipeline(PipelineSpec.from_json(doc)), df, "id")
     return flat, dic
 
 
@@ -388,7 +386,7 @@ def test_rb_to_pandas_matches_mapinpandas_timestamps(spark):
 
 def test_vw_lines_parity_under_non_utc_session_tz(spark):
     """End-to-end guard: the Arrow-native line sink must produce the
-    dict tier's bytes even when the session timezone is not UTC and a
+    per-row oracle's bytes even when the session timezone is not UTC and a
     feature reads a timestamp variable."""
     old = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
@@ -401,10 +399,9 @@ def test_vw_lines_parity_under_non_utc_session_tz(spark):
             "features": [{"name": "t", "spec": "ind(${ts})"},
                          {"name": "r", "spec": "ind(${role})"}],
             "namespaces": {}, "numBits": 18}))
-        flat = [r.vw_line for r in
-                pipe.to_vw_lines(df, impl="flat").collect()]
-        dic = [r.vw_line for r in
-               pipe.to_vw_lines(df, impl="dict").collect()]
+        flat = _collect(pipe.to_vw_lines(df, keep_cols=["role"]),
+                        "vw_line", key="role")
+        dic = vw_lines(pipe, df, "role")
         assert flat == dic
     finally:
         spark.conf.set("spark.sql.session.timeZone", old)

@@ -199,9 +199,12 @@ def property_gates(spark, sf_dir) -> dict:
            f"replica_parity={parity} dropped_has_kept_neighbor={inv_ok} "
            f"(n={len(got_keep)}, dropped={n_drop})")
 
-    # --- vw_lines: flat assembly byte-identical to the dict tier ---
+    # --- vw_lines: flat assembly byte-identical to the per-row oracle
+    # (tests/featurize_oracle.py: dict bags + sinks.vw.labeled_vw_line
+    # over the collected precomputed frame) ---
     from aloha_spark.plans.pipeline import FeaturePipeline
     from aloha_spark.plans.spec import PipelineSpec
+    from tests.featurize_oracle import vw_lines
     vw_spec = {
         "features": [
             {"name": "bow", "spec": "bag(${text})"},
@@ -211,14 +214,14 @@ def property_gates(spark, sf_dir) -> dict:
         "label": "${n_chars} / 1000.0"}
     docs_df = spark.read.parquet(f"{sf_dir}/documents.parquet")
     flat = FeaturePipeline(PipelineSpec.from_json(vw_spec)) \
-        .to_vw_lines(docs_df, keep_cols=["doc_id"], impl="flat") \
+        .to_vw_lines(docs_df, keep_cols=["doc_id"]) \
         .toPandas().set_index("doc_id")["vw_line"].sort_index()
-    dic = FeaturePipeline(PipelineSpec.from_json(vw_spec)) \
-        .to_vw_lines(docs_df, keep_cols=["doc_id"], impl="dict") \
-        .toPandas().set_index("doc_id")["vw_line"].sort_index()
-    n_diff = int((flat != dic).sum())
+    dic = pd.Series(vw_lines(FeaturePipeline(PipelineSpec.from_json(vw_spec)),
+                             docs_df, "doc_id")).sort_index()
+    n_diff = int((flat != dic).sum()) if flat.index.equals(dic.index) \
+        else len(flat)
     record("vw_lines", n_diff == 0,
-           f"flat==dict on {len(flat)} lines (diff={n_diff})")
+           f"flat==oracle on {len(flat)} lines (diff={n_diff})")
 
     # --- libsvm_lines: parse back == to_sparse_vectors on same spec ---
     sv_spec = {"features": [{"name": "bow", "spec": "bag(${text})"}],
