@@ -619,12 +619,12 @@ def q_ann_topk_indexed(spark, sf_dir):
         F.col("rank").cast("long").alias("rank"))
 
 
-def q_ann_topk_pq_dist(spark, sf_dir):
-    """The DISTRIBUTED PQ query path (pq_topk_indexed
-    distributed=True — executor-side probe assignment + per-batch ADC
-    lookup tables, no driver collect) against the same prebuilt index
-    as q_ann_topk_indexed, exhaustive (nprobe = n_centroids, rerank >=
-    |corpus|) so the brute-force DuckDB oracle gates it end to end."""
+def q_ann_topk_pq_indexed(spark, sf_dir):
+    """The PQ search against a prebuilt index (pq_topk_indexed —
+    driver-side lookup tables, per-cell query masking) on the same
+    artifact as q_ann_topk_indexed, exhaustive (nprobe = n_centroids,
+    rerank >= |corpus|) so the brute-force DuckDB oracle gates it end
+    to end."""
     import tempfile
     from aloha_spark.operators.ann_index import (
         build_ann_index, load_ann_index, pq_topk_indexed)
@@ -638,8 +638,7 @@ def q_ann_topk_pq_dist(spark, sf_dir):
         _ANN_INDEX_BUILT.add(path)
     idx = load_ann_index(spark, path)
     q = embs.where("vec_id < 10")
-    return pq_topk_indexed(q, idx, k=3, nprobe=8, rerank=4096,
-                           distributed=True).select(
+    return pq_topk_indexed(q, idx, k=3, nprobe=8, rerank=4096).select(
         "query_id", "neighbor_id", "cosine",
         F.col("rank").cast("long").alias("rank"))
 
@@ -2108,7 +2107,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "heavy_hitters": q_heavy_hitters,
         "heavy_hitters_bigrams": q_heavy_hitters_bigrams,
         "split_leakage": q_split_leakage,
-        "ann_topk_pq_dist": q_ann_topk_pq_dist,
+        "ann_topk_pq_indexed": q_ann_topk_pq_indexed,
         # rows-only (approx algorithms / binary formats — each backed
         # by a machine-checked property gate in tools/selfcheck.py)
         "dedup_minhash": q_dedup_minhash,
@@ -3407,9 +3406,9 @@ SELECT d.doc_id, CAST(COALESCE(a.n_tokens, 0) AS BIGINT) AS n_tokens,
        a.xent AS xent
 FROM documents d LEFT JOIN agg a USING (doc_id)""",
     }
-    # the distributed PQ path must be exactly as correct as the
-    # serving path: same exhaustive brute-force oracle
-    d["ann_topk_pq_dist"] = d["ann_topk_pq"]
+    # the indexed PQ search must be exactly as correct as the
+    # refit-per-call one: same exhaustive brute-force oracle
+    d["ann_topk_pq_indexed"] = d["ann_topk_pq"]
     return d
 
 

@@ -1,11 +1,19 @@
-"""Persistable ANN index — build once over the corpus, query many times.
+"""ANN index — fit → assign → search, in memory or persisted.
 
-:func:`~aloha_spark.operators.similarity.ivf_topk` /
-:func:`~aloha_spark.operators.similarity.pq_topk` refit their coarse
-quantizers on every call, which is right for one-shot dedup passes but
-wrong for the serving shape at 10^11 vectors: there the expensive part —
-the full-corpus scan that assigns cells and encodes PQ codes — should
-run ONCE, and each later query batch should read only its probed slice.
+One core serves both shapes of IVF and PQ/ADC search:
+
+* ``_fit`` trains coarse centroids (and PQ codebooks when ``m_sub > 0``)
+  on the deterministic sample and returns an in-memory :class:`AnnIndex`
+  whose ``corpus()`` is the lazily assigned frame ``(id, cell, vector,
+  codes?)`` — one Arrow ``assign`` pass over the corpus.
+* :func:`build_ann_index` is that fit, a ``partitionBy("cell")`` write
+  and the ``meta.json`` publish: the build-once/query-many serving
+  shape at 10^11 vectors, where the full-corpus assign should run ONCE
+  and each later query batch reads only its probed slice.
+* :func:`ivf_topk_indexed` / :func:`pq_topk_indexed` search either kind.
+  The refit-per-call :func:`~aloha_spark.operators.similarity.ivf_topk`
+  / :func:`~aloha_spark.operators.similarity.pq_topk` are the fit plus
+  these searches.
 
 Artifact layout under ``path`` (plain parquet + JSON — readable by any
 engine, no pickles):
@@ -28,6 +36,14 @@ PQ codes ride next to the ids (m_sub small ints per vector instead of a
 3 KB float array), and the raw vectors are only read by the
 exact-rerank tail over the Q x rerank candidate set.
 
+The query side is distributed for IVF: probe cells come from a
+broadcast-centroid Arrow pass over the query frame, so an increment of
+millions of rows never touches the driver.  PQ search builds its
+lookup tables driver-side from the collected query batch (bounded by
+``max_queries``) and ships each corpus code once; shipping every
+(corpus vector, probing query) pair to the executors instead was
+measured 4–28× slower at 1k–100k queries.
+
 Reference parity note: the reference engine has no vector index; this
 extends the beyond-reference similarity family (SURVEY §2.11 X7/X28)
 with the build/serve split every production ANN deployment uses
@@ -42,9 +58,13 @@ from typing import Iterator, Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.functions import pandas_udf
 
-from .similarity import _cosine_expr, _kmeans_fit, _pq_fit
+from .similarity import (_as_matrix, _collect_queries, _cosine_expr,
+                         _empty_topk, _id_type, _kmeans_fit, _pq_fit,
+                         _rank_within_query, _topk_result, _train_sample,
+                         _unit)
 
 _META = "meta.json"
 _CENTROIDS = "centroids.parquet"
@@ -54,85 +74,105 @@ _FORMAT_VERSION = 1
 
 
 class AnnIndex:
-    """Handle over a built index: broadcast-sized arrays on the driver
-    (centroids, codebooks) + the lazily-read cell-partitioned corpus."""
+    """Handle over an index: broadcast-sized arrays on the driver
+    (centroids, codebooks) + the assigned corpus — the in-memory fit's
+    lazy frame, or the cell-partitioned parquet under ``path``."""
 
-    def __init__(self, spark: SparkSession, path: str, meta: dict,
-                 centroids: np.ndarray,
-                 codebooks: Optional[np.ndarray]) -> None:
+    def __init__(self, spark: SparkSession, path: Optional[str], meta: dict,
+                 centroids: np.ndarray, codebooks: Optional[np.ndarray],
+                 assigned: Optional[DataFrame] = None) -> None:
         self.spark = spark
         self.path = path
         self.meta = meta
         self.centroids = centroids   # (n_centroids, dim), unit-norm
         self.codebooks = codebooks   # (m_sub, ksub, dim/m_sub) or None
+        self._assigned = assigned
 
     def corpus(self) -> DataFrame:
-        """The inverted file; filter on ``cell`` before anything else so
-        Catalyst turns it into partition pruning."""
+        """The inverted file ``(id, cell, vector, codes?)``; filter on
+        ``cell`` before anything else so Catalyst turns it into
+        partition pruning on a built index."""
+        if self._assigned is not None:
+            return self._assigned
         return self.spark.read.parquet(os.path.join(self.path, _CORPUS))
+
+
+def _fit(corpus: DataFrame, c_id: str, c_vec: str, *, n_centroids: int,
+         m_sub: int, ksub: int, seed: int,
+         train_sample: int) -> Optional[AnnIndex]:
+    """Train on the deterministic unbiased sample
+    (:func:`~aloha_spark.operators.similarity._train_sample`) and
+    return an in-memory index whose corpus is assigned lazily: every
+    vector gets its nearest cell and, with ``m_sub > 0``, its PQ codes.
+    ``None`` on an empty corpus."""
+    spark = corpus.sparkSession
+    sample = _train_sample(corpus, c_id, c_vec, seed, train_sample)
+    if not len(sample):
+        return None
+    cent = _kmeans_fit(sample, n_centroids, seed)
+    books = _pq_fit(sample, m_sub, ksub, seed) if m_sub else None
+
+    bc = spark.sparkContext.broadcast((cent, books))
+    id_t = _id_type(corpus, c_id)
+    dim = sample.shape[1]
+
+    @pandas_udf("struct<cell:int" + (
+        ", codes:array<int>>" if books is not None else ">"))
+    def assign(vecs: pd.Series) -> pd.DataFrame:
+        cent_, books_ = bc.value
+        nn = _unit(_as_matrix(vecs).reshape(len(vecs), dim))
+        out = pd.DataFrame(
+            {"cell": np.argmax(nn @ cent_.T, axis=1).astype(np.int32)})
+        if books_ is not None:
+            dsub = books_.shape[2]
+            codes = np.empty((len(nn), len(books_)), dtype=np.int32)
+            for mi, cb in enumerate(books_):
+                sub = nn[:, mi * dsub:(mi + 1) * dsub]
+                d2 = -2.0 * (sub @ cb.T) + (cb ** 2).sum(axis=1)[None, :]
+                codes[:, mi] = np.argmin(d2, axis=1)
+            out["codes"] = list(codes)
+        return out
+
+    vector = F.col(c_vec).cast("array<double>")
+    assigned = (corpus.select(F.col(c_id).alias("id"),
+                              vector.alias("vector"),
+                              assign(vector).alias("_a"))
+                      .select("id", "_a.cell", "vector",
+                              *(["_a.codes"] if books is not None else [])))
+    meta = {
+        "format_version": _FORMAT_VERSION,
+        "kind": "ivfpq" if books is not None else "ivf",
+        "dim": int(dim),
+        "n_centroids": int(len(cent)),
+        "m_sub": int(m_sub),
+        "ksub": int(books.shape[1]) if books is not None else 0,
+        "seed": int(seed),
+        "train_sample": int(train_sample),
+        "id_col": c_id, "vec_col": c_vec, "id_type": id_t,
+    }
+    return AnnIndex(spark, None, meta, cent, books, assigned)
 
 
 def build_ann_index(corpus: DataFrame, path: str, *,
                     c_id: str = "vec_id", c_vec: str = "embedding",
                     n_centroids: int = 16, m_sub: int = 0, ksub: int = 16,
                     seed: int = 7, train_sample: int = 4096) -> AnnIndex:
-    """One corpus scan: train coarse centroids (and PQ codebooks when
-    ``m_sub > 0``) on a deterministic unbiased sample, assign every
-    vector to its nearest cell, encode codes, and publish the artifacts.
-
-    The sample is the same xxhash64-TakeOrdered draw as ``ivf_topk`` —
-    uniform, reproducible, O(n log sample), no full-sort shuffle."""
+    """One corpus scan: fit (train coarse centroids, and PQ codebooks
+    when ``m_sub > 0``, then assign every vector its cell and codes),
+    write the assigned corpus cell-partitioned, and publish the
+    artifacts."""
     _require_local(path, "build_ann_index")
-    spark = corpus.sparkSession
-    samp = (corpus.select(c_id, c_vec)
-            .orderBy(F.xxhash64(F.col(c_id).cast("string"), F.lit(seed)),
-                     F.col(c_id))
-            .limit(train_sample).collect())
-    if not samp:
+    fitted = _fit(corpus, c_id, c_vec, n_centroids=n_centroids,
+                  m_sub=m_sub, ksub=ksub, seed=seed,
+                  train_sample=train_sample)
+    if fitted is None:
         raise ValueError("build_ann_index: corpus is empty")
-    m = np.asarray([np.asarray(r[1], dtype=np.float64) for r in samp])
-    m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-30)
-    dim = m.shape[1]
-    cent = _kmeans_fit(m, n_centroids, seed)
-    books = _pq_fit(m, m_sub, ksub, seed) if m_sub else None
-
-    bc = spark.sparkContext.broadcast((cent, books))
-    id_t = corpus.schema[c_id].dataType.simpleString()
-    out_schema = f"id {id_t}, cell int, vector array<double>"
-    if books is not None:
-        out_schema += ", codes array<int>"
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cent_, books_ = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mm = np.asarray([np.asarray(v, dtype=np.float64)
-                             for v in pdf["vector"]])
-            nn = mm / np.maximum(
-                np.linalg.norm(mm, axis=1, keepdims=True), 1e-30)
-            out = pd.DataFrame({
-                "id": pdf["id"],
-                "cell": np.argmax(nn @ cent_.T, axis=1).astype(np.int32),
-                "vector": list(mm),
-            })
-            if books_ is not None:
-                dsub = books_.shape[2]
-                codes = np.empty((len(nn), len(books_)), dtype=np.int32)
-                for mi, cb in enumerate(books_):
-                    sub = nn[:, mi * dsub:(mi + 1) * dsub]
-                    d2 = -2.0 * (sub @ cb.T) + (cb ** 2).sum(axis=1)[None, :]
-                    codes[:, mi] = np.argmin(d2, axis=1)
-                out["codes"] = list(codes)
-            yield out
-
-    inv = (corpus.select(F.col(c_id).alias("id"),
-                         F.col(c_vec).cast("array<double>").alias("vector"))
-                 .mapInPandas(assign, schema=out_schema))
+    spark = fitted.spark
+    cent, books = fitted.centroids, fitted.codebooks
     # partitionBy("cell") is the point of the whole artifact: a probe of
     # nprobe cells becomes static partition pruning on the read side
-    inv.write.mode("overwrite").partitionBy("cell") \
-       .parquet(os.path.join(path, _CORPUS))
+    fitted.corpus().write.mode("overwrite").partitionBy("cell") \
+        .parquet(os.path.join(path, _CORPUS))
 
     cent_df = spark.createDataFrame(
         [(i, row.tolist()) for i, row in enumerate(cent)],
@@ -147,22 +187,11 @@ def build_ann_index(corpus: DataFrame, path: str, *,
             .coalesce(1).write.mode("overwrite") \
             .parquet(os.path.join(path, _CODEBOOKS))
 
-    meta = {
-        "format_version": _FORMAT_VERSION,
-        "kind": "ivfpq" if books is not None else "ivf",
-        "dim": int(dim),
-        "n_centroids": int(len(cent)),
-        "m_sub": int(m_sub),
-        "ksub": int(books.shape[1]) if books is not None else 0,
-        "seed": int(seed),
-        "train_sample": int(train_sample),
-        "id_col": c_id, "vec_col": c_vec, "id_type": id_t,
-    }
     tmp = os.path.join(path, _META + ".tmp")
     with open(tmp, "w") as f:          # write-then-rename: the commit
-        json.dump(meta, f, indent=1)   # marker appears atomically
+        json.dump(fitted.meta, f, indent=1)  # marker appears atomically
     os.replace(tmp, os.path.join(path, _META))
-    return AnnIndex(spark, path, meta, cent, books)
+    return AnnIndex(spark, path, fitted.meta, cent, books)
 
 
 def _require_local(path: str, op: str) -> None:
@@ -205,48 +234,27 @@ def load_ann_index(spark: SparkSession, path: str) -> AnnIndex:
     return AnnIndex(spark, path, meta, cent, books)
 
 
-def _collect_queries(queries: DataFrame, q_id: str, q_vec: str,
-                     max_queries: int):
-    qrows = queries.select(q_id, q_vec).limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"indexed ANN collects the query side on the driver; got > "
-            f"{max_queries} query rows — batch the query set or raise "
-            f"max_queries explicitly")
-    q_ids = [r[0] for r in qrows]
-    qm = np.asarray([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    if len(qrows):
-        qm = qm / np.maximum(np.linalg.norm(qm, axis=1, keepdims=True),
-                             1e-30)
-    return q_ids, qm
-
-
 def _assign_probes(queries: DataFrame, q_id: str, q_vec: str,
                    centroids: np.ndarray, nprobe: int) -> DataFrame:
     """Distributed probe assignment: broadcast the (tiny) centroid
     matrix and sweep the query frame with one Arrow pass — each query
     row emits its ``nprobe`` nearest cells as ``(query_id, cell, qv)``
-    with ``qv`` unit-normalized.  This is the same broadcast-centroid
-    assignment shape as ``similarity.semantic_dedup``'s cluster pass:
-    the query side NEVER touches the driver, so a multi-million-row
-    daily increment is just another distributed scan."""
+    with ``qv`` unit-normalized.  The query side NEVER touches the
+    driver, so a multi-million-row daily increment is just another
+    distributed scan."""
     spark = queries.sparkSession
     bc = spark.sparkContext.broadcast(centroids)
     npb = min(nprobe, len(centroids))
-    id_t = queries.schema[q_id].dataType.simpleString()
-    out_schema = f"query_id {id_t}, cell int, qv array<double>"
+    out_schema = (f"query_id {_id_type(queries, q_id)}, cell int, "
+                  f"qv array<double>")
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cent = bc.value
         for pdf in batches:
             if pdf.empty:
                 continue
-            qm = np.asarray([np.asarray(v, dtype=np.float64)
-                             for v in pdf["qv"]])
-            qn = qm / np.maximum(
-                np.linalg.norm(qm, axis=1, keepdims=True), 1e-30)
-            sims = qn @ cent.T
-            probes = np.argsort(-sims, axis=1)[:, :npb]    # (q, npb)
+            qn = _unit(_as_matrix(pdf["qv"]))
+            probes = np.argsort(-(qn @ cent.T), axis=1)[:, :npb]  # (q, npb)
             yield pd.DataFrame({
                 "query_id": pdf["query_id"].to_numpy().repeat(npb),
                 "cell": probes.reshape(-1).astype(np.int32),
@@ -259,28 +267,18 @@ def _assign_probes(queries: DataFrame, q_id: str, q_vec: str,
                    .mapInPandas(assign, schema=out_schema))
 
 
-def _empty_result(spark: SparkSession, q_id_type: str,
-                  n_id_type: str) -> DataFrame:
-    """Schema-matched empty frame: query_id carries the QUERY frame's
-    id type and neighbor_id the INDEX's, exactly like the non-empty
-    branch — so a zero-probe day unions cleanly with a normal day."""
-    return spark.createDataFrame(
-        [], f"query_id {q_id_type}, neighbor_id {n_id_type}, "
-            f"cosine double, rank int")
-
-
 def ivf_topk_indexed(queries: DataFrame, index: AnnIndex, k: int = 5, *,
                      q_id: str = "vec_id", q_vec: str = "embedding",
                      nprobe: int = 2, round_to: Optional[int] = 6,
                      broadcast_queries: Optional[bool] = None) -> DataFrame:
-    """IVF search against a prebuilt index, fully distributed on the
-    query side: probe cells come from one broadcast-centroid Arrow
-    assignment pass over the query frame (``_assign_probes`` — no
-    driver collect, so the query side can be a multi-million-row daily
-    increment), the corpus read filters to exactly the probed cells
-    (static partition pruning — the only thing ever collected is the
-    DISTINCT cell list, bounded by ``n_centroids``), and the probed
-    slice verifies with exact JVM cosine + one top-k window.
+    """IVF search, fully distributed on the query side: probe cells
+    come from one broadcast-centroid Arrow assignment pass over the
+    query frame (``_assign_probes`` — no driver collect, so the query
+    side can be a multi-million-row daily increment), the corpus read
+    filters to exactly the probed cells (static partition pruning on a
+    built index — the only thing ever collected is the DISTINCT cell
+    list, bounded by ``n_centroids``), and the probed slice verifies
+    with exact JVM cosine + one top-k window.
 
     ``broadcast_queries=True`` hints the cell join for the serving
     shape (a handful of queries); the default leaves the choice to
@@ -291,7 +289,6 @@ def ivf_topk_indexed(queries: DataFrame, index: AnnIndex, k: int = 5, *,
     which is the oracle gate."""
     from .dedup import _track_intermediates
 
-    spark = index.spark
     # persist the probe table: the distinct-cells collect AND the cell
     # join both read it — without the cache the query-side assignment
     # pass runs twice, and a nondeterministic query source could even
@@ -304,9 +301,8 @@ def ivf_topk_indexed(queries: DataFrame, index: AnnIndex, k: int = 5, *,
     cells = sorted(r[0] for r in qdf.select("cell").distinct().collect())
     if not cells:
         qdf.unpersist()
-        return _empty_result(spark,
-                             queries.schema[q_id].dataType.simpleString(),
-                             index.meta["id_type"])
+        return _empty_topk(index.spark, _id_type(queries, q_id),
+                           index.meta["id_type"])
     # isin on the partition column -> Catalyst prunes unprobed cells'
     # files before any IO happens
     pruned = index.corpus().where(F.col("cell").isin(cells))
@@ -315,148 +311,93 @@ def ivf_topk_indexed(queries: DataFrame, index: AnnIndex, k: int = 5, *,
                    .where(F.col("query_id") != F.col("id"))
                    .withColumn("cosine", _cosine_expr("qv", "vector"))
                    .withColumnRenamed("id", "neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    out = (cands.withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= k)
-                .select("query_id", "neighbor_id",
-                        (F.round("cosine", round_to) if round_to is not None
-                         else F.col("cosine")).alias("cosine"), "rank"))
-    return _track_intermediates(out, qdf)
+    return _track_intermediates(_topk_result(cands, k, round_to), qdf)
 
 
 def pq_topk_indexed(queries: DataFrame, index: AnnIndex, k: int = 5, *,
                     q_id: str = "vec_id", q_vec: str = "embedding",
                     rerank: int = 32, nprobe: Optional[int] = None,
                     round_to: Optional[int] = 6,
-                    max_queries: int = 100_000,
-                    distributed: bool = False) -> DataFrame:
+                    max_queries: int = 100_000) -> DataFrame:
     """PQ/ADC search against prebuilt codes, optionally IVF-PQ: with
     ``nprobe`` set, the ADC scan first prunes to the probed cells
     (partition pruning), then scores codes via per-query lookup tables;
     the exact-cosine rerank re-reads only the Q x rerank candidate ids.
 
+    The query batch is driver-collected (``max_queries`` raises loudly
+    past the cap): its lookup tables are built once and broadcast, and
+    each corpus code batch is scored only against the queries that
+    probed its cell.  ``query_id`` keeps the query frame's id type.
+
     ``nprobe=None`` scans all cells' codes (classic PQ); ``rerank >=
-    |corpus|`` with full probing is exhaustive — the oracle gate.
-
-    Two query-side shapes, identical results (parity-gated in
-    tests/test_ann_index.py):
-
-    * default — the SERVING path: per-query ADC lookup tables are
-      built driver-side and broadcast, the fastest shape for a small
-      query batch (``max_queries`` raises loudly past the cap);
-    * ``distributed=True`` — the INCREMENT path: probe cells come from
-      the same broadcast-centroid Arrow assignment pass as
-      :func:`ivf_topk_indexed`, the cell equi-join routes each coded
-      batch to exactly the queries that probed its cell, and lookup
-      tables are rebuilt executor-side per (query, batch) from the
-      broadcast codebooks (a dim x ksub einsum — trivial next to the
-      code scan).  No driver collect anywhere; the rerank tail joins
-      without forced broadcasts so AQE sizes them."""
+    |corpus|`` with full probing is exhaustive — the oracle gate."""
     if index.codebooks is None:
         raise ValueError(
             "pq_topk_indexed: index was built without PQ codes "
             "(m_sub=0) — rebuild with m_sub > 0 or use ivf_topk_indexed")
     spark = index.spark
-    if distributed:
-        return _pq_topk_distributed(queries, index, k, q_id, q_vec,
-                                    rerank, nprobe, round_to)
-    q_ids, qn = _collect_queries(queries, q_id, q_vec, max_queries)
+    q_t = _id_type(queries, q_id)
+    n_t = index.meta["id_type"]
+    q_ids, qn = _collect_queries(queries, q_id, q_vec, max_queries,
+                                 "pq_topk_indexed")
     if not q_ids:
-        # the driver path COERCES query ids into the index id type (the
-        # qdf literal below is built with it), so both of ITS branches
-        # speak index id_type; the distributed path keeps the query
-        # frame's own type in both of its branches
-        return _empty_result(spark, index.meta["id_type"],
-                             index.meta["id_type"])
+        return _empty_topk(spark, q_t, n_t)
     books = index.codebooks
     m_sub, _, dsub = books.shape
+    # ADC lookup tables: LUT[q, m, j] = dot(q_m, books[m, j])
     lut = np.einsum("qmd,mjd->qmj",
                     qn.reshape(len(q_ids), m_sub, dsub), books)
-    id_t = index.meta["id_type"]
 
     coded = index.corpus()
     cells = None
     cell_queries = None
     if nprobe is not None:
-        sims = qn @ index.centroids.T
-        npb = min(nprobe, sims.shape[1])
-        probes = np.argsort(-sims, axis=1)[:, :npb]
-        cells = sorted({int(c) for row in probes for c in row})
+        probes = np.argsort(-(qn @ index.centroids.T), axis=1)[:, :nprobe]
+        cells = sorted(set(probes.ravel().tolist()))
         coded = coded.where(F.col("cell").isin(cells))
         # per-cell query lists: a batch's rows from cell c are scored
         # ONLY against the queries that probed c — without this, file
         # pruning bounds the IO but every query's lookup table still
         # runs over the probed UNION (Q x N work for divergent probes)
-        cell_queries = {}
-        for qi, row in enumerate(probes):
-            for c in row:
-                cell_queries.setdefault(int(c), []).append(qi)
-        cell_queries = {c: np.asarray(v, dtype=np.int64)
-                        for c, v in cell_queries.items()}
-    bc = spark.sparkContext.broadcast((q_ids, lut, cell_queries))
+        cell_queries = {c: np.flatnonzero((probes == c).any(axis=1))
+                        for c in cells}
+    bc = spark.sparkContext.broadcast(
+        (np.asarray(q_ids, dtype=object), lut, cell_queries))
     keep = ["codes"] + (["cell"] if cells is not None else [])
     coded = coded.select(F.col("id").alias("neighbor_id"), *keep)
 
-    def _emit(ids, tables, qidx, codes, cid):
-        n = codes.shape[0]
-        sims_ = np.zeros((len(qidx), n))
-        sub = tables[qidx]                        # (q', M, K)
-        for mi in range(codes.shape[1]):
-            sims_ += sub[:, mi, codes[:, mi]]
-        kk = min(rerank + 1, n)
-        top = np.argpartition(-sims_, kk - 1, axis=1)[:, :kk] \
-            if kk < n else np.broadcast_to(
-                np.arange(n), (len(qidx), n))
-        out_q, out_c, out_s = [], [], []
-        for row_i, qi in enumerate(qidx):
-            rows = top[row_i]
-            out_q.extend([ids[qi]] * len(rows))
-            out_c.extend(cid[rows].tolist())
-            out_s.extend(sims_[row_i, rows].tolist())
-        return out_q, out_c, out_s
-
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids, tables, per_cell = bc.value          # tables: (Q, M, K)
-        all_q = np.arange(len(ids), dtype=np.int64)
+        all_q = np.arange(len(ids))
         for pdf in batches:
-            if pdf.empty:
-                continue
-            out_q: list = []
-            out_c: list = []
-            out_s: list = []
-            if per_cell is None:
-                groups = [(None, pdf)]
-            else:
-                groups = pdf.groupby("cell", sort=False)
+            groups = [(None, pdf)] if per_cell is None \
+                else pdf.groupby("cell", sort=False)
             for cell, grp in groups:
-                qidx = all_q if per_cell is None \
-                    else per_cell.get(cell)
-                if qidx is None or not len(qidx):
+                qidx = all_q if per_cell is None else per_cell.get(cell)
+                if qidx is None or grp.empty:
                     continue
-                codes = np.asarray([np.asarray(c, dtype=np.int64)
-                                    for c in grp["codes"]])
-                q_, c_, s_ = _emit(ids, tables, qidx, codes,
-                                   grp["neighbor_id"].to_numpy())
-                out_q.extend(q_)
-                out_c.extend(c_)
-                out_s.extend(s_)
-            if out_q:
-                yield pd.DataFrame({"query_id": out_q,
-                                    "neighbor_id": out_c,
-                                    "approx": out_s})
+                codes = np.stack(grp["codes"].to_numpy()).astype(np.int64)
+                n = len(codes)
+                sims = np.zeros((len(qidx), n))
+                sub = tables[qidx]                            # (q', M, K)
+                for mi in range(codes.shape[1]):      # M lookups, no matmul
+                    sims += sub[:, mi, codes[:, mi]]
+                kk = min(rerank + 1, n)               # +1 absorbs self-match
+                top = np.argpartition(-sims, kk - 1, axis=1)[:, :kk] \
+                    if kk < n else np.broadcast_to(np.arange(n), sims.shape)
+                yield pd.DataFrame({
+                    "query_id": np.repeat(ids[qidx], kk),
+                    "neighbor_id": grp["neighbor_id"].to_numpy()[top].ravel(),
+                    "approx": np.take_along_axis(sims, top, 1).ravel()})
 
     cands = coded.mapInPandas(
-        score, schema=f"query_id {id_t}, neighbor_id {id_t}, approx double")
-    wa = Window.partitionBy("query_id").orderBy(
-        F.col("approx").desc(), F.col("neighbor_id").asc())
-    shortlist = (cands.where(F.col("query_id") != F.col("neighbor_id"))
-                      .withColumn("_r", F.row_number().over(wa))
-                      .where(F.col("_r") <= rerank)
-                      .select("query_id", "neighbor_id"))
+        score, schema=f"query_id {q_t}, neighbor_id {n_t}, approx double")
+    shortlist = _rank_within_query(
+        cands.where(F.col("query_id") != F.col("neighbor_id")),
+        "approx", rerank, "_r").select("query_id", "neighbor_id")
     qdf = spark.createDataFrame(
         [(i, v.tolist()) for i, v in zip(q_ids, qn)],
-        f"query_id {id_t}, qv array<double>")
+        f"query_id {q_t}, qv array<double>")
     # the rerank corpus read prunes to the probed cells too — every
     # shortlist id comes from them, and without the filter the join
     # would open every cell's files to read the wide vector column
@@ -468,103 +409,7 @@ def pq_topk_indexed(queries: DataFrame, index: AnnIndex, k: int = 5, *,
     exact = (cv.join(F.broadcast(shortlist), "neighbor_id")
                .join(F.broadcast(qdf), "query_id")
                .withColumn("cosine", _cosine_expr("qv", "cv")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (exact.withColumn("rank", F.row_number().over(w))
-                 .where(F.col("rank") <= k)
-                 .select("query_id", "neighbor_id",
-                         (F.round("cosine", round_to) if round_to is not None
-                          else F.col("cosine")).alias("cosine"), "rank"))
-
-
-def _pq_topk_distributed(queries: DataFrame, index: AnnIndex, k: int,
-                         q_id: str, q_vec: str, rerank: int,
-                         nprobe: Optional[int],
-                         round_to: Optional[int]) -> DataFrame:
-    """Distributed query side for :func:`pq_topk_indexed` (see its
-    docstring).  ``nprobe=None`` assigns every query to every cell —
-    classic all-cells PQ, where the qv fan-out (n_centroids rows per
-    query) is negligible next to the Q x |corpus| code scan it feeds."""
-    from .dedup import _track_intermediates
-
-    spark = index.spark
-    books = index.codebooks
-    m_sub, _, dsub = books.shape
-    n_id_t = index.meta["id_type"]               # corpus/neighbor ids
-    q_id_t = queries.schema[q_id].dataType.simpleString()
-    npb = nprobe if nprobe is not None else len(index.centroids)
-    # persisted: the cells collect, the ADC join, and the rerank's
-    # qv_df all read the probe table — one assignment pass, not three
-    qdf = _assign_probes(queries, q_id, q_vec, index.centroids, npb) \
-        .persist()
-
-    cells = None
-    coded = index.corpus()
-    if nprobe is not None:
-        cells = sorted(r[0] for r in
-                       qdf.select("cell").distinct().collect())
-        if not cells:
-            qdf.unpersist()
-            return _empty_result(spark, q_id_t, n_id_t)
-        coded = coded.where(F.col("cell").isin(cells))
-    joined = (coded.select(F.col("id").alias("neighbor_id"),
-                           "codes", "cell")
-                   .join(qdf, "cell"))
-
-    bcb = spark.sparkContext.broadcast(books)
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        books_ = bcb.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            # one LUT per DISTINCT query in the batch (factorize keeps
-            # first-appearance order, so `firsts` rows line up with the
-            # unique codes), then a fully vectorized gather per row
-            q_codes, uniq = pd.factorize(pdf["query_id"], sort=False)
-            firsts = ~pd.Series(q_codes).duplicated().to_numpy()
-            qmat = np.asarray([np.asarray(v, dtype=np.float64)
-                               for v in pdf["qv"].to_numpy()[firsts]])
-            luts = np.einsum("qmd,mjd->qmj",
-                             qmat.reshape(len(uniq), m_sub, dsub), books_)
-            codes = np.asarray([np.asarray(c, dtype=np.int64)
-                                for c in pdf["codes"]])
-            s = np.zeros(len(pdf))
-            for mi in range(m_sub):
-                s += luts[q_codes, mi, codes[:, mi]]
-            yield pd.DataFrame({
-                "query_id": pdf["query_id"].to_numpy(),
-                "neighbor_id": pdf["neighbor_id"].to_numpy(),
-                "approx": s})
-
-    cands = joined.mapInPandas(
-        score,
-        schema=f"query_id {q_id_t}, neighbor_id {n_id_t}, approx double")
-    wa = Window.partitionBy("query_id").orderBy(
-        F.col("approx").desc(), F.col("neighbor_id").asc())
-    shortlist = (cands.where(F.col("query_id") != F.col("neighbor_id"))
-                      .withColumn("_r", F.row_number().over(wa))
-                      .where(F.col("_r") <= rerank)
-                      .select("query_id", "neighbor_id"))
-    qv_df = qdf.select("query_id", "qv").dropDuplicates(["query_id"])
-    cv = index.corpus()
-    if cells is not None:
-        cv = cv.where(F.col("cell").isin(cells))
-    cv = cv.select(F.col("id").alias("neighbor_id"),
-                   F.col("vector").alias("cv"))
-    # no forced broadcasts: shortlist is Q x rerank and qv_df is Q rows
-    # — AQE converts to broadcast when they turn out small
-    exact = (cv.join(shortlist, "neighbor_id")
-               .join(qv_df, "query_id")
-               .withColumn("cosine", _cosine_expr("qv", "cv")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    out = (exact.withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= k)
-                .select("query_id", "neighbor_id",
-                        (F.round("cosine", round_to) if round_to is not None
-                         else F.col("cosine")).alias("cosine"), "rank"))
-    return _track_intermediates(out, qdf)
+    return _topk_result(exact, k, round_to)
 
 
 def incremental_embedding_dedup(new_docs: DataFrame, index: AnnIndex,

@@ -1,6 +1,5 @@
 """Approximate-nearest-neighbor search over an embedding column.
 
-Two paths:
 * ``brute_force_topk`` — exact cosine top-k.  Queries are broadcast (the
   small side) and the corpus streams once; the dot products run inside a
   numpy matmul over Arrow batches (mapInPandas), giving BLAS throughput,
@@ -8,20 +7,29 @@ Two paths:
   small shuffle of (batches x queries x k) candidate rows.
 * ``lsh_topk`` — scale path: random-hyperplane bucketing restricts each
   query to its own (multi-probed) bucket; same verification arithmetic.
+* ``ivf_topk`` / ``pq_topk`` — refit-per-call IVF and PQ/ADC: an
+  in-memory fit of the ``operators/ann_index.py`` index followed by its
+  ``ivf_topk_indexed`` / ``pq_topk_indexed`` search, so the one-shot and
+  the build-once/query-many shapes share the sample, training,
+  assignment, scoring and rerank code.
 
 A pure-JVM variant (``brute_force_topk_sql``) using
 ``F.zip_with``/``F.aggregate`` exists for oracle parity — Catalyst
 evaluates it without Python, which is the right call when k and the
 query count are tiny.
+
+The training helpers (:func:`_train_sample`, :func:`_kmeans_fit`,
+:func:`_pq_fit`) and the shared top-k tail live here; ``ann_index``
+and :func:`semantic_dedup` build on them.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Iterable, Iterator, Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 
 def _cosine_expr(a: str, b: str):
@@ -36,6 +44,68 @@ def _cosine_expr(a: str, b: str):
     return dot / F.sqrt(sq(a) * sq(b))
 
 
+def _as_matrix(vecs: Iterable) -> np.ndarray:
+    """Stack array-valued cells into one float64 (rows x dim) matrix."""
+    return np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
+
+
+def _unit(m: np.ndarray) -> np.ndarray:
+    """Row-normalize (zero rows stay zero)."""
+    return m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-30)
+
+
+def _rank_within_query(df: DataFrame, score: str, n: int,
+                       rank: str = "rank") -> DataFrame:
+    """Each query's top ``n`` rows by ``score`` (ties to the lower
+    neighbor_id), numbered 1..n in ``rank``."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score).desc(), F.col("neighbor_id").asc())
+    return df.withColumn(rank, F.row_number().over(w)) \
+             .where(F.col(rank) <= n)
+
+
+def _topk_result(scored: DataFrame, k: int,
+                 round_to: Optional[int]) -> DataFrame:
+    """The tail every top-k path ends in: rank by exact ``cosine``,
+    keep ``k`` per query, round."""
+    cos = F.round("cosine", round_to) if round_to is not None \
+        else F.col("cosine")
+    return _rank_within_query(scored, "cosine", k).select(
+        "query_id", "neighbor_id", cos.alias("cosine"), "rank")
+
+
+def _empty_topk(spark: SparkSession, q_id_type: str,
+                n_id_type: str) -> DataFrame:
+    """Schema-matched empty result: query_id carries the QUERY frame's
+    id type and neighbor_id the corpus's, exactly like a non-empty
+    result — so an empty day unions cleanly with a normal day."""
+    return spark.createDataFrame(
+        [], f"query_id {q_id_type}, neighbor_id {n_id_type}, "
+            f"cosine double, rank int")
+
+
+def _id_type(df: DataFrame, col: str) -> str:
+    return df.schema[col].dataType.simpleString()
+
+
+def _collect_queries(queries: DataFrame, q_id: str, q_vec: str,
+                     max_queries: int, op: str):
+    """Driver-collect the (small) query side as ids + unit-normalized
+    vectors.  Fails loudly on misuse instead of silently OOMing the
+    driver; the limit bounds what one job can pull even when the check
+    trips."""
+    qrows = queries.select(q_id, q_vec).limit(max_queries + 1).collect()
+    if len(qrows) > max_queries:
+        raise ValueError(
+            f"{op} collects the query side on the driver; got > "
+            f"{max_queries} query rows — use ivf_topk/ivf_topk_indexed "
+            f"for a large query set, batch it, or raise max_queries "
+            f"explicitly")
+    q_ids = [r[0] for r in qrows]
+    qn = _unit(_as_matrix(r[1] for r in qrows)) if qrows else None
+    return q_ids, qn
+
+
 def brute_force_topk_sql(queries: DataFrame, corpus: DataFrame, k: int = 5,
                          q_id: str = "vec_id", c_id: str = "vec_id",
                          q_vec: str = "embedding", c_vec: str = "embedding",
@@ -46,14 +116,7 @@ def brute_force_topk_sql(queries: DataFrame, corpus: DataFrame, k: int = 5,
     scored = (c.crossJoin(F.broadcast(q))
                .where(F.col("query_id") != F.col("neighbor_id"))
                .withColumn("cosine", _cosine_expr("qv", "cv")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    out = (scored.withColumn("rank", F.row_number().over(w))
-                 .where(F.col("rank") <= k)
-                 .select("query_id", "neighbor_id",
-                         (F.round("cosine", round_to) if round_to is not None
-                          else F.col("cosine")).alias("cosine"), "rank"))
-    return out
+    return _topk_result(scored, k, round_to)
 
 
 def brute_force_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
@@ -65,24 +128,13 @@ def brute_force_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
     dense matrix; each corpus Arrow batch contributes its local top-k per
     query; a final per-query window reduces to the global top-k."""
     spark = queries.sparkSession
-    qf_t = queries.schema[q_id].dataType.simpleString()
-    cf_t = corpus.schema[c_id].dataType.simpleString()
-    # contract: queries are the SMALL side (driver-collected + broadcast).
-    # Fail loudly on misuse instead of silently OOMing the driver; the
-    # limit bounds what one job can pull even when the check trips.
-    qrows = queries.select(q_id, q_vec).limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"brute_force_topk collects the query side on the driver; got "
-            f"> {max_queries} query rows — use lsh_topk/ivf_topk for a "
-            f"large query set (or raise max_queries explicitly)")
-    if not qrows:
-        return spark.createDataFrame(
-            [], f"query_id {qf_t}, neighbor_id {cf_t}, "
-                f"cosine double, rank int")
-    q_ids = [r[0] for r in qrows]
-    qm = np.asarray([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    qn = qm / np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-30)
+    qf_t = _id_type(queries, q_id)
+    cf_t = _id_type(corpus, c_id)
+    # contract: queries are the SMALL side (driver-collected + broadcast)
+    q_ids, qn = _collect_queries(queries, q_id, q_vec, max_queries,
+                                 "brute_force_topk")
+    if not q_ids:
+        return _empty_topk(spark, qf_t, cf_t)
     bc = spark.sparkContext.broadcast((q_ids, qn))
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -91,10 +143,7 @@ def brute_force_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
         for pdf in batches:
             if pdf.empty:
                 continue
-            cm = np.asarray([np.asarray(v, dtype=np.float64)
-                             for v in pdf["cv"]])
-            cn = cm / np.maximum(np.linalg.norm(cm, axis=1, keepdims=True), 1e-30)
-            sims = cn @ qmat.T  # (batch, nq)
+            sims = _unit(_as_matrix(pdf["cv"])) @ qmat.T  # (batch, nq)
             cid = pdf["neighbor_id"].to_numpy()
             kk = min(k + 1, len(cid))  # +1 allows dropping self-matches later
             top = np.argpartition(-sims, kk - 1, axis=0)[:kk]  # (kk, nq)
@@ -108,19 +157,10 @@ def brute_force_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
                                 "cosine": out_s})
 
     c = corpus.select(F.col(c_id).alias("neighbor_id"), F.col(c_vec).alias("cv"))
-    qf = queries.select(F.col(q_id).alias("query_id")).schema["query_id"]
-    cf = c.schema["neighbor_id"]
-    schema = f"query_id {qf.dataType.simpleString()}, " \
-             f"neighbor_id {cf.dataType.simpleString()}, cosine double"
-    cands = c.mapInPandas(score, schema=schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (cands.where(F.col("query_id") != F.col("neighbor_id"))
-                 .withColumn("rank", F.row_number().over(w))
-                 .where(F.col("rank") <= k)
-                 .select("query_id", "neighbor_id",
-                         (F.round("cosine", round_to) if round_to is not None
-                          else F.col("cosine")).alias("cosine"), "rank"))
+    cands = c.mapInPandas(
+        score, schema=f"query_id {qf_t}, neighbor_id {cf_t}, cosine double")
+    return _topk_result(
+        cands.where(F.col("query_id") != F.col("neighbor_id")), k, round_to)
 
 
 def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
@@ -138,22 +178,16 @@ def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
     queries = queries.where(F.col(q_vec).isNotNull())
     dim_row = corpus.select(F.size(c_vec).alias("d")).first()
     if dim_row is None or dim_row["d"] is None:
-        return (queries.select(F.col(q_id).alias("query_id")).limit(0)
-                .crossJoin(corpus.select(F.col(c_id).alias("neighbor_id"))
-                           .limit(0))
-                .withColumn("cosine", F.lit(0.0))
-                .withColumn("rank", F.lit(1)))
+        return _empty_topk(corpus.sparkSession, _id_type(queries, q_id),
+                           _id_type(corpus, c_id))
     dim = int(dim_row["d"])
     rng = np.random.default_rng(seed)
     mat = rng.standard_normal((dim, planes))
 
     @pandas_udf("int")
     def code_udf(vecs: pd.Series) -> pd.Series:
-        m = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
-        if m.size == 0:
-            return pd.Series(np.zeros(0, dtype=np.int32))
-        bits = (m @ mat) > 0
-        codes = np.zeros(len(m), dtype=np.int64)
+        bits = (_as_matrix(vecs).reshape(len(vecs), dim) @ mat) > 0
+        codes = np.zeros(len(vecs), dtype=np.int64)
         for b in range(planes):
             codes |= bits[:, b].astype(np.int64) << b
         return pd.Series(codes.astype(np.int32))
@@ -172,13 +206,27 @@ def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
               .where(F.col("query_id") != F.col("neighbor_id"))
               .withColumn("cosine", _cosine_expr("qv", "cv"))
               .dropDuplicates(["query_id", "neighbor_id"]))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (cands.withColumn("rank", F.row_number().over(w))
-                 .where(F.col("rank") <= k)
-                 .select("query_id", "neighbor_id",
-                         (F.round("cosine", round_to) if round_to is not None
-                          else F.col("cosine")).alias("cosine"), "rank"))
+    return _topk_result(cands, k, round_to)
+
+
+def _train_sample(corpus: DataFrame, c_id: str, c_vec: str, seed: int,
+                  n: int) -> np.ndarray:
+    """The training sample every fit uses, unit-normalized ((0, 0) on
+    an empty corpus).
+
+    Deterministic AND unbiased: a bare limit() is whatever partitions
+    answer first (run-to-run nondeterminism), and ordering by the raw
+    id would bias training toward the oldest vectors when ids correlate
+    with ingestion time/content drift.  TakeOrdered on a hash of the id
+    is a single O(n log sample) scan (no full sort shuffle) that
+    samples uniformly and reproducibly."""
+    rows = (corpus.select(c_id, c_vec)
+            .orderBy(F.xxhash64(F.col(c_id).cast("string"), F.lit(seed)),
+                     F.col(c_id))
+            .limit(n).collect())
+    if not rows:
+        return np.empty((0, 0))
+    return _unit(_as_matrix(r[1] for r in rows))
 
 
 def _kmeans_fit(sample: np.ndarray, n_centroids: int, seed: int,
@@ -197,90 +245,6 @@ def _kmeans_fit(sample: np.ndarray, n_centroids: int, seed: int,
                 m = members.mean(axis=0)
                 cent[ci] = m / max(np.linalg.norm(m), 1e-30)
     return cent
-
-
-def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
-             q_id: str = "vec_id", c_id: str = "vec_id",
-             q_vec: str = "embedding", c_vec: str = "embedding",
-             n_centroids: int = 16, nprobe: int = 2, seed: int = 7,
-             train_sample: int = 4096,
-             round_to: Optional[int] = 6) -> DataFrame:
-    """IVF (inverted-file) ANN — the classic scale path:
-
-    1. TRAIN: spherical k-means on a driver-collected sample (seeded,
-       deterministic) gives ``n_centroids`` coarse cells; the centroid
-       matrix is broadcast (tiny: n_centroids x dim).
-    2. ASSIGN: one vectorized pandas UDF maps every corpus row to its
-       nearest-centroid cell id — the inverted file is just a column,
-       so at 100 TB it lives with the data (partition/cluster by it)
-       and never materializes driver-side.
-    3. PROBE: each query expands to its ``nprobe`` closest cells
-       (explode), the candidate join is an equi-join on cell id
-       (queries broadcast), and exact cosine + window rank verify.
-
-    ``nprobe == n_centroids`` degenerates to exact brute force, which is
-    the oracle gate; recall grows with nprobe at cost proportional to
-    the probed fraction of the corpus."""
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    spark = corpus.sparkSession
-    # deterministic AND unbiased training sample: a bare limit() is
-    # whatever partitions answer first (run-to-run nondeterminism), and
-    # ordering by the raw id would bias training toward the oldest
-    # vectors when ids correlate with ingestion time/content drift.
-    # TakeOrdered on a hash of the id is a single O(n log sample) scan
-    # (no full sort shuffle) that samples uniformly and reproducibly.
-    samp = (corpus.select(c_id, c_vec)
-            .orderBy(F.xxhash64(F.col(c_id).cast("string"), F.lit(seed)),
-                     F.col(c_id))
-            .limit(train_sample).collect())
-    if not samp:
-        return spark.createDataFrame(
-            [], f"query_id {queries.schema[q_id].dataType.simpleString()}, "
-                f"neighbor_id {corpus.schema[c_id].dataType.simpleString()}, "
-                f"cosine double, rank int")
-    m = np.asarray([np.asarray(r[1], dtype=np.float64) for r in samp])
-    m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-30)
-    cent = _kmeans_fit(m, n_centroids, seed)
-    bc = spark.sparkContext.broadcast(cent)
-
-    @pandas_udf("int")
-    def cell_udf(vecs: pd.Series) -> pd.Series:
-        c = bc.value
-        mm = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
-        if mm.size == 0:
-            return pd.Series(np.zeros(0, dtype=np.int32))
-        mm = mm / np.maximum(np.linalg.norm(mm, axis=1, keepdims=True), 1e-30)
-        return pd.Series(np.argmax(mm @ c.T, axis=1).astype(np.int32))
-
-    @pandas_udf("array<int>")
-    def probe_udf(vecs: pd.Series) -> pd.Series:
-        c = bc.value
-        mm = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
-        if mm.size == 0:
-            return pd.Series([])
-        mm = mm / np.maximum(np.linalg.norm(mm, axis=1, keepdims=True), 1e-30)
-        sims = mm @ c.T
-        npb = min(nprobe, sims.shape[1])
-        top = np.argsort(-sims, axis=1)[:, :npb]
-        return pd.Series([row.astype(np.int32).tolist() for row in top])
-
-    c = corpus.select(F.col(c_id).alias("neighbor_id"),
-                      F.col(c_vec).alias("cv"),
-                      cell_udf(F.col(c_vec)).alias("cell"))
-    q = queries.select(F.col(q_id).alias("query_id"),
-                       F.col(q_vec).alias("qv"),
-                       F.explode(probe_udf(F.col(q_vec))).alias("cell"))
-    cands = (c.join(F.broadcast(q), "cell")
-              .where(F.col("query_id") != F.col("neighbor_id"))
-              .withColumn("cosine", _cosine_expr("qv", "cv")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (cands.withColumn("rank", F.row_number().over(w))
-                 .where(F.col("rank") <= k)
-                 .select("query_id", "neighbor_id",
-                         (F.round("cosine", round_to) if round_to is not None
-                          else F.col("cosine")).alias("cosine"), "rank"))
 
 
 def _pq_fit(sample: np.ndarray, m_sub: int, ksub: int,
@@ -315,6 +279,45 @@ def _pq_fit(sample: np.ndarray, m_sub: int, ksub: int,
     return np.asarray(books)
 
 
+def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
+             q_id: str = "vec_id", c_id: str = "vec_id",
+             q_vec: str = "embedding", c_vec: str = "embedding",
+             n_centroids: int = 16, nprobe: int = 2, seed: int = 7,
+             train_sample: int = 4096,
+             round_to: Optional[int] = 6) -> DataFrame:
+    """IVF (inverted-file) ANN, refit on every call — the classic scale
+    path for one-shot passes:
+
+    1. TRAIN: spherical k-means on the deterministic driver sample gives
+       ``n_centroids`` coarse cells; the centroid matrix is broadcast
+       (tiny: n_centroids x dim).
+    2. ASSIGN: one Arrow pass maps every corpus row to its
+       nearest-centroid cell id — the inverted file is just a column,
+       so at 100 TB it lives with the data and never materializes
+       driver-side.
+    3. PROBE: each query expands to its ``nprobe`` closest cells, the
+       candidate join is an equi-join on cell id (queries broadcast),
+       and exact cosine + window rank verify.
+
+    Steps 1-2 are the in-memory fit of ``ann_index.build_ann_index``
+    and step 3 is :func:`~aloha_spark.operators.ann_index.ivf_topk_indexed`,
+    so this equals querying an index built with the same parameters.
+    ``nprobe == n_centroids`` degenerates to exact brute force, which is
+    the oracle gate; recall grows with nprobe at cost proportional to
+    the probed fraction of the corpus.  An empty corpus gives an empty
+    result."""
+    from .ann_index import _fit, ivf_topk_indexed
+
+    index = _fit(corpus, c_id, c_vec, n_centroids=n_centroids, m_sub=0,
+                 ksub=0, seed=seed, train_sample=train_sample)
+    if index is None:
+        return _empty_topk(corpus.sparkSession, _id_type(queries, q_id),
+                           _id_type(corpus, c_id))
+    return ivf_topk_indexed(queries, index, k, q_id=q_id, q_vec=q_vec,
+                            nprobe=nprobe, round_to=round_to,
+                            broadcast_queries=True)
+
+
 def pq_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
             q_id: str = "vec_id", c_id: str = "vec_id",
             q_vec: str = "embedding", c_vec: str = "embedding",
@@ -323,137 +326,44 @@ def pq_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
             round_to: Optional[int] = 6,
             max_queries: int = 100_000) -> DataFrame:
     """Product-quantization ANN with asymmetric-distance scoring and an
-    exact rerank tail — the memory-bound scale path IVF cannot give:
+    exact rerank tail, refit on every call — the memory-bound scale path
+    IVF cannot give:
 
-    1. TRAIN: per-subspace L2 k-means codebooks on a deterministic
-       driver sample (same unbiased xxhash64 TakeOrdered sample as
-       :func:`ivf_topk`); codebooks are (m_sub x ksub x dim/m_sub) —
+    1. TRAIN: per-subspace L2 k-means codebooks on the deterministic
+       driver sample; codebooks are (m_sub x ksub x dim/m_sub) —
        kilobytes, broadcast.
-    2. ENCODE: one vectorized pandas UDF compresses every corpus
-       vector to ``m_sub`` small codes.  THIS is the 100 TB story: a
-       768-dim float32 embedding (3 KB) becomes m_sub bytes, so the
-       scan that scores 10^11 vectors reads ~100x less and the raw
-       vectors never ride any shuffle — only the code column does.
+    2. ENCODE: one Arrow pass compresses every corpus vector to
+       ``m_sub`` small codes.  THIS is the 100 TB story: a 768-dim
+       float32 embedding (3 KB) becomes m_sub bytes, so the scan that
+       scores 10^11 vectors reads ~100x less.
     3. SCORE (ADC): dot(q, reconstruct(x)) == sum_m dot(q_m, c[m,
-       code_m]), so a per-query lookup table LUT[q, m, j] = q_m . c[m,
-       j] computed ONCE driver-side (Q x m_sub x ksub, broadcast)
-       turns scoring into m_sub table lookups per vector — no
-       floating-point vector math in the scan.  mapInPandas streams
-       corpus code batches, keeps a per-batch top-``rerank`` per query
-       (map-side combine), and emits ids+approx only.
+       code_m]), so per-query lookup tables LUT[q, m, j] = q_m . c[m, j]
+       computed ONCE driver-side (broadcast) turn scoring into m_sub
+       table lookups per vector, with a per-batch top-``rerank`` per
+       query (map-side combine).
     4. RERANK: global top-``rerank`` by approx (one window), re-attach
-       true vectors (broadcast candidate-id semi-join — the candidate
-       set is Q x rerank rows), exact cosine, final top-k window.
+       true vectors for the Q x rerank candidate set, exact cosine,
+       final top-k window.
 
-    ``rerank >= |corpus|`` is exhaustive (every vector reranked
-    exactly) — that configuration gates the machinery against the
-    brute-force oracle; recall at realistic ``rerank`` is measured in
-    tests.  Queries are the driver-collected small side (same
+    Steps 1-2 are the in-memory fit of ``ann_index.build_ann_index``
+    (one cell) and steps 3-4 are
+    :func:`~aloha_spark.operators.ann_index.pq_topk_indexed` with
+    ``nprobe=None``.  ``rerank >= |corpus|`` is exhaustive (every vector
+    reranked exactly) — that configuration gates the machinery against
+    the brute-force oracle; recall at realistic ``rerank`` is measured
+    in tests.  Queries are the driver-collected small side (same
     ``max_queries`` loud-failure contract as :func:`brute_force_topk`).
-    """
-    from pyspark.sql.pandas.functions import pandas_udf
+    An empty corpus gives an empty result."""
+    from .ann_index import _fit, pq_topk_indexed
 
-    spark = corpus.sparkSession
-    qf_t = queries.schema[q_id].dataType.simpleString()
-    cf_t = corpus.schema[c_id].dataType.simpleString()
-    qrows = queries.select(q_id, q_vec).limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"pq_topk collects the query side on the driver; got > "
-            f"{max_queries} query rows — raise max_queries explicitly "
-            f"or batch the query set")
-    empty = spark.createDataFrame(
-        [], f"query_id {qf_t}, neighbor_id {cf_t}, cosine double, rank int")
-    if not qrows:
-        return empty
-    samp = (corpus.select(c_id, c_vec)
-            .orderBy(F.xxhash64(F.col(c_id).cast("string"), F.lit(seed)),
-                     F.col(c_id))
-            .limit(train_sample).collect())
-    if not samp:
-        return empty
-    m = np.asarray([np.asarray(r[1], dtype=np.float64) for r in samp])
-    m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-30)
-    books = _pq_fit(m, m_sub, ksub, seed)          # (M, K, dsub)
-    dsub = books.shape[2]
-
-    q_ids = [r[0] for r in qrows]
-    qm = np.asarray([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    qn = qm / np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-30)
-    # ADC lookup tables: LUT[q, m, j] = dot(q_m, books[m, j])
-    lut = np.einsum("qmd,mjd->qmj",
-                    qn.reshape(len(q_ids), m_sub, dsub), books)
-    bc = spark.sparkContext.broadcast((q_ids, lut))
-    bc_books = spark.sparkContext.broadcast(books)
-
-    @pandas_udf("array<int>")
-    def encode_udf(vecs: pd.Series) -> pd.Series:
-        bks = bc_books.value
-        mm = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
-        if mm.size == 0:
-            return pd.Series([])
-        mm = mm / np.maximum(np.linalg.norm(mm, axis=1, keepdims=True),
-                             1e-30)
-        n = mm.shape[0]
-        codes = np.empty((n, len(bks)), dtype=np.int32)
-        for mi, cent in enumerate(bks):
-            sub = mm[:, mi * dsub:(mi + 1) * dsub]
-            d2 = -2.0 * (sub @ cent.T) + (cent ** 2).sum(axis=1)[None, :]
-            codes[:, mi] = np.argmin(d2, axis=1)
-        return pd.Series(list(codes))
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, tables = bc.value                    # tables: (Q, M, K)
-        nq = len(ids)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            codes = np.asarray([np.asarray(c, dtype=np.int64)
-                                for c in pdf["codes"]])    # (N, M)
-            n = codes.shape[0]
-            sims = np.zeros((nq, n))
-            for mi in range(codes.shape[1]):      # M lookups, no matmul
-                sims += tables[:, mi, codes[:, mi]]
-            cid = pdf["neighbor_id"].to_numpy()
-            kk = min(rerank + 1, n)               # +1 absorbs self-match
-            top = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-            out_q, out_c, out_s = [], [], []
-            for qi in range(nq):
-                rows = top[qi]
-                out_q.extend([ids[qi]] * len(rows))
-                out_c.extend(cid[rows].tolist())
-                out_s.extend(sims[qi, rows].tolist())
-            yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_c,
-                                "approx": out_s})
-
-    coded = corpus.select(F.col(c_id).alias("neighbor_id"),
-                          encode_udf(F.col(c_vec)).alias("codes"))
-    cands = coded.mapInPandas(
-        score, schema=f"query_id {qf_t}, neighbor_id {cf_t}, approx double")
-    wa = Window.partitionBy("query_id").orderBy(
-        F.col("approx").desc(), F.col("neighbor_id").asc())
-    shortlist = (cands.where(F.col("query_id") != F.col("neighbor_id"))
-                      .withColumn("_r", F.row_number().over(wa))
-                      .where(F.col("_r") <= rerank)
-                      .select("query_id", "neighbor_id"))
-    # rerank: exact cosine over the Q x rerank candidate set only; the
-    # corpus side is pruned with a broadcast join on neighbor_id, and
-    # query vectors re-attach from the already-collected driver copy
-    qdf = spark.createDataFrame(
-        [(i, v.tolist()) for i, v in zip(q_ids, qn)],
-        f"query_id {qf_t}, qv array<double>")
-    cv = corpus.select(F.col(c_id).alias("neighbor_id"),
-                       F.col(c_vec).alias("cv"))
-    exact = (cv.join(F.broadcast(shortlist), "neighbor_id")
-               .join(F.broadcast(qdf), "query_id")
-               .withColumn("cosine", _cosine_expr("qv", "cv")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (exact.withColumn("rank", F.row_number().over(w))
-                 .where(F.col("rank") <= k)
-                 .select("query_id", "neighbor_id",
-                         (F.round("cosine", round_to) if round_to is not None
-                          else F.col("cosine")).alias("cosine"), "rank"))
+    index = _fit(corpus, c_id, c_vec, n_centroids=1, m_sub=m_sub, ksub=ksub,
+                 seed=seed, train_sample=train_sample)
+    if index is None:
+        return _empty_topk(corpus.sparkSession, _id_type(queries, q_id),
+                           _id_type(corpus, c_id))
+    return pq_topk_indexed(queries, index, k, q_id=q_id, q_vec=q_vec,
+                           rerank=rerank, round_to=round_to,
+                           max_queries=max_queries)
 
 
 def semantic_dedup(corpus: DataFrame, id_col: str = "vec_id",
@@ -472,12 +382,12 @@ def semantic_dedup(corpus: DataFrame, id_col: str = "vec_id",
     Returns one row per input vector:
     ``(id, cluster, centroid_sim, keep)``.
 
-    100 TB story: k-means is fit driver-side on a deterministic
-    uniform sample (same protocol as :func:`ivf_topk`) and the centroid
-    matrix broadcasts; assignment is one Arrow pass.  The quadratic
-    stage only ever sees ONE CLUSTER at a time (applyInPandas over the
-    cluster id), so ``n_clusters`` is chosen to make E[cluster size]
-    manageable (the paper used ~50k clusters for 100M items).  A
+    100 TB story: k-means is fit driver-side on the deterministic
+    uniform sample (:func:`_train_sample`, as for :func:`ivf_topk`) and
+    the centroid matrix broadcasts; assignment is one Arrow pass.  The
+    quadratic stage only ever sees ONE CLUSTER at a time (applyInPandas
+    over the cluster id), so ``n_clusters`` is chosen to make E[cluster
+    size] manageable (the paper used ~50k clusters for 100M items).  A
     degenerate hot cluster is bounded by ``max_cluster_size``: overflow
     clusters split deterministically into hash sub-shards that dedup
     independently — bounded memory at a disclosed recall cost on the
@@ -486,33 +396,21 @@ def semantic_dedup(corpus: DataFrame, id_col: str = "vec_id",
     O(m^2) flops worst case but BLAS-fast and bounded by the cap.
     """
     spark = corpus.sparkSession
-    id_t = corpus.schema[id_col].dataType.simpleString()
+    id_t = _id_type(corpus, id_col)
+    out_schema = (f"{id_col} {id_t}, cluster int, centroid_sim double, "
+                  f"keep boolean")
 
-    samp = (corpus.select(id_col, vec)
-            .orderBy(F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)),
-                     F.col(id_col))
-            .limit(train_sample).collect())
-    if not samp:
-        return spark.createDataFrame(
-            [], f"{id_col} {id_t}, cluster int, centroid_sim double, "
-                f"keep boolean")
-    m = np.asarray([np.asarray(r[1], dtype=np.float64) for r in samp])
-    m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-30)
-    cent = _kmeans_fit(m, n_clusters, seed)
-    bc = spark.sparkContext.broadcast(cent)
+    sample = _train_sample(corpus, id_col, vec, seed, train_sample)
+    if not len(sample):
+        return spark.createDataFrame([], out_schema)
+    bc = spark.sparkContext.broadcast(_kmeans_fit(sample, n_clusters, seed))
+    dim = sample.shape[1]
 
     from pyspark.sql.pandas.functions import pandas_udf
 
     @pandas_udf("struct<cluster:int, centroid_sim:double>")
     def assign(vecs: pd.Series) -> pd.DataFrame:
-        c = bc.value
-        mm = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
-        if mm.size == 0:
-            return pd.DataFrame({"cluster": pd.Series(dtype="int32"),
-                                 "centroid_sim": pd.Series(dtype="float64")})
-        mm = mm / np.maximum(np.linalg.norm(mm, axis=1, keepdims=True),
-                             1e-30)
-        sims = mm @ c.T
+        sims = _unit(_as_matrix(vecs).reshape(len(vecs), dim)) @ bc.value.T
         best = np.argmax(sims, axis=1)
         return pd.DataFrame({
             "cluster": best.astype(np.int32),
@@ -540,16 +438,10 @@ def semantic_dedup(corpus: DataFrame, id_col: str = "vec_id",
                                      F.lit(seed + 1)),
                           F.col("_nsub")).cast("int")))
 
-    out_schema = (f"{id_col} {id_t}, cluster int, centroid_sim double, "
-                  f"keep boolean")
-
     def dedup_group(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(
             ["centroid_sim", id_col]).reset_index(drop=True)
-        vv = np.asarray([np.asarray(v, dtype=np.float64)
-                         for v in pdf[vec]])
-        vv = vv / np.maximum(np.linalg.norm(vv, axis=1, keepdims=True),
-                             1e-30)
+        vv = _unit(_as_matrix(pdf[vec]))
         keep = np.zeros(len(pdf), dtype=bool)
         kept_rows = []
         for i in range(len(pdf)):

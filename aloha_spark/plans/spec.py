@@ -487,12 +487,20 @@ def try_compile_vbatch(parsed: ParsedSpec):
 # ---------------------------------------------------------------------------
 # Column tier
 
+def _null_in_null_out(fn):
+    """Spark's ``greatest``/``least`` skip NULL arguments; a spec
+    function of a NULL is NULL (a missing feature) instead."""
+    return lambda *args: F.when(
+        ~F.greatest(*[a.isNull() for a in args]), fn(*args))
+
+
 _COLUMN_FNS = {
-    "clamp": lambda x, lo, hi: F.least(F.greatest(x, lo), hi),
+    "clamp": _null_in_null_out(
+        lambda x, lo, hi: F.least(F.greatest(x, lo), hi)),
     "log2": lambda x: F.log2(x),
     "abs": lambda x: F.abs(x),
-    "min": lambda a, b: F.least(a, b),
-    "max": lambda a, b: F.greatest(a, b),
+    "min": _null_in_null_out(F.least),
+    "max": _null_in_null_out(F.greatest),
     "gtLt": lambda x, lo, hi: (lo < x) & (x < hi),
     "gtLe": lambda x, lo, hi: (lo < x) & (x <= hi),
     "geLt": lambda x, lo, hi: (lo <= x) & (x < hi),

@@ -271,10 +271,9 @@ BENCH_QUERIES = [
     "asof_tolerance", "top_docs",
     # round 5: exact Misra-Gries heavy hitters (unigram + bigram modes;
     # long-tail vocabulary never shuffles), train/eval split-leakage
-    # audit, and the distributed PQ query path (executor-side probe
-    # assignment + per-batch ADC lookup tables)
+    # audit, and the PQ search against a prebuilt index
     "heavy_hitters", "heavy_hitters_bigrams", "split_leakage",
-    "ann_topk_pq_dist",
+    "ann_topk_pq_indexed",
 ]
 
 

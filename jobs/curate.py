@@ -425,6 +425,9 @@ def curate(spark, args):
             x.select(id_col, text_col), id_col=id_col, text=text_col,
             threshold=args.neardup_threshold, num_hashes=args.num_hashes,
             bands=args.bands, shingle_n=args.shingle_n)
+        # cached: the components pass and the report's pair count both
+        # read it, and each uncached read re-runs the Jaccard verify
+        pairs = pairs.persist()
         x = dedup_keep_canonical(x, pairs, id_col=id_col)
         checkpoint("neardup_dedup")
     if args.dsir_target:
@@ -795,6 +798,7 @@ def main(argv=None):
     x.unpersist()
     release_intermediates(x)      # the components label cache
     if pairs is not None:
+        pairs.unpersist()
         release_intermediates(pairs)
     report.update({
         "written_buckets": len(wr.written_buckets),

@@ -100,6 +100,34 @@ class TestExactness:
                         train_sample=N)
         assert _pairs(got) == _pairs(want)
 
+    def test_inline_pq_parity(self, spark, embs, index):
+        """Indexed all-cells PQ == the refit-per-call operator with the
+        same codebook params, exhaustive and at a narrow shortlist."""
+        from aloha_spark.operators.similarity import pq_topk
+        q = embs.where("vec_id < 6")
+        for rerank in (N, 50):
+            got = pq_topk_indexed(q, index, k=3, rerank=rerank, nprobe=None)
+            want = pq_topk(q, embs, k=3, m_sub=4, ksub=16, rerank=rerank,
+                           seed=7, train_sample=N)
+            assert _pairs(got) == _pairs(want), rerank
+
+    def test_string_query_ids_keep_their_type(self, spark, embs, index):
+        """Both indexed searches return query_id in the QUERY frame's
+        type — on results and on empty results alike."""
+        q = embs.where("vec_id < 5").select(
+            F.col("vec_id").cast("string").alias("vec_id"), "embedding")
+        want = _pairs(brute_force_topk_sql(embs.where("vec_id < 5"), embs,
+                                           k=3))
+        for src in (q, q.where("false")):
+            for got in (ivf_topk_indexed(src, index, k=3, nprobe=8),
+                        pq_topk_indexed(src, index, k=3, rerank=N,
+                                        nprobe=8)):
+                assert got.schema["query_id"].dataType.simpleString() \
+                    == "string"
+                rows = sorted((int(r[0]),) + tuple(r[1:])
+                              for r in got.collect())
+                assert rows == (want if src is q else [])
+
 
 class TestApprox:
     def test_narrow_probe_recall(self, spark, embs, index):
@@ -279,50 +307,11 @@ class TestIncrementalEmbeddingDedup:
 
 
 class TestPqDistributed:
-    """distributed=True must be result-identical to the driver-LUT
-    serving path, stay exact when exhaustive, and never materialize
-    the query side on the driver."""
-
-    def test_parity_with_driver_path(self, spark, embs, index):
-        """Same results as the driver-LUT path wherever the rerank
-        shortlist isn't boundary-tight: a TIGHT rerank can admit a
-        different boundary candidate because the two paths compute ADC
-        scores with differently-shaped einsums (BLAS rounding differs
-        in the last ulp) — the k results are then still exact-cosine
-        verified, just from a slightly different shortlist."""
-        q = embs.where("vec_id < 20")
-        for kw in ({"nprobe": 2, "rerank": 50},
-                   {"nprobe": 8, "rerank": 50},
-                   {"nprobe": None, "rerank": N}):
-            a = pq_topk_indexed(q, index, k=3, **kw)
-            b = pq_topk_indexed(q, index, k=3, distributed=True, **kw)
-            assert _pairs(a) == _pairs(b), kw
+    """The PQ search scores codes on the executors over every cell of
+    the cell-partitioned corpus and stays exact when exhaustive."""
 
     def test_exhaustive_equals_brute(self, spark, embs, index):
         q = embs.where("vec_id < 6")
-        got = pq_topk_indexed(q, index, k=3, rerank=N, nprobe=8,
-                              distributed=True)
+        got = pq_topk_indexed(q, index, k=3, rerank=N, nprobe=None)
         want = brute_force_topk_sql(q, embs, k=3)
         assert _pairs(got) == _pairs(want)
-
-    def test_no_driver_query_collect(self, spark, embs, index,
-                                     monkeypatch):
-        from pyspark.sql.classic.dataframe import DataFrame
-        q = embs.where("vec_id < 20")
-        sizes = []
-        orig = DataFrame.collect
-
-        def gated(df):
-            rows = orig(df)
-            sizes.append(len(rows))
-            return rows
-
-        monkeypatch.setattr(DataFrame, "collect", gated)
-        n = pq_topk_indexed(q, index, k=3, rerank=20, nprobe=2,
-                            distributed=True).count()
-        # nprobe=None skips even the probed-cell collect
-        n2 = pq_topk_indexed(q, index, k=3, rerank=20, nprobe=None,
-                             distributed=True).count()
-        monkeypatch.setattr(DataFrame, "collect", orig)
-        assert n > 0 and n2 > 0
-        assert max(sizes, default=0) <= index.meta["n_centroids"], sizes

@@ -186,6 +186,9 @@ def test_featurize_matches_oracle_every_tier(spark):
     assert want[2][2] == ["ntok", "inv"] and want[3][2] == ["inv"]
     assert want[3][0][5] == {} and not want[3][1]  # empty bag, not missing
     assert "bow" in want[2][1] and "src" in want[2][1]
+    # a NULL argument makes the Column-tier clamp NULL (missing), not lo
+    assert "w" in got[2].missing_features
+    assert dict(got[2].features[0]) == {"w=UNK": 1.0}
     assert got[4].features[9] == {"src=UNK": 1.0}
     assert list(got[4].features[10]) == ["half=0"]
     assert got[4].features[10]["half=0"] == pytest.approx(0.6)
