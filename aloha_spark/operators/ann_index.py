@@ -134,10 +134,16 @@ def _fit(corpus: DataFrame, c_id: str, c_vec: str, *, n_centroids: int,
         return out
 
     vector = F.col(c_vec).cast("array<double>")
+    # Catalyst pushes a filter on cell below this projection by
+    # substituting the UDF into it, which runs the assign pass a second
+    # time per row.  The cell is never null, and saying so (coalesce)
+    # keeps the probe's cell join from inferring an isnotnull filter
     assigned = (corpus.select(F.col(c_id).alias("id"),
                               vector.alias("vector"),
                               assign(vector).alias("_a"))
-                      .select("id", "_a.cell", "vector",
+                      .select("id",
+                              F.coalesce("_a.cell", F.lit(-1)).alias("cell"),
+                              "vector",
                               *(["_a.codes"] if books is not None else [])))
     meta = {
         "format_version": _FORMAT_VERSION,
@@ -304,8 +310,12 @@ def ivf_topk_indexed(queries: DataFrame, index: AnnIndex, k: int = 5, *,
         return _empty_topk(index.spark, _id_type(queries, q_id),
                            index.meta["id_type"])
     # isin on the partition column -> Catalyst prunes unprobed cells'
-    # files before any IO happens
-    pruned = index.corpus().where(F.col("cell").isin(cells))
+    # files before any IO happens.  An in-memory index has no files to
+    # prune, and there the filter would run the assign UDF a second time
+    # (see _fit): the cell join alone drops unprobed cells
+    pruned = index.corpus()
+    if index.path is not None:
+        pruned = pruned.where(F.col("cell").isin(cells))
     jq = F.broadcast(qdf) if broadcast_queries else qdf
     cands = (pruned.join(jq, "cell")
                    .where(F.col("query_id") != F.col("id"))

@@ -17,9 +17,13 @@ columns — they re-evaluate per job and every bucket would "mismatch").
 Pass an explicit ``checksum_cols`` excluding any such column.
 
 Granularity: buckets are written in groups (one Spark job per group).
-A crash mid-group leaves orphan files for at most one group; on resume
-those buckets are rewritten via dynamic partition overwrite, so the
-final table is byte-identical to an uninterrupted run.
+The upstream runs once per call, not once per group: with more than
+one group to write, the bucketed frame (filtered to the buckets still
+to do) is persisted before the first group and released afterwards,
+crash or not.  A crash mid-group leaves orphan files for at most one
+group; on resume those buckets are rewritten via dynamic partition
+overwrite, so the final table is byte-identical to an uninterrupted
+run.
 """
 
 from __future__ import annotations
@@ -105,10 +109,16 @@ def write_with_lineage(
     """Write ``df`` partitioned by stable bucket with per-bucket lineage;
     resume-safe.  ``fail_after_groups`` injects a crash for testing.
 
-    The expensive upstream runs ONCE per group (for the write); lineage
-    rows are then aggregated from the files just written — a partition-
-    pruned re-read of the output, so the checksum records what is
-    actually on disk and the pipeline is never recomputed for metadata.
+    The expensive upstream runs ONCE per call: when more than one group
+    is to be written, the bucketed frame restricted to the buckets still
+    to do is persisted (default level, which spills) before the group
+    loop and unpersisted in a ``finally``.  No copy is made when the
+    upstream is already materialized — ``df`` is a filter/projection of
+    a cached frame, as curate's persisted output is — or when a single
+    group is written.  Lineage rows are aggregated from the files just
+    written — a partition-pruned re-read of the output, so the checksum
+    records what is actually on disk and the pipeline is never
+    recomputed for metadata.
 
     ``bucket_col`` names a PRECOMPUTED bucket assignment already on
     ``df`` (values must lie in ``[0, num_buckets)`` — e.g. the ``shard``
@@ -148,55 +158,70 @@ def write_with_lineage(
     done = completed_buckets(spark, lineage_path)
     todo = [x for x in range(num_buckets) if x not in done]
     skipped = sorted(done)
-    written: list[int] = []
-
+    cached = None
+    if len(todo) > group_size and not _reads_cache(b):
+        # every group filters the same upstream: materialize it once
+        # (in the first group's write) instead of re-running it per group
+        cached = b = b.where(F.col(BUCKET_COL).isin(todo)).persist()
     groups = 0
-    for gi in range(0, len(todo), group_size):
-        if fail_after_groups is not None and groups >= fail_after_groups:
-            raise RuntimeError("injected failure for resume test")
-        group = todo[gi:gi + group_size]
-        part = b.where(F.col(BUCKET_COL).isin(group))
-        if sort_cols:
-            # all rows of a bucket hash to ONE partition, so each bucket
-            # directory below gets exactly one internally-sorted file
-            part = (part.repartition(len(group), F.col(BUCKET_COL))
-                        .sortWithinPartitions(BUCKET_COL, *sort_cols))
-        # drop the group's bucket dirs first: dynamic overwrite only
-        # replaces partitions PRESENT in the written data, so a bucket
-        # rewritten (post-repair) with zero rows would otherwise keep
-        # its stale files on disk while lineage records row_count=0.
-        # Crash-safe: a group is only recorded in lineage after its
-        # write, so a crash between delete and write just means the
-        # group is rewritten on resume.
-        _delete_bucket_dirs(spark, out_path, group)
-        # dynamic partition overwrite (per-write option — the session
-        # conf must not be mutated for the caller): re-running a
-        # half-written group replaces exactly those bucket directories
-        (part.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy(BUCKET_COL)
-             .parquet(out_path))
-        # lineage from the WRITTEN files (partition-pruned read): the
-        # checksum describes bytes on disk, and the upstream pipeline is
-        # not recomputed a second time for metadata.  Explicit schema:
-        # a group whose every bucket is empty writes no files, and an
-        # all-empty out_path would otherwise fail schema inference
-        # (hit when an increment is fully absorbed by snapshot dedup)
-        written_part = (spark.read.schema(b.schema).parquet(out_path)
-                        .where(F.col(BUCKET_COL).isin(group)))
-        # record EMPTY buckets too (row_count=0, null stats): without
-        # this a sparse key range re-processes every empty bucket on
-        # every resume
-        ids = spark.createDataFrame([(x,) for x in group],
-                                    f"{BUCKET_COL} int")
-        lin = (ids.join(_lineage_rows(written_part, ts_col, checksum_cols),
-                        BUCKET_COL, "left")
-               .withColumn("row_count", F.coalesce("row_count", F.lit(0)))
-               .withColumn("batch_id", F.lit(groups)))
-        lin.write.mode("append").parquet(lineage_path)
-        written.extend(group)
-        groups += 1
-    return WriteReport(written, skipped, groups)
+    try:
+        for gi in range(0, len(todo), group_size):
+            if fail_after_groups is not None and groups >= fail_after_groups:
+                raise RuntimeError("injected failure for resume test")
+            group = todo[gi:gi + group_size]
+            part = b.where(F.col(BUCKET_COL).isin(group))
+            if sort_cols:
+                # all rows of a bucket hash to ONE partition, so each bucket
+                # directory below gets exactly one internally-sorted file
+                part = (part.repartition(len(group), F.col(BUCKET_COL))
+                            .sortWithinPartitions(BUCKET_COL, *sort_cols))
+            # drop the group's bucket dirs first: dynamic overwrite only
+            # replaces partitions PRESENT in the written data, so a bucket
+            # rewritten (post-repair) with zero rows would otherwise keep
+            # its stale files on disk while lineage records row_count=0.
+            # Crash-safe: a group is only recorded in lineage after its
+            # write, so a crash between delete and write just means the
+            # group is rewritten on resume.
+            _delete_bucket_dirs(spark, out_path, group)
+            # dynamic partition overwrite (per-write option — the session
+            # conf must not be mutated for the caller): re-running a
+            # half-written group replaces exactly those bucket directories
+            (part.write.mode("overwrite")
+                 .option("partitionOverwriteMode", "dynamic")
+                 .partitionBy(BUCKET_COL)
+                 .parquet(out_path))
+            # lineage from the WRITTEN files (partition-pruned read): the
+            # checksum describes bytes on disk, and the upstream pipeline is
+            # not recomputed a second time for metadata.  Explicit schema:
+            # a group whose every bucket is empty writes no files, and an
+            # all-empty out_path would otherwise fail schema inference
+            # (hit when an increment is fully absorbed by snapshot dedup)
+            written_part = (spark.read.schema(b.schema).parquet(out_path)
+                            .where(F.col(BUCKET_COL).isin(group)))
+            # record EMPTY buckets too (row_count=0, null stats): without
+            # this a sparse key range re-processes every empty bucket on
+            # every resume
+            ids = spark.createDataFrame([(x,) for x in group],
+                                        f"{BUCKET_COL} int")
+            lin = (ids.join(_lineage_rows(written_part, ts_col, checksum_cols),
+                            BUCKET_COL, "left")
+                   .withColumn("row_count", F.coalesce("row_count", F.lit(0)))
+                   .withColumn("batch_id", F.lit(groups)))
+            lin.write.mode("append").parquet(lineage_path)
+            groups += 1
+    finally:
+        if cached is not None:
+            cached.unpersist()
+    return WriteReport(todo, skipped, groups)
+
+
+def _reads_cache(df: DataFrame) -> bool:
+    """True when ``df`` is only filters/projections over a cached frame,
+    so its rows are already materialized and cheap to re-read."""
+    node = df._jdf.queryExecution().optimizedPlan()
+    while node.nodeName() in ("Project", "Filter"):
+        node = node.child()
+    return node.nodeName() == "InMemoryRelation"
 
 
 def _repair_tmp(lineage_path: str) -> str:

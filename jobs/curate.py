@@ -42,7 +42,9 @@ under corpus growth, auditable outside Spark.
 
 Resume is implicit: buckets already recorded in the lineage table are
 skipped on re-run.  The curated frame is persisted before the bucketed
-write so the dedup stages run ONCE, not once per bucket group.
+write so the dedup stages run ONCE, not once per bucket group; the pass
+that materializes it also yields the report's input, per-stage
+(--stage-counts) and redaction counts, observed on the way through.
 
 Scrub order matters: PII is redacted BEFORE dedup so two documents
 that differ only in (redacted) PII deduplicate together, and the raw
@@ -267,8 +269,9 @@ def parse_args(argv):
     p.add_argument("--num-buckets", type=int, default=256)
     p.add_argument("--group-size", type=int, default=32)
     p.add_argument("--stage-counts", action="store_true",
-                   help="count rows after every stage (extra passes "
-                        "over the cached frame; off by default at scale)")
+                   help="report the rows left after every stage, "
+                        "observed in the one pass that materializes "
+                        "the curated frame (no extra Spark job)")
     return p.parse_args(argv)
 
 
@@ -294,9 +297,33 @@ def parse_kv_list(s, flag, *, cast=float):
     return out
 
 
+def read_observed(report):
+    """Fill the counts ``curate()`` observed into its ``report``:
+    ``input_rows``, each stage's ``rows`` (``--stage-counts``) and
+    ``redactions`` (``--scrub-pii``).  Call after an action that ran the
+    curated frame to completion: an observation keeps the result of the
+    FIRST action over its frame, so a partial one (``limit``) would
+    record a partial count."""
+    for target, key, obs in report.pop("_observed", ()):
+        row = obs._jo.getRow()
+        if not row.length():
+            # Spark completed the observation from a query whose copy of
+            # the node never ran (a job reading it under nested caches):
+            # a plan shape curate() must not build.  Observation.get
+            # would fail on this row with a bare JVM assertion
+            raise RuntimeError(
+                f"curate: observed count {target.get('stage', key)!r} "
+                "came back empty")
+        target[key] = row.get(0) or 0
+    return report
+
+
 def curate(spark, args):
-    """Build the curated DataFrame + a report dict (no write)."""
+    """Build the curated DataFrame + a report dict (no write).  The
+    report's counts are observations on the lazy frame: read them with
+    :func:`read_observed` after running it."""
     import pyspark.sql.functions as F
+    from pyspark.sql import Observation
 
     from aloha_spark.operators.dedup import (
         _track_intermediates, dedup_keep_canonical, exact_dedup_keep,
@@ -306,9 +333,16 @@ def curate(spark, args):
     from aloha_spark.sources.tables import read_table
 
     id_col, text_col = args.id_col, args.text_col
-    docs = read_table(spark, args.docs, args.format)
-    report = {"input_rows": docs.count(), "stages": []}
-    x = docs
+    report = {"input_rows": None, "stages": [], "_observed": []}
+
+    def observe(frame, target, key, metric):
+        # counted in whichever pass runs the frame, never by its own job
+        obs = Observation()
+        report["_observed"].append((target, key, obs))
+        return frame.observe(obs, metric.alias(key))
+
+    x = observe(read_table(spark, args.docs, args.format), report,
+                "input_rows", F.count(F.lit(1)))
     # persisted corpus frames to release after the write (decontam /
     # DSIR / xent stages each feed two consumers), plus score frames
     # whose INTERNAL caches (e.g. the xent vocabulary) must stay
@@ -318,9 +352,14 @@ def curate(spark, args):
     keep_alive = []
 
     def checkpoint(stage):
-        report["stages"].append(
-            {"stage": stage, "rows": x.count()} if args.stage_counts
-            else {"stage": stage})
+        nonlocal x
+        entry = {"stage": stage}
+        report["stages"].append(entry)
+        if args.stage_counts:
+            # the unobserved frame may own stage caches that unpersist
+            # when its wrapper is garbage-collected
+            keep_alive.append(x)
+            x = observe(x, entry, "rows", F.count(F.lit(1)))
 
     rep_args = (args.min_tokens, args.max_tokens,
                 args.max_top_token_frac, args.max_dup_bigram_frac,
@@ -421,6 +460,14 @@ def curate(spark, args):
             checkpoint("snapshot_neardup_dedup")
     pairs = None
     if args.neardup_threshold is not None:
+        # x feeds the pair search (signatures + both Jaccard sides) and
+        # the keep-canonical anti-join: checkpoint it so the upstream
+        # chain runs once.  This pass also completes the observations in
+        # x; left to the components loop, whose first job reads x under
+        # the nested pair and candidate caches, Spark 4.1 completes them
+        # with EMPTY rows.  (persist() + count() here measured twice as
+        # slow: curate() over 1,000 documents 56 s against 28 s.)
+        x = x.localCheckpoint(eager=True)
         pairs = minhash_dedup_pairs(
             x.select(id_col, text_col), id_col=id_col, text=text_col,
             threshold=args.neardup_threshold, num_hashes=args.num_hashes,
@@ -657,6 +704,9 @@ def curate(spark, args):
             x = x.join(asg.select("chunk_id", "pack_id", "pack_slot",
                                   "oversized"), "chunk_id")
             checkpoint("pack")
+    if args.scrub_pii:
+        keep_alive.append(x)
+        x = observe(x, report, "redactions", F.sum("n_redactions"))
     if caches:
         # attach every stage cache to the FINAL frame so
         # release_intermediates(x) after the write (or the GC finalizer
@@ -699,13 +749,14 @@ def main(argv=None):
     t0 = time.time()
     x, pairs, report = curate(spark, args)
 
-    # the write re-reads the curated frame once per bucket group — cache
-    # it so the dedup stages (minhash UDF, components loop) run ONCE
+    # the ONE pass over the curation chain: the write's bucket groups and
+    # the report below re-read this cache (so the dedup stages — minhash
+    # UDF, components loop — run once), and materializing it completes
+    # every count curate() observed (those upstream of a near-dup stage
+    # completed at its checkpoint)
     x = x.persist()
     report["output_rows"] = x.count()
-    if args.scrub_pii:
-        report["redactions"] = (
-            x.agg(F.sum("n_redactions")).first()[0] or 0)
+    read_observed(report)
     if pairs is not None:
         report["neardup_pairs"] = pairs.count()
     if args.pack_budget:

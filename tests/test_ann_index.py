@@ -170,6 +170,28 @@ class TestPruning:
         assert "cell" in plan
 
 
+class TestTransientPlan:
+    def test_assign_udf_runs_once(self, spark, embs):
+        """The in-memory index's assign pass is ONE Arrow UDF node: the
+        probe's cell filter must not be substituted below the
+        projection that computes the cell (a second evaluation per
+        row), and the PQ rerank read of (id, vector) carries none."""
+        from aloha_spark.operators.ann_index import _fit
+        from aloha_spark.operators.similarity import ivf_topk
+
+        def udf_nodes(df):
+            return df._jdf.queryExecution().executedPlan().toString() \
+                .count("ArrowEvalPython")
+
+        out = ivf_topk(embs.where("vec_id < 20"), embs, k=3,
+                       n_centroids=8, nprobe=2, train_sample=N)
+        assert udf_nodes(out) == 1
+        fitted = _fit(embs, "vec_id", "embedding", n_centroids=8, m_sub=4,
+                      ksub=16, seed=7, train_sample=N)
+        assert udf_nodes(fitted.corpus().select("id", "vector")) == 0
+        assert udf_nodes(fitted.corpus().select("id", "codes")) == 1
+
+
 class TestBuildJob:
     def test_job_main_builds_and_reports(self, spark, embs, tmp_path,
                                          capsys):

@@ -64,6 +64,7 @@ def test_curate_stages(spark, tmp_path):
     assert "alice@example.com" not in rows[2]["text"]
     assert "<EMAIL>" in rows[2]["text"]
     assert rows[2]["n_redactions"] == 1
+    curate_job.read_observed(report)
     stage_rows = {s["stage"]: s["rows"] for s in report["stages"]}
     assert stage_rows == {"quality_filter": 6, "lang_filter": 5,
                           "pii_scrub": 5, "exact_dedup": 4,
@@ -239,6 +240,7 @@ def test_curate_repetition_filter(spark, tmp_path):
     for col in ("n_tokens", "top_token_frac", "dup_bigram_frac",
                 "dup_trigram_frac"):
         assert col not in pdf.columns
+    curate_job.read_observed(report)
     assert report["stages"][0] == {"stage": "repetition_filter",
                                    "rows": 2}
 
@@ -299,6 +301,7 @@ def test_curate_paragraph_dedup_stage(spark, tmp_path):
         0: "unique lead paragraph\n\nshared cookie banner",
         1: "another unique paragraph",
     }
+    curate_job.read_observed(report)
     assert report["stages"][0] == {"stage": "paragraph_dedup", "rows": 2}
 
 
@@ -322,6 +325,7 @@ def test_curate_line_filter_stage(spark, tmp_path):
     got = {r["doc_id"]: r["text"] for r in x.collect()}
     assert got == {0: "content zero", 1: "content one",
                    2: "content two"}
+    curate_job.read_observed(report)
     assert report["stages"][0] == {"stage": "line_filter", "rows": 3}
 
 
@@ -368,6 +372,7 @@ def test_curate_clf_filter_stage(spark, tmp_path):
     kept = sorted(r["doc_id"] for r in x.select("doc_id").collect())
     # target-vocabulary docs survive, junk-vocabulary docs drop
     assert kept == list(range(40))
+    curate_job.read_observed(report)
     assert report["stages"][0] == {"stage": "clf_filter", "rows": 40}
     with pytest.raises(SystemExit, match="clf-min-prob"):
         curate_job.curate(spark, curate_job.parse_args([
@@ -439,6 +444,7 @@ def test_curate_dsir_and_xent_stages(spark, tmp_path):
     x, _, report = curate_job.curate(spark, args)
     kept = sorted(r["doc_id"] for r in x.collect())
     assert kept == list(range(20))          # cat docs outscore junk
+    curate_job.read_observed(report)
     assert report["stages"][0] == {"stage": "dsir_filter", "rows": 20}
 
     # xent gate: the 20 identical cat docs are low-entropy; junk docs
@@ -457,6 +463,7 @@ def test_curate_dsir_and_xent_stages(spark, tmp_path):
     x, _, report = curate_job.curate(spark, args)
     kept = sorted(r["doc_id"] for r in x.collect())
     assert kept == list(range(20))
+    curate_job.read_observed(report)
     assert report["stages"][0] == {"stage": "xent_gate", "rows": 20}
     # the score frame (and its vocab cache) must be pinned until the
     # result is done materializing
@@ -497,6 +504,7 @@ def test_curate_snapshot_increment_and_append(spark, tmp_path):
         "--dedup-snapshot", snap])
     x, _, report = curate_job.curate(spark, args)
     assert sorted(r["doc_id"] for r in x.collect()) == [1]
+    curate_job.read_observed(report)
     assert {"stage": "snapshot_exact_dedup", "rows": 1} \
         in report["stages"]
 
@@ -534,6 +542,7 @@ def test_curate_snapshot_neardup_stage(spark, tmp_path):
         "--snapshot-neardup-threshold", "0.5"])
     x, _, report = curate_job.curate(spark, args)
     assert sorted(r["doc_id"] for r in x.collect()) == [1]
+    curate_job.read_observed(report)
     assert {"stage": "snapshot_neardup_dedup", "rows": 1} \
         in report["stages"]
 
@@ -637,3 +646,111 @@ def test_curate_leakage_audit_train_by_name(spark, tmp_path):
     # 'val' listed FIRST must still be audited as the eval side
     assert report["split_leakage"] == {
         "leaked_docs": 1, "by_split": {"val": 1}}
+
+
+def _corpus(spark, tmp_path):
+    from aloha_spark.data.documents import make_benchmark, make_documents
+
+    docs, bench = str(tmp_path / "docs"), str(tmp_path / "bench")
+    d = make_documents(spark, 400, partitions=4)
+    d.write.parquet(docs)
+    make_benchmark(d, every=40).write.parquet(bench)
+    # (stage, its flags) in curate's stage order
+    stages = [
+        ("quality_filter", ["--min-quality", "0.5"]),
+        ("lang_filter", ["--langs", "en"]),
+        ("pii_scrub", ["--scrub-pii"]),
+        ("exact_dedup", ["--exact-dedup"]),
+        ("neardup_dedup", ["--neardup-threshold", "0.6"]),
+        ("decontam", ["--decontam-docs", bench, "--decontam-n", "8",
+                      "--decontam-threshold", "0.5"]),
+        ("split_assign", ["--split", "train=0.9,val=0.1"]),
+    ]
+    return docs, stages
+
+
+def test_observed_counts_equal_brute_force(spark, tmp_path):
+    """--stage-counts, input_rows and redactions are observations read
+    after one pass; each equals a count()/sum over a fresh curate() of
+    the same stage prefix."""
+    from aloha_spark.operators.dedup import release_intermediates
+
+    docs, stages = _corpus(spark, tmp_path)
+
+    def run(flags):
+        return curate_job.curate(spark, curate_job.parse_args(
+            ["--docs", docs, "--out", "_", "--lineage", "_", *flags]))
+
+    x, pairs, report = run(
+        [f for _, fs in stages for f in fs] + ["--stage-counts"])
+    x.write.format("noop").mode("overwrite").save()
+    curate_job.read_observed(report)
+    release_intermediates(x)
+    pairs.unpersist()
+
+    brute = {}
+    for k in range(1, len(stages) + 1):
+        y, pairs, _ = run([f for _, fs in stages[:k] for f in fs])
+        brute[stages[k - 1][0]] = y.count()
+        if k < len(stages):
+            release_intermediates(y)
+        if pairs is not None:
+            pairs.unpersist()
+    assert {s["stage"]: s["rows"] for s in report["stages"]} == brute
+    assert report["input_rows"] == spark.read.parquet(docs).count()
+    assert report["redactions"] == y.agg(F.sum("n_redactions")).first()[0]
+    assert report["redactions"] > 0 and len(set(brute.values())) > 3
+    release_intermediates(y)
+
+
+def test_stage_counts_launch_no_spark_job(spark, tmp_path):
+    """The job with --stage-counts runs no more Spark jobs than the
+    same job without it, and reports the same figures."""
+    import io
+    import json as _json
+    from contextlib import redirect_stdout
+
+    docs, stages = _corpus(spark, tmp_path)
+    sc = spark.sparkContext
+
+    def main(tag, extra):
+        buf = io.StringIO()
+        sc.setJobGroup(tag, tag)
+        try:
+            with redirect_stdout(buf):
+                curate_job.main(
+                    ["--docs", docs, "--out", str(tmp_path / tag),
+                     "--lineage", str(tmp_path / f"{tag}_lin"),
+                     "--num-buckets", "8", "--group-size", "4",
+                     *[f for _, fs in stages for f in fs], *extra])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        report = _json.loads(buf.getvalue().strip().splitlines()[-1])
+        return report, len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    plain, plain_jobs = main("plain", [])
+    counted, counted_jobs = main("counted", ["--stage-counts"])
+    assert counted_jobs <= plain_jobs
+    assert [s["stage"] for s in counted["stages"]] == \
+        [s["stage"] for s in plain["stages"]]
+    assert all(s["rows"] > 0 for s in counted["stages"])
+    for key in ("input_rows", "output_rows", "redactions",
+                "neardup_pairs", "written_buckets", "groups"):
+        assert counted[key] == plain[key], key
+
+
+def test_empty_observation_is_loud():
+    """An observation Spark completed without running its node (an
+    empty row) fails the report, naming the count, instead of being
+    recounted by an extra job."""
+    from types import SimpleNamespace as NS
+
+    empty = NS(_jo=NS(getRow=lambda: NS(length=lambda: 0)))
+    entry = {"stage": "exact_dedup"}
+    report = {"stages": [entry], "_observed": [(entry, "rows", empty)]}
+    with pytest.raises(RuntimeError, match="'exact_dedup'"):
+        curate_job.read_observed(report)
+    report = {}
+    report["_observed"] = [(report, "input_rows", empty)]
+    with pytest.raises(RuntimeError, match="'input_rows'"):
+        curate_job.read_observed(report)

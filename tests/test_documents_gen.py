@@ -65,7 +65,7 @@ def test_benchmark_is_verbatim_slice(docs):
 def test_corpus_workload_composition(spark, docs, tmp_path):
     """The exact flag set BENCH/scaling.py's CORPUS_RUNNER passes to
     jobs/curate.py, at test scale: every stage must leave its mark."""
-    from jobs.curate import curate, parse_args
+    from jobs.curate import curate, parse_args, read_observed
     from aloha_spark.operators.dedup import release_intermediates
 
     d = str(tmp_path / "docs")
@@ -82,6 +82,7 @@ def test_corpus_workload_composition(spark, docs, tmp_path):
     x, _, report = curate(spark, args)
     out = x.cache().toPandas()
     release_intermediates(x)
+    read_observed(report)
 
     # decontamination dropped real rows (the benchmark is a verbatim
     # corpus slice, so surviving originals MUST be contaminated)

@@ -3,6 +3,7 @@ output + verified lineage."""
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from aloha_spark.data.transcripts import make_transcripts
 from aloha_spark.plans.lineage import (
@@ -145,6 +146,12 @@ class TestPrecomputedBucketGuard:
             write_with_lineage(df, str(tmp_path / "o"),
                                str(tmp_path / "l"), key="id", ts_col="ts",
                                num_buckets=4, bucket_col="shard")
+        # several groups: the guard fires in the persisted upstream too
+        with pytest.raises(Exception, match="outside \\[0, 4\\)"):
+            write_with_lineage(df, str(tmp_path / "o1"),
+                               str(tmp_path / "l1"), key="id", ts_col="ts",
+                               num_buckets=4, group_size=1,
+                               bucket_col="shard")
 
     def test_null_bucket_is_loud(self, spark, tmp_path):
         df = self._df(spark, [0, 1, None])
@@ -163,3 +170,56 @@ class TestPrecomputedBucketGuard:
         got = sorted(r.id for r in
                      spark.read.parquet(str(tmp_path / "o3")).collect())
         assert got == [0, 1, 2, 3]
+
+
+class TestUpstreamRunsOnce:
+    """Every bucket group filters the same upstream, so a multi-group
+    write persists it once instead of re-running it per group (the
+    featurize job's windows, as-of join and Arrow stage)."""
+
+    def _counted(self, spark, n):
+        """``n`` turns behind a mapInPandas stage (the shape of the
+        featurize stage: Catalyst cannot push the group filter below
+        it) that counts every row it evaluates."""
+        acc = spark.sparkContext.accumulator(0)
+
+        def stage(batches):
+            for pdf in batches:
+                acc.add(len(pdf))
+                yield pdf
+
+        df = (spark.range(n)
+              .select(F.concat(F.lit("c"), (F.col("id") % 37).cast("string"))
+                      .alias("conv_id"),
+                      F.col("id").alias("turn_idx"),
+                      F.col("id").cast("timestamp").alias("ts"))
+              .mapInPandas(stage,
+                           "conv_id string, turn_idx long, ts timestamp"))
+        return df, acc
+
+    def test_upstream_evaluated_once(self, spark, tmp_path):
+        df, acc = self._counted(spark, 400)
+        rep = write_with_lineage(df, str(tmp_path / "o"), str(tmp_path / "l"),
+                                 num_buckets=8, group_size=2)
+        assert rep.groups == 4
+        assert acc.value == 400
+        assert spark.read.parquet(str(tmp_path / "o")).count() == 400
+        assert verify_lineage(spark, str(tmp_path / "o"),
+                              str(tmp_path / "l")).count() == 0
+
+    def test_crash_releases_cache_and_resume_is_identical(self, spark,
+                                                          tmp_path):
+        df, _ = self._counted(spark, 400)
+        clean, out, lin = (str(tmp_path / d) for d in ("clean", "o", "l"))
+        write_with_lineage(df, clean, str(tmp_path / "cl"), num_buckets=8,
+                           group_size=2)
+        before = spark.sparkContext._jsc.getPersistentRDDs().size()
+        with pytest.raises(RuntimeError, match="injected failure"):
+            write_with_lineage(df, out, lin, num_buckets=8, group_size=2,
+                               fail_after_groups=2)
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() <= before
+        rep = write_with_lineage(df, out, lin, num_buckets=8, group_size=2)
+        assert len(rep.skipped_buckets) == 4 and rep.groups == 2
+        pd.testing.assert_frame_equal(_read_sorted(spark, out),
+                                      _read_sorted(spark, clean))
+        assert verify_lineage(spark, out, lin).count() == 0

@@ -6,8 +6,9 @@ order-insensitive value hash.
 Usage: python tools/selfcheck.py [sf_dir] [query ...]
 
 Runs at ``local[$SPARK_GRAFT_CPUS]`` (default: every CPU).  A full run
-writes its report to ``SELFCHECK.json`` at the repo root (gitignored),
-or to ``$SELFCHECK_OUT`` relative to it.
+writes its report, per-row results included, to ``SELFCHECK.json`` at
+the repo root (gitignored), or to ``$SELFCHECK_OUT`` relative to it; a
+run of named queries only prints.
 """
 
 from __future__ import annotations
@@ -473,8 +474,6 @@ def main():
     print(f"\n== {n_match} MATCH, "
           f"{sum(1 for r in results.values() if r['status']=='ROWS_ONLY')} "
           f"rows-only, {n_bad} problems ==")
-    with open("/tmp/selfcheck.json", "w") as f:
-        json.dump(results, f, indent=1)
     if not only:
         # machine-readable report (readable without re-running):
         # full-registry runs only
