@@ -1,144 +1,28 @@
-"""Vectorized batch kernels for the common single-call feature specs.
+"""Flat whole-batch kernels for the single-call feature specs.
 
-The generic batch tier evaluates a compiled Python expression per row;
-for the overwhelmingly common specs — ``ind(${x})``, ``bag(${text})``,
-``nGrams(...)``, ``skipGrams(...)``, ``sos2(...)``, ``sos2U(...)``,
-``csos2(...)`` — these kernels process a whole Arrow batch at once
-(numpy for the arithmetic, one pass for the string work), skipping
-eval/argument-marshalling overhead entirely.  Each returns
-``list[dict[str,float] | None]`` aligned with the input (None = missing).
+``ind(${x})``, ``bag(${text})``, ``nGrams(...)``, ``skipGrams(...)``,
+``sos2(...)``, ``sos2U(...)`` and ``csos2(...)`` with literal arguments
+(``plans/spec.py::match_single_call``) process a whole Arrow batch at
+once — numpy for the arithmetic, Arrow C++ or one pass for the string
+work — and never build a per-row dict.  Each returns
+``(hashed_idx, values, row_ids, isna)`` arrays; every other spec runs
+on the generic per-row tier (``plans/spec.py::compile_batch_fn``).
 """
 
 from __future__ import annotations
 
-import math
-from typing import Optional
-
 import numpy as np
 import pandas as pd
-
-from .scalars import UNK_BAG, csos2
-from .textfeatures import bag, n_grams, skip_grams
 
 
 def _is_missing(v) -> bool:
     return v is None or (isinstance(v, float) and v != v)
 
 
-def ind_batch(values: pd.Series) -> list:
-    """Vectorized indicator. None -> None (caller applies UNK + missing).
-    Sequence values expand to one indicator per element (Indicator.scala
-    supports iterables; aligned with scalars.ind)."""
-    out: list = [None] * len(values)
-    vals = values.tolist()
-    for i, v in enumerate(vals):
-        if _is_missing(v):
-            continue
-        if isinstance(v, (list, tuple, set, frozenset, np.ndarray)):
-            elems = [e for e in v if not _is_missing(e)]
-            if isinstance(v, (set, frozenset)):
-                # deterministic expansion order (scalars.ind parity)
-                elems.sort(key=_ind_value_str)
-            out[i] = {f"={_ind_value_str(e)}": 1.0 for e in elems}
-        else:
-            out[i] = {f"={_ind_value_str(v)}": 1.0}
-    return out
-
-
-def _text_kernel_batch(kernel, texts: pd.Series, args: tuple,
-                       kwargs: dict) -> list:
-    out: list = [None] * len(texts)
-    vals = texts.tolist()
-    for i, t in enumerate(vals):
-        if _is_missing(t):
-            continue
-        out[i] = kernel(t, *args, **kwargs)
-    return out
-
-
-def bag_batch(texts, *args, **kwargs):
-    return _text_kernel_batch(bag, texts, args, kwargs)
-
-
-def ngrams_batch(texts, *args, **kwargs):
-    return _text_kernel_batch(n_grams, texts, args, kwargs)
-
-
-def skipgrams_batch(texts, *args, **kwargs):
-    return _text_kernel_batch(skip_grams, texts, args, kwargs)
-
-
-def sos2_batch(values: pd.Series, vmin: int, vmax: int, delta: int,
-               underflow: Optional[str] = None,
-               unknown_key: Optional[str] = None) -> list:
-    """Vectorized SOS2 (both clamped and underflow-reporting forms).
-
-    ``underflow=None`` -> clamped sos2; otherwise sos2U semantics with
-    the given underflow key.  Missing/NaN -> None (caller default) when
-    unknown_key is None, else the explicit unknown bag."""
-    v = pd.to_numeric(values, errors="coerce").to_numpy(dtype=np.float64)
-    n = len(v)
-    isnan = np.isnan(v)
-    under = v < vmin
-    grid = np.clip(v, vmin, vmax)
-    x = (grid - vmin) / delta
-    b = x.astype(np.int64)          # toInt truncation (x >= 0)
-    frac = x - b
-    lo_name = vmin + b * delta
-    hi_name = vmin + (b + 1) * delta
-    out: list = [None] * n
-    unk = {f"={unknown_key}": 1.0} if unknown_key else dict(UNK_BAG)
-    for i in range(n):
-        if isnan[i]:
-            out[i] = dict(unk) if unknown_key else None
-            continue
-        if underflow is not None and under[i]:
-            out[i] = {f"={underflow}": 1.0}
-            continue
-        f = frac[i]
-        one_minus = 1.0 - f
-        # dict-tier gate (scalars._sos2_pairs): single entry iff
-        # one_minus == 1.0 (covers frac == 0 AND frac < ~2^-53)
-        if one_minus == 1.0:
-            out[i] = {f"={int(lo_name[i])}": 1.0}
-        else:
-            out[i] = {f"={int(lo_name[i])}": one_minus,
-                      f"={int(hi_name[i])}": f}
-    return out
-
-
-def sos2u_batch(values, vmin, vmax, delta):
-    return sos2_batch(values, vmin, vmax, delta, underflow="UNDERFLOW",
-                      unknown_key="UNK")
-
-
-def csos2_batch(values: pd.Series, *knots) -> list:
-    ks = list(knots)
-    out: list = [None] * len(values)
-    for i, v in enumerate(values.tolist()):
-        if _is_missing(v):
-            continue
-        out[i] = csos2(float(v), ks)
-    return out
-
-
-# registry-function name -> batch kernel; args after the first (the
-# variable) must be constants for the dispatch to apply
-BATCH_KERNELS = {
-    "ind": ind_batch,
-    "bag": bag_batch,
-    "nGrams": ngrams_batch,
-    "skipGrams": skipgrams_batch,
-    "sos2": lambda s, mn, mx, d: sos2_batch(s, mn, mx, d),
-    "sos2U": sos2u_batch,
-    "csos2": csos2_batch,
-}
-
-
 # ---------------------------------------------------------------------------
 # Flat tier: whole-batch text kernels for the hashed sparse-vector sink.
 #
-# The dict tiers above materialize one Python dict per row; at 10^6+ rows
+# The generic tier materializes one Python dict per row; at 10^6+ rows
 # per task that is the hot path.  The flat tier never builds per-row
 # dicts: it tokenizes each source column ONCE per Arrow batch (shared
 # across every feature reading that column), pd.factorize()s the token
@@ -147,7 +31,8 @@ BATCH_KERNELS = {
 # sized, not entry-sized).  Output is (hashed_idx, values, row_ids)
 # arrays ready for the sink's batch lexsort.  Semantics are identical to
 # bag()/n_grams()/skip_grams() for the supported cases; unsupported
-# arguments (maxElements, n>2 grams) fall back to the dict tier.
+# arguments (maxElements, non-literal arguments) run on the generic
+# tier.
 
 class TokenCache:
     """Per-batch tokenization shared across features.
@@ -343,7 +228,7 @@ def _count_packed(codes: np.ndarray, row_ids: np.ndarray, n_codes: int):
     (rows, codes, counts) ordered by FIRST OCCURRENCE in the row-major
     entry stream — i.e. per row, insertion order.  The hashed sinks
     re-sort anyway, but the VW line sink needs within-row insertion
-    order to byte-match the dict tier (Counter order).
+    order to byte-match the generic tier (Counter order).
 
     ``pd.factorize`` (khash) replaces the earlier sort-based
     ``np.unique(return_index)``: O(E) instead of O(E log E) over the
@@ -412,7 +297,7 @@ def pairgrams_flat(cache: TokenCache, col: str, name: str, hash_fn,
         return (np.empty(0, np.int32), np.empty(0, np.float64),
                 np.empty(0, np.int64), isna)
     if len(distances) > 1:
-        # the dict tier (Counter over anchor-major iteration) emits each
+        # the generic tier (Counter over anchor-major iteration) emits each
         # anchor's pairs before moving on; the per-distance concatenation
         # above is distance-major, so re-order the entry stream to
         # (anchor position, distance) to keep flat==dict byte parity in
@@ -423,7 +308,7 @@ def pairgrams_flat(cache: TokenCache, col: str, name: str, hash_fn,
     pcodes, puniq = pd.factorize(pair_code)
     # distinct token pairs can RENDER to the same gram string when a
     # token contains the separator (e.g. "a_b"+"c" and "a"+"b_c" both
-    # print "a_b_c"); the dict tier merges their counts, so re-factorize
+    # print "a_b_c"); the generic tier merges their counts, so re-factorize
     # on the rendered strings before counting
     strings = np.array(
         [f"{name}{prefix}{uniques[p // U]}{sep}{uniques[p % U]}{suffix}"
@@ -481,7 +366,7 @@ def gramgrams_flat(cache: TokenCache, col: str, name: str, hash_fn,
     uniq_rows, inv = np.unique(mat, axis=0, return_inverse=True)
     # distinct tuples can render to the same gram string when a token
     # contains the separator; factorize_strings on the rendered keys
-    # merges them like the dict tier does
+    # merges them like the generic tier does
     strings = np.array(
         [f"{name}{prefix}{sep.join(uniques[c] for c in row)}{suffix}"
          for row in uniq_rows], dtype=object)
@@ -494,7 +379,7 @@ def gramgrams_flat(cache: TokenCache, col: str, name: str, hash_fn,
 def _ind_value_str(v) -> str:
     """Scala toString parity rendering — ONE implementation
     (scalars._render); a second copy here had already started to drift
-    risk between the scalar and batch/flat tiers."""
+    risk between the scalar and flat tiers."""
     from .scalars import _render
     return _render(v)
 
@@ -506,7 +391,7 @@ def ind_flat(cache: TokenCache, col: str, name: str, hash_fn):
     Array-typed columns (unhashable lists/ndarrays — pd.factorize raises
     TypeError on them) take the per-element expansion path instead of
     crashing the job: one indicator per element, None elements dropped,
-    duplicate elements collapse to one entry (dict-tier set semantics)."""
+    duplicate elements collapse to one entry (generic-tier set semantics)."""
     s = cache.pdf[col]
     listy = False
     try:
@@ -598,7 +483,7 @@ def sos2_flat(cache: TokenCache, col: str, name: str, hash_fn,
     """SOS2 binning over the whole batch: at most 2 entries per row, key
     table = the (tiny, precomputable) bin-name set hashed once per batch.
     Missing/NaN rows are reported via isna (the caller adds the UNK
-    entry + missing mark), matching the dict tier exactly."""
+    entry + missing mark), matching the generic tier exactly."""
     v = pd.to_numeric(cache.pdf[col], errors="coerce") \
         .to_numpy(dtype=np.float64)
     n = len(v)
@@ -614,9 +499,9 @@ def sos2_flat(cache: TokenCache, col: str, name: str, hash_fn,
     extra = hash_fn([f"{name}={underflow}"])[0] if underflow is not None \
         else None
 
-    # single-entry gate must be the dict tier's: one_minus == 1.0, NOT
+    # single-entry gate must be the generic tier's: one_minus == 1.0, NOT
     # frac == 0.0 — for 0 < frac < ~2^-53, 1-frac rounds to exactly 1.0
-    # and the dict tier (scalars._sos2_pairs) emits ONE entry, while a
+    # and the generic tier (scalars._sos2_pairs) emits ONE entry, while a
     # frac-based gate would emit a spurious denormal hi entry
     one_minus = 1.0 - frac
     normal = ~isnan & ~under
@@ -640,7 +525,7 @@ def sos2_flat(cache: TokenCache, col: str, name: str, hash_fn,
     idx = np.concatenate(chunks_idx)
     vals = np.concatenate(chunks_val).astype(np.float64)
     rids = np.concatenate(chunks_rid).astype(np.int64)
-    # NaN rows: the dict tier yields the explicit unknown bag for sos2U
+    # NaN rows: the generic tier yields the explicit unknown bag for sos2U
     # and None (-> caller UNK) for sos2 — both hash to name + '=UNK',
     # and both mark the feature missing; report via isna either way
     return idx, vals, rids, isnan

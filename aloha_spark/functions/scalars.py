@@ -31,7 +31,7 @@ def ind(value) -> dict[str, float]:
     """Indicator: ``[("=" + str(value), 1.0)]``; None -> =UNK; sequences
     (list/tuple/set/ndarray — the Arrow tiers hand ndarrays to the
     generic kernel) produce one indicator per element, with None/NaN
-    elements dropped — identical semantics to ind_batch/ind_flat."""
+    elements dropped — identical semantics to ind_flat."""
     import numpy as np
     if value is None:
         return dict(UNK_BAG)
@@ -43,7 +43,7 @@ def ind(value) -> dict[str, float]:
             # sets have no stable iteration order across processes /
             # hash seeds; sort by rendered key so the emitted entry
             # order (which reaches VW lines) is deterministic and
-            # matches the batch/flat tiers
+            # matches the flat tier
             items.sort(key=_render)
         return {f"={_render(v)}": 1.0 for v in items}
     return {f"={_render(value)}": 1.0}

@@ -647,7 +647,20 @@ def heavy_hitters(df: DataFrame, *, support: float = 0.001,
     Output: ``(token, cnt, freq)`` — deterministic, oracle-checkable
     against a plain GROUP BY/HAVING (selfcheck ``heavy_hitters``).
     ``support`` must be in (0, 1]; lower support costs more candidate
-    memory (``cap`` counters per partition)."""
+    memory (``cap`` counters per partition).
+
+    ``df`` must be deterministic: both passes re-read it, so a frame
+    that yields different rows per evaluation (a ``rand()`` filter or
+    order) could put a heavy token in pass 2 that pass 1 never saw.
+    Such a frame raises ``ValueError``; materialize it first
+    (``localCheckpoint()``, or write and re-read).  Persisting the
+    exploded token stream instead would cost the corpus-sized cache
+    this operator exists to avoid."""
+    if not df._jdf.queryExecution().analyzed().deterministic():
+        raise ValueError(
+            "heavy_hitters reads its input twice and needs a "
+            "deterministic frame; materialize it first "
+            "(df.localCheckpoint())")
     if not 0 < support <= 1:
         raise ValueError(f"support must be in (0, 1]: {support}")
     if candidate_slack < 1:

@@ -52,7 +52,6 @@ from .spec import (
     path_to_column,
     try_compile_column,
     try_compile_flat,
-    try_compile_vbatch,
     try_parse_binning,
 )
 
@@ -96,12 +95,13 @@ def _lift_to_bag(value, feature_name: str) -> Optional[dict[str, float]]:
 class _FeatPlan:
     name: str
     kind: str                    # "column" | "string_column" | "batch"
-    fn: Optional[Callable]       # batch tier only
+    fn: Optional[Callable]       # batch: the generic per-row callable
     variables: list[str]
     defaults: dict
     sources: dict = None         # pyname -> original column path
-    # flat whole-batch kernel for the hashed-vector sink (bag/2-grams):
-    # fn(cache, name, hash_fn) -> (idx, vals, row_ids, isna)
+    # batch features whose spec matches a whole-batch kernel (ind, bag,
+    # n-grams, skip-grams, sos2, sos2U, csos2) run it instead of ``fn``:
+    # flat_fn(cache, name, hash_fn) -> (idx, vals, row_ids, isna)
     flat_fn: Optional[Callable] = None
 
 
@@ -126,9 +126,10 @@ def _batch_eval_flat(plan: _ExecPlan, pdf: pd.DataFrame, hash_fn, rb=None):
     downstream sorts re-group by row while their stability preserves
     emission (= insertion) order.
 
-    Features with a flat kernel (bag / 2-grams) never materialize
-    per-row dicts and hash only their per-batch unique-key table; the
-    other tiers hash their entry keys chunk-wise."""
+    Features with a flat kernel never materialize per-row dicts and
+    hash only their per-batch unique-key table; Column features hash a
+    per-batch table too, and the generic tier hashes its entry keys
+    once per feature."""
     from ..functions.batch import TokenCache
 
     n = len(pdf)
@@ -144,15 +145,6 @@ def _batch_eval_flat(plan: _ExecPlan, pdf: pd.DataFrame, hash_fn, rb=None):
     err_marks: list = []     # generic tier only: the one that can raise
     arange = np.arange(n, dtype=np.int64)
     cache = TokenCache(pdf, rb=rb)
-
-    fi = 0
-
-    def emit(keys: list, vals_: list, rids) -> None:
-        idx_chunks.append(hash_fn(keys))
-        val_chunks.append(np.asarray(vals_, dtype=np.float64))
-        rid_arr = np.asarray(rids, dtype=np.int64)
-        row_id_chunks.append(rid_arr)
-        fid_chunks.append(np.full(len(rid_arr), fi, dtype=np.int64))
 
     for fi, fp in enumerate(plan.features):
         name = fp.name
@@ -213,31 +205,6 @@ def _batch_eval_flat(plan: _ExecPlan, pdf: pd.DataFrame, hash_fn, rb=None):
                 miss_marks.append((np.nonzero(isna)[0], name))
             continue
 
-        if fp.kind == "vbatch":
-            src = _src(fp, fp.variables[0])
-            series = pdf[src]
-            isna_arr = series.isna().to_numpy()
-            outs = fp.fn(series)
-            keys, vals_, rids = [], [], []
-            f_miss: list = []
-            for i in range(n):
-                b = outs[i]
-                if b is None or isna_arr[i]:
-                    f_miss.append(i)
-                if b is None:
-                    keys.append(unk)
-                    vals_.append(1.0)
-                    rids.append(i)
-                else:
-                    for k, v in b.items():
-                        keys.append(name + k)
-                        vals_.append(v)
-                        rids.append(i)
-            emit(keys, vals_, rids)
-            if f_miss:
-                miss_marks.append((np.asarray(f_miss, dtype=np.int64), name))
-            continue
-
         # generic tier
         var_items = [(v, pdf[_src(fp, v)].tolist())
                      for v in fp.variables]
@@ -273,7 +240,10 @@ def _batch_eval_flat(plan: _ExecPlan, pdf: pd.DataFrame, hash_fn, rb=None):
                     keys.append(name + k)
                     vals_.append(v)
                     rids.append(i)
-        emit(keys, vals_, rids)
+        idx_chunks.append(hash_fn(keys))
+        val_chunks.append(np.asarray(vals_, dtype=np.float64))
+        row_id_chunks.append(np.asarray(rids, dtype=np.int64))
+        fid_chunks.append(np.full(len(rids), fi, dtype=np.int64))
         if f_miss:
             miss_marks.append((np.asarray(f_miss, dtype=np.int64), name))
         if f_err:
@@ -489,6 +459,24 @@ def _fmt17(v) -> str:
     return decimal_format(v, 17)
 
 
+def _sort_last_wins(rows: np.ndarray, idx: np.ndarray, vals: np.ndarray,
+                    num_bits: int):
+    """Order hashed entries by (row, index) and keep the last of each
+    equal (row, index) run — the SortedMap last-wins of
+    LibSvmRowCreator.scala:21-48.  ONE stable argsort over the whole
+    batch: the index is masked to ``num_bits``, so ``(row << num_bits)
+    | idx`` is an exact single int64 key (~8x faster than a 2-key
+    lexsort at 1M entries), and stability keeps equal keys in emission
+    (= feature declaration) order."""
+    key = (rows << num_bits) | idx.astype(np.int64)
+    order = np.argsort(key, kind="stable")
+    key = key[order]
+    keep = np.ones(len(key), dtype=bool)
+    keep[:-1] = key[1:] != key[:-1]
+    order = order[keep]
+    return rows[order], idx[order], vals[order]
+
+
 def _assemble_libsvm_lines(plan: _ExecPlan, pdf: pd.DataFrame, hash_fn,
                            rb=None):
     """Flat LibSVM assembly: hash/mask (vectorized), per-batch sort +
@@ -499,19 +487,7 @@ def _assemble_libsvm_lines(plan: _ExecPlan, pdf: pd.DataFrame, hash_fn,
         _batch_eval_flat(plan, pdf, hash_fn, rb=rb)
     lines = [""] * n
     if len(rows):
-        # single packed int64 key beats a 2-key lexsort ~8x; idx is
-        # masked to num_bits so the pack is exact, stability preserved
-        order = np.argsort((rows << plan.num_bits)
-                           | idx.astype(np.int64), kind="stable")
-        s_rid = rows[order]
-        s_idx = idx[order]
-        s_val = vals[order]
-        keep = np.ones(len(s_idx), dtype=bool)
-        if len(s_idx) > 1:
-            keep[:-1] = (s_idx[1:] != s_idx[:-1]) | (s_rid[1:] != s_rid[:-1])
-        k_rid = s_rid[keep]
-        k_idx = s_idx[keep]
-        k_val = s_val[keep]
+        k_rid, k_idx, k_val = _sort_last_wins(rows, idx, vals, plan.num_bits)
         # Double.toString goes scientific at 1e7 — int fast path below it
         fmts = _fmt_values(k_val, java_double_to_string, int_suffix=".0",
                            int_max=1e7)
@@ -563,13 +539,8 @@ class FeaturePipeline:
                 feats.append(_FeatPlan(p.name, "column", None,
                                        p.variables, p.defaults, p.sources))
                 continue
-            vb = try_compile_vbatch(p)
-            if vb is not None:
-                fn, var = vb
-                fp = _FeatPlan(p.name, "vbatch", fn, [var], {}, p.sources)
-            else:
-                fp = _FeatPlan(p.name, "batch", compile_batch_fn(p),
-                               p.variables, p.defaults, p.sources)
+            fp = _FeatPlan(p.name, "batch", compile_batch_fn(p),
+                           p.variables, p.defaults, p.sources)
             flat = try_compile_flat(p)
             if flat is not None:
                 fp.flat_fn = flat[0]
@@ -988,26 +959,11 @@ class FeaturePipeline:
                         vals = vals[keep_e]
                         row_ids = row_ids[keep_e]
                 # ONE stable sort over the whole batch replaces n
-                # per-row argsorts: order by (row, hashed index).  The
-                # masked index fits in num_bits, so (row << num_bits) |
-                # idx is a single int64 key — ~8x faster than a 2-key
-                # lexsort at 1M entries; stability keeps equal
-                # (row, idx) entries in insertion (= feature
-                # declaration) order so keep-last == SortedMap
-                # last-wins semantics
-                order_ = np.argsort(
-                    (row_ids << plan.num_bits) | idx.astype(np.int64),
-                    kind="stable")
-                s_rid = row_ids[order_]
-                s_idx = idx[order_]
-                s_val = vals[order_]
-                keep_m = np.ones(len(s_idx), dtype=bool)
-                if len(s_idx) > 1:
-                    keep_m[:-1] = (s_idx[1:] != s_idx[:-1]) | \
-                        (s_rid[1:] != s_rid[:-1])
-                k_rid = s_rid[keep_m]
-                k_idx = s_idx[keep_m].astype(np.int32, copy=False)
-                k_val = s_val[keep_m].astype(np.float64, copy=False)
+                # per-row argsorts
+                k_rid, k_idx, k_val = _sort_last_wins(
+                    row_ids, idx, vals, plan.num_bits)
+                k_idx = k_idx.astype(np.int32, copy=False)
+                k_val = k_val.astype(np.float64, copy=False)
                 counts = np.bincount(k_rid, minlength=n)
                 offsets = np.concatenate(
                     ([0], np.cumsum(counts))).astype(np.int32)
@@ -1100,11 +1056,14 @@ class FeaturePipeline:
                      - F.lit(vmin)) / F.lit(delta)
                 b = v.cast("int")
                 frac = v - b.cast("double")
-                interp = (F.when(frac == 0.0,
+                one_minus = F.lit(1.0) - frac
+                # the flat kernel's single-entry gate: 1 - frac also
+                # rounds to 1.0 for 0 < frac < 2^-53
+                interp = (F.when(one_minus == 1.0,
                                  F.array(ent(F.get(harr, b),
                                              F.lit(1.0), di, 0)))
                           .otherwise(F.array(
-                              ent(F.get(harr, b), F.lit(1.0) - frac, di, 0),
+                              ent(F.get(harr, b), one_minus, di, 0),
                               ent(F.get(harr, b + 1), frac, di, 1))))
                 if desc["fn"] == "sos2u":
                     body = (F.when(x < F.lit(vmin),

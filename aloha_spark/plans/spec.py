@@ -7,19 +7,25 @@ per model load (aloha-core/.../semantics/compiled/CompiledSemantics.scala:
 an ``imports`` whitelist selecting the available functions
 (aloha-core/.../dataset/CovariateProducer.scala:21-40).
 
-Here the same spec grammar compiles to one of two tiers:
+Here the same spec grammar compiles to one of these tiers:
 
-* **Column tier** — specs that are pure variable references, literals,
+* **Column** — specs that are pure variable references, literals,
   arithmetic, comparisons, or whitelisted scalar calls become native
   Spark ``Column`` trees (Catalyst-optimized, whole-stage codegen;
   ``${x:-d}`` -> ``coalesce(x, lit(d))``; null propagation comes free
   from SQL NULL semantics, mirroring Aloha's OptionMath).
-* **Batch tier** — specs that call bag-producing registry functions
-  (``ind``, ``bag``, ``nGrams``, ``skipGrams``, ``sos2`` …) compile to a
-  Python callable evaluated inside Arrow-batched pandas UDFs.  The AST
-  is validated against a whitelist (names + calls only — the analog of
-  the reference's imports whitelist); single-call specs over one string
-  variable dispatch to vectorized batch kernels.
+* **Flat** — a single call ``fn(${var}, literal…)`` of ``ind``, ``bag``,
+  ``nGrams``, ``skipGrams``, ``sos2``, ``sos2U`` or ``csos2``
+  (``match_single_call``) runs as a whole-batch numpy kernel inside the
+  Arrow stage (``try_compile_flat``; functions/batch.py).
+* **Binning (JVM)** — the same match for ``sos2`` / ``sos2U`` /
+  ``csos2`` also yields a static key space, so a sparse-vector plan
+  made only of Column and binning features stays in Catalyst with no
+  Python worker (``try_parse_binning``).
+* **Generic** — every other spec compiles to one Python callable
+  evaluated per row inside the Arrow stage (``compile_batch_fn``).  The
+  AST is validated against a whitelist (names + calls only — the
+  analog of the reference's imports whitelist).
 
 Missing/erring bookkeeping follows FeatureExtractorFunction.scala:48-66:
 a feature whose required variable is NULL yields the default bag
@@ -97,23 +103,35 @@ def runtime_source(parsed: "ParsedSpec", pyname: str) -> str:
 KWARG_ALIASES = {"maxElements": "max_elements", "splitString": "split"}
 
 
-def _alias_kwargs(fn: Callable) -> Callable:
-    def wrapped(*args, **kwargs):
+def _text_kernel(fn: Callable) -> Callable:
+    """Registry form of a text kernel: Scala kwarg names aliased, and a
+    NULL text is a missing feature (None), as on the flat kernels."""
+    def wrapped(s, *args, **kwargs):
+        if s is None:
+            return None
         kw = {KWARG_ALIASES.get(k, k): v for k, v in kwargs.items()}
-        return fn(*args, **kw)
+        return fn(s, *args, **kw)
     return wrapped
+
+
+def _csos2(value, *knots):
+    """``csos2(x, [k1, k2, ...])`` or, with the knots as trailing
+    arguments, ``csos2(x, k1, k2, ...)``."""
+    if len(knots) == 1 and isinstance(knots[0], (list, tuple)):
+        knots = knots[0]
+    return _sc.csos2(value, list(knots))
 
 
 # functions available to batch-tier specs (the "imports" whitelist)
 REGISTRY: dict[str, Callable] = {
     "ind": _sc.ind,
     "intercept": _sc.intercept,
-    "bag": _alias_kwargs(_tf.bag),
-    "nGrams": _alias_kwargs(_tf.n_grams),
-    "skipGrams": _alias_kwargs(_tf.skip_grams),
+    "bag": _text_kernel(_tf.bag),
+    "nGrams": _text_kernel(_tf.n_grams),
+    "skipGrams": _text_kernel(_tf.skip_grams),
     "sos2": _sc.sos2,
     "sos2U": _sc.sos2_u,
-    "csos2": _sc.csos2,
+    "csos2": _csos2,
     "clamp": _sc.clamp,
     "log2": _sc.log2,
     "abs": abs,
@@ -243,156 +261,196 @@ def compile_batch_fn(parsed: ParsedSpec) -> Callable[..., Any]:
 
 
 # ---------------------------------------------------------------------------
-# Vectorized-batch tier: single-call specs ``fn(${var}, const...)`` over
-# one variable dispatch to whole-batch kernels (functions/batch.py)
+# Single-call specs ``fn(${var}, literal…)``: one matcher feeds both the
+# flat whole-batch kernels (functions/batch.py) and the JVM binning sink
+
+@dataclass(frozen=True)
+class SingleCall:
+    """A spec that is one call over one plain variable whose other
+    arguments are all literals."""
+    fn: str                 # registry function name
+    src: str                # column the kernel reads (runtime_source)
+    default: Any            # the ``${var:-default}`` value, or None
+    args: tuple             # literal positional arguments after the var
+    kwargs: dict            # literal keyword arguments, Scala names aliased
+
+
+_NOT_LITERAL = object()
+
+
+def _literal(node: ast.AST):
+    """The value of a literal argument — a constant, a negative number
+    (``-10`` parses as a UnaryOp), a list — or ``_NOT_LITERAL``."""
+    try:
+        return ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError):
+        return _NOT_LITERAL
+
+
+def _is_number(v) -> bool:
+    return isinstance(v, (int, float)) and not isinstance(v, bool)
+
+
+def match_single_call(parsed: ParsedSpec) -> Optional[SingleCall]:
+    """The one parser of the single-call grammar; None when the spec is
+    anything else (computed arguments, several variables, ...)."""
+    try:
+        node = ast.parse(parsed.expr, mode="eval").body
+    except SyntaxError:
+        return None
+    if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Name)
+            and node.args and isinstance(node.args[0], ast.Name)
+            and node.args[0].id in parsed.variables):
+        return None
+    args = tuple(_literal(a) for a in node.args[1:])
+    kwargs = {KWARG_ALIASES.get(kw.arg, kw.arg): _literal(kw.value)
+              for kw in node.keywords}
+    if None in kwargs or any(v is _NOT_LITERAL
+                             for v in args + tuple(kwargs.values())):
+        return None
+    var = node.args[0].id
+    return SingleCall(node.func.id, runtime_source(parsed, var),
+                      parsed.defaults.get(var), args, kwargs)
+
+
+def _binning(call: SingleCall) -> Optional[dict]:
+    """sos2 / sos2U over literal (vmin, vmax, delta), or csos2 over a
+    sorted literal knot list given as one list or as trailing
+    arguments; no default, no keywords."""
+    if call.default is not None or call.kwargs:
+        return None
+    if call.fn == "csos2":
+        knots = call.args[0] if len(call.args) == 1 \
+            and isinstance(call.args[0], list) else list(call.args)
+        if len(knots) < 2 or not all(map(_is_number, knots)) \
+                or sorted(knots) != knots:
+            return None     # the generic tier handles degenerate knots
+        return {"fn": "csos2", "src": call.src, "knots": knots}
+    if call.fn not in ("sos2", "sos2U") or len(call.args) != 3 \
+            or not all(map(_is_number, call.args)):
+        return None
+    vmin, vmax, delta = call.args
+    if delta <= 0 or vmax <= vmin:
+        return None
+    return {"fn": call.fn.lower(), "src": call.src,
+            "vmin": vmin, "vmax": vmax, "delta": delta}
+
+
+#: positional parameters after the text of the text kernels
+#: (functions/textfeatures.py signatures)
+_TEXT_PARAMS = {
+    "bag": ("prefix", "suffix", "split", "max_elements"),
+    "nGrams": ("n", "sep", "prefix", "suffix", "split", "max_elements"),
+    "skipGrams": ("n", "k", "sep", "prefix", "suffix", "split",
+                  "max_elements"),
+}
+
+
+def _text_params(call: SingleCall) -> Optional[dict]:
+    """Keyword form of a bag / nGrams / skipGrams call the flat kernels
+    cover: scalar literals, a string default, no maxElements."""
+    names = _TEXT_PARAMS[call.fn]
+    if len(call.args) > len(names) or (
+            call.default is not None and not isinstance(call.default, str)):
+        return None
+    params = dict(call.kwargs)
+    for k, v in zip(names, call.args):
+        if k in params:
+            return None
+        params[k] = v
+    if not set(params) <= set(names) \
+            or params.pop("max_elements", None) is not None \
+            or not all(v is None or isinstance(v, (str, int, float))
+                       for v in params.values()):
+        return None
+    if call.fn != "bag":
+        n, k = params.get("n"), params.setdefault("k", 0)
+        if not (isinstance(n, int) and isinstance(k, int)) \
+                or isinstance(n, bool) or n < 1 or k < 0:
+            return None
+    return params
+
 
 def try_compile_flat(parsed: ParsedSpec):
-    """Compile ``bag(${t})`` / ``nGrams(${t}, 2)`` / ``skipGrams(${t}, 2, k)``
-    to a flat whole-batch kernel for the hashed sparse-vector sink
+    """Compile a single-call ``ind`` / ``bag`` / ``nGrams`` / ``skipGrams``
+    / ``sos2`` / ``sos2U`` / ``csos2`` spec to a flat whole-batch kernel
     (no per-row dicts; unique-key-table hashing; shared tokenization).
 
     Returns ``(fn, src_col)`` where
     ``fn(cache, feature_name, hash_fn) -> (idx, vals, row_ids, isna)``,
-    or None when the spec doesn't fit (maxElements, non-const args,
-    non-string default) — those run on the dict tiers instead.  n == 2
+    or None when the spec doesn't fit (maxElements, non-literal args,
+    non-string default) — those run on the generic tier instead.  n == 2
     grams use the packed-int64 pair kernel; any other n uses the
     general tuple-unique kernel (gramgrams_flat).
     """
     from ..functions.batch import (
-        bag_flat, csos2_flat, ind_flat, pairgrams_flat, sos2_flat)
+        bag_flat, csos2_flat, gramgrams_flat, ind_flat, pairgrams_flat,
+        sos2_flat)
 
-    try:
-        tree = ast.parse(parsed.expr, mode="eval")
-    except SyntaxError:
+    call = match_single_call(parsed)
+    if call is None:
         return None
-    node = tree.body
-    if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Name)
-            and node.func.id in ("bag", "nGrams", "skipGrams", "ind",
-                                 "sos2", "sos2U", "csos2")):
-        return None
-    if not node.args or not isinstance(node.args[0], ast.Name):
-        return None
-    var = node.args[0].id
-    if var not in parsed.variables:
-        return None
-    default = parsed.defaults.get(var)
-    src_col0 = runtime_source(parsed, var)
+    col, default = call.src, call.default
 
-    if node.func.id == "ind":
-        if len(node.args) > 1 or node.keywords or default is not None:
+    if call.fn == "ind":
+        if call.args or call.kwargs or default is not None:
             return None
 
-        def fn_ind(cache, name, hash_fn, _col=src_col0):
+        def fn_ind(cache, name, hash_fn, _col=col):
             return ind_flat(cache, _col, name, hash_fn)
 
-        return fn_ind, src_col0
+        return fn_ind, col
 
-    if node.func.id == "csos2":
-        if node.keywords or default is not None or len(node.args) != 2 \
-                or not isinstance(node.args[1], ast.List):
+    if call.fn in ("sos2", "sos2U", "csos2"):
+        b = _binning(call)
+        if b is None:
             return None
-        knots = []
-        for el in node.args[1].elts:
-            if not isinstance(el, ast.Constant) \
-                    or not isinstance(el.value, (int, float)):
-                return None
-            knots.append(el.value)
-        if len(knots) < 2 or sorted(knots) != knots:
-            return None     # dict tier handles degenerate knot lists
+        if call.fn == "csos2":
+            def fn_csos2(cache, name, hash_fn, _col=col,
+                         _k=tuple(b["knots"])):
+                return csos2_flat(cache, _col, name, hash_fn, _k)
 
-        def fn_csos2(cache, name, hash_fn, _col=src_col0, _k=tuple(knots)):
-            return csos2_flat(cache, _col, name, hash_fn, _k)
-
-        return fn_csos2, src_col0
-
-    if node.func.id in ("sos2", "sos2U"):
-        if node.keywords or default is not None or len(node.args) != 4:
-            return None
-        consts_ = []
-        for a in node.args[1:]:
-            if not isinstance(a, ast.Constant) \
-                    or not isinstance(a.value, (int, float)):
-                return None
-            consts_.append(float(a.value))
-        vmin_, vmax_, delta_ = consts_
-        uf, uk = (("UNDERFLOW", "UNK") if node.func.id == "sos2U"
+            return fn_csos2, col
+        uf, uk = (("UNDERFLOW", "UNK") if call.fn == "sos2U"
                   else (None, None))
 
-        def fn_sos2(cache, name, hash_fn, _col=src_col0, _a=vmin_, _b=vmax_,
-                    _d=delta_, _uf=uf, _uk=uk):
+        def fn_sos2(cache, name, hash_fn, _col=col, _a=float(b["vmin"]),
+                    _b=float(b["vmax"]), _d=float(b["delta"]), _uf=uf,
+                    _uk=uk):
             return sos2_flat(cache, _col, name, hash_fn, _a, _b, _d,
                              underflow=_uf, unknown_key=_uk)
 
-        return fn_sos2, src_col0
+        return fn_sos2, col
 
-    if default is not None and not isinstance(default, str):
+    if call.fn not in _TEXT_PARAMS:
         return None
-    consts = []
-    for a in node.args[1:]:
-        if not isinstance(a, ast.Constant):
-            return None
-        consts.append(a.value)
-    kwargs = {}
-    for kw in node.keywords:
-        if kw.arg is None or not isinstance(kw.value, ast.Constant):
-            return None
-        kwargs[KWARG_ALIASES.get(kw.arg, kw.arg)] = kw.value.value
-    if "max_elements" in kwargs:
+    params = _text_params(call)
+    if params is None:
         return None
-    src_col = src_col0
 
-    fname = node.func.id
-    if fname == "bag":
-        # bag(s, prefix="=", suffix="", split=r"\s+", max_elements=None)
-        names = ["prefix", "suffix", "split", "max_elements"]
-        for i, v in enumerate(consts):
-            kwargs.setdefault(names[i], v)
-        if kwargs.get("max_elements") is not None:
-            return None
-        kwargs.pop("max_elements", None)
-        bound = dict(kwargs)
-
-        def fn(cache, name, hash_fn, _col=src_col, _kw=bound, _d=default):
+    if call.fn == "bag":
+        def fn_bag(cache, name, hash_fn, _col=col, _kw=params, _d=default):
             return bag_flat(cache, _col, name, hash_fn, default=_d, **_kw)
 
-        return fn, src_col
+        return fn_bag, col
 
-    # nGrams(s, n, sep, prefix, suffix, split, max_elements)
-    # skipGrams(s, n, k, sep, prefix, suffix, split, max_elements)
-    if fname == "nGrams":
-        names = ["n", "sep", "prefix", "suffix", "split", "max_elements"]
-    else:
-        names = ["n", "k", "sep", "prefix", "suffix", "split", "max_elements"]
-    for i, v in enumerate(consts):
-        kwargs.setdefault(names[i], v)
-    n = kwargs.get("n")
-    if not isinstance(n, int) or n < 1 \
-            or kwargs.get("max_elements") is not None:
-        return None
-    k = int(kwargs.get("k", 0)) if fname == "skipGrams" else 0
-    bound = {kk: vv for kk, vv in kwargs.items()
-             if kk in ("sep", "prefix", "suffix", "split")}
-
+    n, k = params.pop("n"), params.pop("k")
     if n == 2:
         # dedicated pair kernel: packs code pairs into one int64 —
         # cheaper than the general tuple-unique path
-        distances = tuple(range(1, k + 2))
-
-        def fn(cache, name, hash_fn, _col=src_col, _kw=bound, _d=default,
-               _dist=distances):
+        def fn_pair(cache, name, hash_fn, _col=col, _kw=params, _d=default,
+                    _dist=tuple(range(1, k + 2))):
             return pairgrams_flat(cache, _col, name, hash_fn, _dist,
                                   default=_d, **_kw)
 
-        return fn, src_col
+        return fn_pair, col
 
-    from ..functions.batch import gramgrams_flat
-
-    def fn_n(cache, name, hash_fn, _col=src_col, _kw=bound, _d=default,
+    def fn_n(cache, name, hash_fn, _col=col, _kw=params, _d=default,
              _n=n, _k=k):
         return gramgrams_flat(cache, _col, name, hash_fn, _n, _k,
                               default=_d, **_kw)
 
-    return fn_n, src_col
+    return fn_n, col
 
 
 def try_parse_binning(parsed: ParsedSpec):
@@ -401,87 +459,9 @@ def try_parse_binning(parsed: ParsedSpec):
     have *enumerable* key spaces (grid bins / knots / UNK / UNDERFLOW),
     so every murmur hash is a driver-side compile-time constant.
     Returns None when the spec needs a Python tier (defaults, computed
-    args) — mirroring try_compile_flat's constraints."""
-    try:
-        tree = ast.parse(parsed.expr, mode="eval")
-    except SyntaxError:
-        return None
-    node = tree.body
-    if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Name)
-            and node.func.id in ("sos2", "sos2U", "csos2")):
-        return None
-    if not node.args or not isinstance(node.args[0], ast.Name) \
-            or node.keywords:
-        return None
-    var = node.args[0].id
-    if var not in parsed.variables or parsed.defaults.get(var) is not None:
-        return None
-    src = runtime_source(parsed, var)
-    if node.func.id == "csos2":
-        if len(node.args) != 2 or not isinstance(node.args[1], ast.List):
-            return None
-        knots = []
-        for el in node.args[1].elts:
-            if not isinstance(el, ast.Constant) \
-                    or not isinstance(el.value, (int, float)):
-                return None
-            knots.append(el.value)
-        if len(knots) < 2 or sorted(knots) != knots:
-            return None
-        return {"fn": "csos2", "src": src, "knots": knots}
-    if len(node.args) != 4:
-        return None
-    consts = []
-    for a in node.args[1:]:
-        if not isinstance(a, ast.Constant) \
-                or not isinstance(a.value, (int, float)):
-            return None
-        consts.append(a.value)
-    vmin, vmax, delta = consts
-    if delta <= 0 or vmax <= vmin:
-        return None
-    return {"fn": "sos2u" if node.func.id == "sos2U" else "sos2",
-            "src": src, "vmin": vmin, "vmax": vmax, "delta": delta}
-
-
-def try_compile_vbatch(parsed: ParsedSpec):
-    """Returns ``(kernel_fn, var_name)`` where ``kernel_fn(series) ->
-    list[bag|None]``, or None if the spec doesn't fit the pattern."""
-    from ..functions.batch import BATCH_KERNELS
-
-    try:
-        tree = ast.parse(parsed.expr, mode="eval")
-    except SyntaxError:
-        return None
-    node = tree.body
-    if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Name)
-            and node.func.id in BATCH_KERNELS):
-        return None
-    if not node.args or not isinstance(node.args[0], ast.Name):
-        return None
-    var = node.args[0].id
-    if var not in parsed.variables or var in parsed.defaults:
-        return None
-    const_args = []
-    for a in node.args[1:]:
-        if isinstance(a, ast.Constant):
-            const_args.append(a.value)
-        elif isinstance(a, ast.UnaryOp) and isinstance(a.op, ast.USub) \
-                and isinstance(a.operand, ast.Constant):
-            const_args.append(-a.operand.value)
-        else:
-            return None
-    kwargs = {}
-    for kw in node.keywords:
-        if kw.arg is None or not isinstance(kw.value, ast.Constant):
-            return None
-        kwargs[KWARG_ALIASES.get(kw.arg, kw.arg)] = kw.value.value
-    kernel = BATCH_KERNELS[node.func.id]
-
-    def fn(series):
-        return kernel(series, *const_args, **kwargs)
-
-    return fn, var
+    args) — the same single-call match try_compile_flat uses."""
+    call = match_single_call(parsed)
+    return None if call is None else _binning(call)
 
 
 # ---------------------------------------------------------------------------

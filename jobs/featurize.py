@@ -71,12 +71,14 @@ def main(argv=None):
     from aloha_spark.operators.asof import asof_join
     from aloha_spark.operators.windows import (
         with_backfill, with_lag_lead, with_session_id, with_ts_delta)
-    from aloha_spark.plans.lineage import write_with_lineage
+    from aloha_spark.plans.lineage import (
+        repair, verify_lineage, write_with_lineage)
     from aloha_spark.plans.pipeline import FeaturePipeline
     from aloha_spark.plans.spec import PipelineSpec
     from aloha_spark.sources.tables import read_table
     from aloha_spark.tuning import arrow_batch_rows, worker_channel_confs
 
+    embedded = SparkSession.getActiveSession() is not None
     spark = (SparkSession.builder.appName("aloha-spark-featurize")
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
              .config("spark.sql.adaptive.enabled", "true")
@@ -126,93 +128,60 @@ def main(argv=None):
     # featurization is row-local; rebalance away from conv-hash
     # partitioning so skewed conversations don't serialize one task
     x = x.repartition(int(spark.sparkContext.defaultParallelism) * 2)
-    if args.output == "multi":
+    sink_fns = {"sparse": pipe.to_sparse_vectors, "vw": pipe.to_vw_lines,
+                "libsvm": pipe.to_libsvm_lines}
+    multi = args.output == "multi"
+    if multi:
         # S14 fan-out (datasetCli.scala:84-124 analog): compute the
         # windowed+joined upstream ONCE (persist), then run each sink's
         # featurize+format over it — one pass over the expensive stages,
         # three output datasets with independent lineage tables
         x = x.persist()
-        reports = {}
-        for sink_name, fn in (("sparse", pipe.to_sparse_vectors),
-                              ("vw", pipe.to_vw_lines),
-                              ("libsvm", pipe.to_libsvm_lines)):
-            out = fn(x, keep_cols=keep)
-            reports[sink_name] = write_with_lineage(
-                out, f"{args.out}/{sink_name}",
-                f"{args.lineage}/{sink_name}", key=args.by, ts_col=args.on,
-                num_buckets=args.num_buckets, group_size=args.group_size)
-        x.unpersist()
-        result = {
-            "sinks": {k: {"written_buckets": len(r.written_buckets),
-                          "skipped_buckets": len(r.skipped_buckets),
-                          "groups": r.groups} for k, r in reports.items()},
-            "wall_sec": round(time.time() - t0, 1),
-        }
-        if args.verify:
-            from aloha_spark.plans.lineage import repair, verify_lineage
-            total_bad = 0
-            for sink_name in reports:
-                o, ln = f"{args.out}/{sink_name}", f"{args.lineage}/{sink_name}"
-                bad_rows = verify_lineage(spark, o, ln,
-                                          ts_col=args.on).collect()
-                result["sinks"][sink_name]["lineage_mismatches"] =                     len(bad_rows)
-                if bad_rows and args.repair:
-                    repair(spark, ln, [r[0] for r in bad_rows])
-                    # note: repairing a sink re-featurizes its buckets
-                    fn = {"sparse": pipe.to_sparse_vectors,
-                          "vw": pipe.to_vw_lines,
-                          "libsvm": pipe.to_libsvm_lines}[sink_name]
-                    write_with_lineage(
-                        fn(x, keep_cols=keep), o, ln, key=args.by,
-                        ts_col=args.on, num_buckets=args.num_buckets,
-                        group_size=args.group_size)
-                    bad_rows = verify_lineage(spark, o, ln,
-                                              ts_col=args.on).collect()
-                    result["sinks"][sink_name][
-                        "lineage_mismatches_after_repair"] = len(bad_rows)
-                total_bad += len(bad_rows)
-            print(json.dumps(result))
-            spark.stop()
-            sys.exit(1 if total_bad else 0)
-        print(json.dumps(result))
-        spark.stop()
-        return
-    if args.output == "sparse":
-        out = pipe.to_sparse_vectors(x, keep_cols=keep)
-    elif args.output == "vw":
-        out = pipe.to_vw_lines(x, keep_cols=keep)
-    else:
-        out = pipe.to_libsvm_lines(x, keep_cols=keep)
+    # sink -> (frame, output path, lineage path)
+    sinks = {name: (fn(x, keep_cols=keep),
+                    f"{args.out}/{name}" if multi else args.out,
+                    f"{args.lineage}/{name}" if multi else args.lineage)
+             for name, fn in sink_fns.items()
+             if multi or name == args.output}
 
-    report = write_with_lineage(
-        out, args.out, args.lineage, key=args.by, ts_col=args.on,
-        num_buckets=args.num_buckets, group_size=args.group_size)
-    result = {
-        "written_buckets": len(report.written_buckets),
-        "skipped_buckets": len(report.skipped_buckets),
-        "groups": report.groups,
-        "wall_sec": round(time.time() - t0, 1),
-    }
+    def write(name):
+        out, out_path, lin_path = sinks[name]
+        return write_with_lineage(
+            out, out_path, lin_path, key=args.by, ts_col=args.on,
+            num_buckets=args.num_buckets, group_size=args.group_size)
+
+    def mismatches(name):
+        _out, out_path, lin_path = sinks[name]
+        return verify_lineage(spark, out_path, lin_path,
+                              ts_col=args.on).collect()
+
+    results = {}
+    for name in sinks:
+        report = write(name)
+        results[name] = {"written_buckets": len(report.written_buckets),
+                         "skipped_buckets": len(report.skipped_buckets),
+                         "groups": report.groups}
+    wall = round(time.time() - t0, 1)
+    total_bad = 0
     if args.verify:
-        from aloha_spark.plans.lineage import repair, verify_lineage
-        bad_rows = verify_lineage(spark, args.out, args.lineage,
-                                  ts_col=args.on).collect()
-        result["lineage_mismatches"] = len(bad_rows)
-        if bad_rows and args.repair:
-            bad_ids = [r[0] for r in bad_rows]
-            repair(spark, args.lineage, bad_ids)
-            rep = write_with_lineage(
-                out, args.out, args.lineage, key=args.by, ts_col=args.on,
-                num_buckets=args.num_buckets, group_size=args.group_size)
-            result["repaired_buckets"] = len(rep.written_buckets)
-            bad_rows = verify_lineage(spark, args.out, args.lineage,
-                                      ts_col=args.on).collect()
-            result["lineage_mismatches_after_repair"] = len(bad_rows)
-        print(json.dumps(result))
-        spark.stop()
-        sys.exit(1 if bad_rows else 0)
+        for name, res in results.items():
+            bad_rows = mismatches(name)
+            res["lineage_mismatches"] = len(bad_rows)
+            if bad_rows and args.repair:
+                repair(spark, sinks[name][2], [r[0] for r in bad_rows])
+                res["repaired_buckets"] = len(write(name).written_buckets)
+                bad_rows = mismatches(name)
+                res["lineage_mismatches_after_repair"] = len(bad_rows)
+            total_bad += len(bad_rows)
+    if multi:
+        x.unpersist()
+    result = {"sinks": results} if multi else results[args.output]
+    result["wall_sec"] = wall
     print(json.dumps(result))
-    spark.stop()
+    if not embedded:      # don't tear down a caller's shared session
+        spark.stop()
+    if args.verify:
+        sys.exit(1 if total_bad else 0)
 
 
 if __name__ == "__main__":

@@ -4,7 +4,9 @@ and the flat line sinks of ``aloha_spark.plans.pipeline``.
 ``batch_eval`` evaluates every feature of a compiled plan into one
 Python dict per (row, feature) — the reference's per-row
 ``FeatureExtractorFunction`` model (FeatureExtractorFunction.scala:
-48-66).  ``featurize_rows`` / ``vw_lines`` / ``libsvm_lines`` run it over
+48-66).  Column features read their precomputed column; every other
+feature runs its generic ``compile_batch_fn`` callable, never the flat
+kernels production runs where a spec matches one.  ``featurize_rows`` / ``vw_lines`` / ``libsvm_lines`` run it over
 a pipeline's collected precomputed frame and render the bags with the
 golden-tested row builders in ``aloha_spark.sinks``; the production
 sinks must equal them exactly.
@@ -54,19 +56,6 @@ def batch_eval(plan, pdf: pd.DataFrame):
                     row_bags.append({f"={vals[i]}": 1.0})
                 else:
                     row_bags.append({"": float(vals[i])})
-            bags[name] = row_bags
-            continue
-
-        if fp.kind == "vbatch":
-            series = pdf[_src(fp, fp.variables[0])]
-            isna = series.isna().to_numpy()
-            outs = fp.fn(series)
-            row_bags = []
-            for i in range(n):
-                b = outs[i]
-                if b is None or isna[i]:
-                    missing[i].append(name)
-                row_bags.append(dict(UNK_BAG) if b is None else b)
             bags[name] = row_bags
             continue
 

@@ -1,5 +1,5 @@
 """Flat (whole-batch, dict-free) text kernels must be entry-identical to
-the dict tiers for the hashed sparse-vector sink — including missing
+the generic per-row tier for the hashed sparse-vector sink — including missing
 handling, ${var:-default} substitution, counts, and skip-gram windows."""
 
 import numpy as np
@@ -14,6 +14,7 @@ from aloha_spark.plans.spec import (
     PipelineSpec,
     parse_feature_spec,
     try_compile_flat,
+    try_parse_binning,
 )
 
 MASK = np.int32((1 << 18) - 1)
@@ -109,11 +110,40 @@ class TestFlatKernels:
             "ind(${role:-x})": False,           # default -> generic tier
             "sos2U(${dt}, 0, 7200, 600)": True,
             "sos2(${dt}, 0, 10, 1)": True,
-            "sos2(${dt:-0}, 0, 10, 1)": False,  # default -> dict tier
+            "sos2(${dt:-0}, 0, 10, 1)": False,  # default -> generic tier
+            "sos2(${dt}, -10, 10, 3)": True,    # negative literal
+            "sos2(${dt}, 0, 10, 0)": False,     # degenerate grid
+            "csos2(${x}, 0, 128, 384)": True,   # knots as trailing args
+            "csos2(${x}, [-5, 0, 5])": True,
+            "csos2(${x}, [5, 0])": False,       # unsorted knots
+            "bag(${text}, maxElements=4)": False,
+            "bag(${text}, '=', '', ' ', 3)": False,
+            "nGrams(${text}, 2, maxElements=3)": False,
+            "bag(${text}, ${sep})": False,      # non-literal argument
         }
         for spec, expect in compiled.items():
             got = try_compile_flat(parse_feature_spec("f", spec)) is not None
             assert got == expect, spec
+
+    def test_binning_shares_the_match(self):
+        cases = {
+            "sos2(${dt}, -10, 10, 3)": {
+                "fn": "sos2", "src": "dt", "vmin": -10, "vmax": 10,
+                "delta": 3},
+            "sos2U(${dt}, 0, 7200, 600)": {
+                "fn": "sos2u", "src": "dt", "vmin": 0, "vmax": 7200,
+                "delta": 600},
+            "csos2(${x}, 0, 128, 384)": {
+                "fn": "csos2", "src": "x", "knots": [0, 128, 384]},
+            "csos2(${x}, [-5, 0, 5])": {
+                "fn": "csos2", "src": "x", "knots": [-5, 0, 5]},
+            "sos2(${dt:-0}, 0, 10, 1)": None,
+            "csos2(${x}, [5, 0])": None,
+            "bag(${x})": None,
+        }
+        for spec, want in cases.items():
+            assert try_parse_binning(parse_feature_spec("f", spec)) == want, \
+                spec
 
 
 class TestFlatPipelineParity:

@@ -60,6 +60,18 @@ class TestHeavyHitters:
             assert abs(r["freq"] - r["cnt"] / sum(
                 x["cnt"] / x["freq"] for x in rows[:1])) < 1e-9
 
+    def test_nondeterministic_input_raises(self, spark, docs):
+        for bad in (docs.where(F.rand(7) < 0.5), docs.orderBy(F.rand(7))):
+            with pytest.raises(ValueError, match="deterministic"):
+                heavy_hitters(bad, support=0.2)
+        # a seeded sample is repeatable; a materialized frame is fixed
+        ok = (docs.sample(0.5, seed=3),
+              docs.where(F.rand(7) < 0.5).localCheckpoint())
+        for d in ok:
+            assert {(r["token"], r["cnt"])
+                    for r in heavy_hitters(d, support=0.2).collect()} \
+                == _brute(d, 0.2)
+
     def test_validation(self, spark, docs):
         with pytest.raises(ValueError, match="support"):
             heavy_hitters(docs, support=0.0)

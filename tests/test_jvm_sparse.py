@@ -110,11 +110,12 @@ def test_jvm_matches_arrow_under_collisions(spark):
 
 
 def _mkdf_bins(spark):
-    # grid edges, interior fractions, exact knots, underflow, NaN, null
+    # grid edges, interior fractions, exact knots, underflow, NaN, null,
+    # and a fraction below 2^-53 (one entry, as on the flat kernel)
     data = [(0, 0.0, 2.0), (1, 1.5, 3.0), (2, 5.0, 4.0), (3, 9.7, 1.0),
             (4, 10.0, 5.0), (5, -3.0, 2.5), (6, 42.0, None),
             (7, None, 3.5), (8, float("nan"), 2.0), (9, 2.0, 4.0),
-            (10, 7.999, 3.999), (11, 0.3, 2.0001)]
+            (10, 7.999, 3.999), (11, 0.3, 2.0001), (12, 1e-17, 2.0)]
     return spark.createDataFrame(data, "rid int, x double, y double")
 
 
@@ -217,3 +218,27 @@ def test_jvm_values_exact(spark):
     assert sorted(got.values()) == sorted([3.0, 3.0, 3.0, 14.0, 2.0])
     assert r0.missing_features == []
     assert math.isfinite(sum(got.values()))
+
+
+#: negative literals and trailing csos2 knots reach the binning tier
+#: through the same single-call match as the flat kernels
+NEG_BINNING_SPEC = {
+    "features": [
+        {"name": "s", "spec": "sos2(${x}, -10, 10, 3)"},
+        {"name": "u", "spec": "sos2U(${x}, -6, 6, 4)"},
+        {"name": "c", "spec": "csos2(${x}, -5, 0, 5)"},
+        {"name": "ck", "spec": "csos2(${y}, [-4, 2, 4])"},
+    ],
+    "namespaces": {},
+    "numBits": 18,
+}
+
+
+def test_jvm_matches_arrow_negative_bounds(spark):
+    data = [(0, -12.0, -4.0), (1, -10.0, 2.5), (2, -3.25, None),
+            (3, 0.0, -7.0), (4, 4.5, 3.0), (5, 10.0, float("nan")),
+            (6, None, 4.0), (7, float("nan"), 5.5), (8, -6.0, -1.0)]
+    df = spark.createDataFrame(data, "rid int, x double, y double")
+    j, a = _ab(spark, NEG_BINNING_SPEC, df)
+    assert j == a
+    assert j[1][1] != j[4][1]       # different bins, not one UNK entry

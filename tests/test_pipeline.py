@@ -123,9 +123,10 @@ def test_libsvm_lines(spark):
     assert parts[str(string_hash("w=b") & mask)] == "1.0"
 
 
-#: one feature per evaluator tier: Column (numeric and string), vbatch
-#: without a flat kernel, flat bag / nGrams (n = 2 pair kernel and the
-#: general one), the generic tier with features that raise on some rows,
+#: one feature per evaluator tier: Column (numeric and string), a
+#: positional-maxElements bag on the generic tier, flat bag / nGrams
+#: (n = 2 pair kernel and the general one), the generic tier with
+#: features that raise on some rows,
 #: and an accessor-path variable; ``half``'s sub-unit bins truncate to
 #: the same key, which a bag (a dict) keeps once, last value winning
 TIERS_SPEC = {
@@ -170,7 +171,7 @@ def test_featurize_matches_oracle_every_tier(spark):
     kinds = {fp.name: (fp.kind, fp.flat_fn is not None)
              for fp in pipe.plan.features}
     assert kinds["w"][0] == "column" and kinds["lang"][0] == "string_column"
-    assert kinds["bow3"] == ("vbatch", False)
+    assert kinds["bow3"] == ("batch", False)
     assert all(kinds[f][1] for f in ("lind", "bow", "g2", "g3", "src"))
     assert kinds["ntok"] == ("batch", False) == kinds["inv"]
 
@@ -192,3 +193,171 @@ def test_featurize_matches_oracle_every_tier(spark):
     assert got[4].features[9] == {"src=UNK": 1.0}
     assert list(got[4].features[10]) == ["half=0"]
     assert got[4].features[10]["half=0"] == pytest.approx(0.6)
+
+
+#: single-call shapes the flat kernels do not cover (maxElements, given
+#: by keyword or position) next to shapes only the one single-call
+#: matcher admits (a negative literal, csos2 knots as trailing
+#: arguments)
+SHAPES_SPEC = {
+    "features": [
+        {"name": "bm", "spec": "bag(${text}, maxElements=4)"},
+        {"name": "bp", "spec": "bag(${text}, '=', '', ' ', 3)"},
+        {"name": "gm", "spec": "nGrams(${text}, 2, maxElements=3)"},
+        {"name": "sm", "spec": "skipGrams(${text}, 2, 1, maxElements=3)"},
+        {"name": "sn", "spec": "sos2(${x}, -10, 10, 3)"},
+        {"name": "ck", "spec": "csos2(${x}, 0, 128, 384)"},
+    ],
+    "namespaces": {"t": ["bm", "gm"]},
+    "numBits": 18,
+}
+
+
+def _shapes_df(spark):
+    rows = [
+        (0, "the cat sat on the mat the cat dog", 4.5),
+        (1, None, None),
+        (2, "", float("nan")),
+        (3, "a b c d e f g", -12.0),
+        (4, "x  y", 128.0),
+        (5, "one", 500.0),
+        (6, " lead space", -3.25),
+        (7, "u v u v u v", 10.0),
+    ]
+    return spark.createDataFrame(rows, "id long, text string, x double")
+
+
+# outputs of the same frame and spec before the matcher existed, when
+# all six features ran on a separate per-column "vbatch" tier
+_SHAPES_FEATURIZE = {
+    0: ([{"bm=sat": 1.0, "bm=cat": 2.0, "bm=mat": 1.0, "bm=the": 3.0},
+         {"bp=the": 3.0, "bp=sat": 1.0, "bp=cat": 2.0},
+         {"gm=cat_sat": 1.0, "gm=on_the": 1.0, "gm=mat_the": 1.0},
+         {"sm=the_dog": 1.0, "sm=the_sat": 1.0, "sm=the_the": 1.0},
+         {"sn=2": 0.16666666666666696, "sn=5": 0.833333333333333},
+         {"ck=0": 0.96484375, "ck=128": 0.03515625}], [], []),
+    1: ([{"bm=UNK": 1.0}, {"bp=UNK": 1.0}, {"gm=UNK": 1.0},
+         {"sm=UNK": 1.0}, {"sn=UNK": 1.0}, {"ck=UNK": 1.0}],
+        ["bm", "bp", "gm", "sm", "sn", "ck"], []),
+    2: ([{"bm=": 1.0}, {"bp=": 1.0}, {}, {}, {"sn=UNK": 1.0},
+         {"ck=UNK": 1.0}], ["sn", "ck"], []),
+    3: ([{"bm=f": 1.0, "bm=g": 1.0, "bm=d": 1.0, "bm=e": 1.0},
+         {"bp=e": 1.0, "bp=g": 1.0, "bp=d": 1.0},
+         {"gm=c_d": 1.0, "gm=f_g": 1.0, "gm=b_c": 1.0},
+         {"sm=f_g": 1.0, "sm=b_c": 1.0, "sm=c_d": 1.0},
+         {"sn=-10": 1.0}, {"ck=0": 1.0}], [], []),
+    4: ([{"bm=x": 1.0, "bm=y": 1.0}, {"bp=y": 1.0, "bp=": 1.0, "bp=x": 1.0},
+         {"gm=x_y": 1.0}, {"sm=x_y": 1.0},
+         {"sn=11": 0.666666666666667, "sn=8": 0.33333333333333304},
+         {"ck=128": 1.0}], [], []),
+    5: ([{"bm=one": 1.0}, {"bp=one": 1.0}, {}, {},
+         {"sn=11": 0.666666666666667, "sn=8": 0.33333333333333304},
+         {"ck=384": 1.0}], [], []),
+    6: ([{"bm=space": 1.0, "bm=": 1.0, "bm=lead": 1.0},
+         {"bp=lead": 1.0, "bp=": 1.0, "bp=space": 1.0},
+         {"gm=_lead": 1.0, "gm=lead_space": 1.0},
+         {"sm=_space": 1.0, "sm=lead_space": 1.0, "sm=_lead": 1.0},
+         {"sn=-1": 0.25, "sn=-4": 0.75}, {"ck=0": 1.0}], [], []),
+    7: ([{"bm=u": 3.0, "bm=v": 3.0}, {"bp=u": 3.0, "bp=v": 3.0},
+         {"gm=u_v": 3.0, "gm=v_u": 2.0},
+         {"sm=v_v": 2.0, "sm=v_u": 2.0, "sm=u_v": 3.0},
+         {"sn=11": 0.666666666666667, "sn=8": 0.33333333333333304},
+         {"ck=0": 0.921875, "ck=128": 0.078125}], [], []),
+}
+_SHAPES_SPARSE = {
+    0: ([12864, 45853, 58075, 114425, 122353, 123559, 126937, 155611,
+         159512, 169297, 181305, 181712, 184160, 189543, 194372, 233905,
+         236173],
+        [1.0, 1.0, 0.03515625, 2.0, 0.96484375, 0.16666666666666696, 3.0,
+         1.0, 3.0, 0.833333333333333, 1.0, 1.0, 2.0, 1.0, 1.0, 1.0, 1.0],
+        []),
+    1: ([25471, 120973, 135555, 136091, 211090, 256278], [1.0] * 6,
+        ["bm", "bp", "gm", "sm", "sn", "ck"]),
+    2: ([136091, 150895, 162497, 211090], [1.0] * 4, ["sn", "ck"]),
+    3: ([9385, 52244, 58540, 72590, 95432, 100695, 101855, 122353, 127931,
+         147643, 159449, 205924, 209296, 246319, 254620], [1.0] * 15, []),
+    4: ([5164, 21849, 27800, 58075, 82225, 151252, 162497, 185578, 200056,
+         205659],
+        [1.0, 1.0, 0.33333333333333304, 1.0, 1.0, 1.0, 1.0,
+         0.666666666666667, 1.0, 1.0], []),
+    5: ([27800, 66688, 128778, 175899, 185578],
+        [0.33333333333333304, 1.0, 1.0, 1.0, 0.666666666666667], []),
+    6: ([39769, 71213, 88096, 122353, 150895, 161354, 162497, 166954,
+         196664, 203135, 209637, 220379, 249779, 260473],
+        [1.0] * 7 + [0.75] + [1.0] * 5 + [0.25], []),
+    7: ([760, 27800, 27969, 34485, 48024, 58075, 91718, 93235, 110552,
+         122353, 185578, 197494, 204612],
+        [3.0, 0.33333333333333304, 3.0, 2.0, 3.0, 0.078125, 2.0, 2.0, 3.0,
+         0.921875, 0.666666666666667, 3.0, 3.0], []),
+}
+_SHAPES_VW = {
+    0: "| bp=sat bp=cat:2 bp=the:3 sm=the_dog sm=the_sat sm=the_the "
+       "sn=2:0.166667 sn=5:0.833333 ck=0:0.964844 ck=128:0.035156 "
+       "|t bm=sat bm=cat:2 bm=the:3 bm=mat gm=cat_sat gm=mat_the gm=on_the",
+    1: "| bp=UNK sm=UNK sn=UNK ck=UNK |t bm=UNK gm=UNK",
+    2: "| bp= sn=UNK ck=UNK |t bm=",
+    3: "| bp=e bp=g bp=d sm=f_g sm=b_c sm=c_d sn=-10 ck=0 "
+       "|t bm=e bm=g bm=d bm=f gm=f_g gm=b_c gm=c_d",
+    4: "| bp=x bp= bp=y sm=x_y sn=8:0.333333 sn=11:0.666667 ck=128 "
+       "|t bm=x bm=y gm=x_y",
+    5: "| bp=one sn=8:0.333333 sn=11:0.666667 ck=384 |t bm=one",
+    6: "| bp= bp=lead bp=space sm=_lead sm=_space sm=lead_space "
+       "sn=-4:0.75 sn=-1:0.25 ck=0 |t bm= bm=lead bm=space gm=_lead "
+       "gm=lead_space",
+    7: "| bp=u:3 bp=v:3 sm=v_v:2 sm=v_u:2 sm=u_v:3 sn=8:0.333333 "
+       "sn=11:0.666667 ck=0:0.921875 ck=128:0.078125 "
+       "|t bm=u:3 bm=v:3 gm=u_v:3 gm=v_u:2",
+}
+
+
+def test_single_call_shapes_match_oracle_and_recorded(spark):
+    from aloha_spark.sinks.libsvm import libsvm_indices_values
+    from tests.featurize_oracle import _precomputed, batch_eval, vw_lines
+
+    df = _shapes_df(spark)
+    pipe = FeaturePipeline(PipelineSpec.from_json(SHAPES_SPEC))
+    kinds = {fp.name: (fp.kind, fp.flat_fn is not None)
+             for fp in pipe.plan.features}
+    assert kinds == {"bm": ("batch", False), "bp": ("batch", False),
+                     "gm": ("batch", False), "sm": ("batch", False),
+                     "sn": ("batch", True), "ck": ("batch", True)}
+    assert sorted(pipe._binning) == ["ck", "sn"]
+
+    fz = {r.id: ([dict(m) for m in r.features], list(r.missing_features),
+                 list(r.erring_features))
+          for r in pipe.featurize(df, keep_cols=["id"]).collect()}
+    sv = {r.id: (list(r.indices), list(r.values), list(r.missing_features))
+          for r in pipe.to_sparse_vectors(df, keep_cols=["id"]).collect()}
+    vw = {r.id: r.vw_line
+          for r in pipe.to_vw_lines(df, keep_cols=["id"]).collect()}
+
+    # the generic-only oracle: every feature through compile_batch_fn
+    pdf = _precomputed(pipe, df)
+    _order, bags, missing, erring = batch_eval(pipe.plan, pdf)
+    ids = pdf["id"].tolist()
+    want_fz, want_sv = {}, {}
+    for i, k in enumerate(ids):
+        row = [bags[f][i] for f in range(len(bags))]
+        want_fz[k] = (row, missing[i], erring[i])
+        idx, vals = libsvm_indices_values(row, pipe.spec.num_bits)
+        want_sv[k] = (idx.tolist(), vals.tolist(), missing[i])
+    assert fz == want_fz == _SHAPES_FEATURIZE
+    assert sv == want_sv == _SHAPES_SPARSE
+    assert vw == vw_lines(pipe, df, "id") == _SHAPES_VW
+    # a NULL text under maxElements is missing, not erring
+    assert fz[1][1] == ["bm", "bp", "gm", "sm", "sn", "ck"]
+    assert all(not err for _f, _m, err in fz.values())
+
+
+def test_flagship_features_keep_their_tiers(spark):
+    from aloha_spark.plans.flagship import FLAGSHIP_SPEC
+
+    pipe = FeaturePipeline(PipelineSpec.from_json(FLAGSHIP_SPEC))
+    tiers = {fp.name: (fp.kind, fp.flat_fn is not None)
+             for fp in pipe.plan.features}
+    flat = ("batch", True)
+    assert tiers == {"role": flat, "tool": flat, "bow": flat, "bi": flat,
+                     "sk": flat, "prev_bow": flat,
+                     "dt": ("column", False), "dt_bin": flat,
+                     "state": ("column", False)}
+    assert list(pipe._binning) == ["dt_bin"]

@@ -6,7 +6,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from aloha_spark.functions.batch import _ind_value_str, ind_batch
+from aloha_spark.functions.batch import TokenCache, _ind_value_str, ind_flat
 from aloha_spark.functions.scalars import ind
 from aloha_spark.operators.dedup import exact_dedup
 from aloha_spark.plans.pipeline import FeaturePipeline
@@ -82,7 +82,10 @@ class TestDoubleToStringParity:
         assert ind(23.0) == {"=23.0": 1.0}
         assert ind(1.23e-5) == {"=1.23E-5": 1.0}
         assert _ind_value_str(1.0e7) == "1.0E7"
-        assert ind_batch(pd.Series([1.0e7]))[0] == {"=1.0E7": 1.0}
+        keys, _vals, _rids, _isna = ind_flat(
+            TokenCache(pd.DataFrame({"x": [1.0e7]})), "x", "f",
+            lambda ks: np.asarray(ks, dtype=object))
+        assert keys.tolist() == ["f=1.0E7"]
 
 
 class TestNormalizerRobustness:

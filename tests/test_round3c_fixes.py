@@ -60,13 +60,22 @@ class TestHashPadBucketing:
 
 class TestSos2DenormalGate:
     def test_batch_matches_scalar_at_denormal_frac(self):
-        from aloha_spark.functions.batch import sos2_batch
+        from aloha_spark.functions.batch import TokenCache
         from aloha_spark.functions.scalars import sos2
-        # 0 < frac < 2^-53: 1-frac rounds to exactly 1.0 -> the dict
-        # tier emits ONE entry; the batch tier must agree
+        from aloha_spark.plans.spec import (
+            parse_feature_spec, try_compile_flat)
+        # 0 < frac < 2^-53: 1-frac rounds to exactly 1.0 -> the scalar
+        # function emits ONE entry; the kernel the spec compiles to
+        # must agree
         v = 1e-17
         assert sos2(v, 0, 10, 1) == {"=0": 1.0}
-        assert sos2_batch(pd.Series([v]), 0, 10, 1)[0] == {"=0": 1.0}
+        fn, col = try_compile_flat(
+            parse_feature_spec("f", "sos2(${x}, 0, 10, 1)"))
+        keys, vals, rids, isna = fn(
+            TokenCache(pd.DataFrame({col: [v]})), "f",
+            lambda ks: np.asarray(ks, dtype=object))
+        assert keys.tolist() == ["f=0"] and vals.tolist() == [1.0]
+        assert rids.tolist() == [0] and not isna.any()
 
     def test_flat_matches_scalar_at_denormal_frac(self):
         from aloha_spark.functions.batch import TokenCache, sos2_flat
@@ -85,15 +94,17 @@ class TestSos2DenormalGate:
 
 class TestIndSetParity:
     def test_set_expansion_deterministic_and_tier_equal(self):
-        from aloha_spark.functions.batch import ind_batch
+        from aloha_spark.functions.batch import TokenCache, ind_flat
         from aloha_spark.functions.scalars import ind
         s = {"b", "a", "c"}
         exp = {"=a": 1.0, "=b": 1.0, "=c": 1.0}
         assert ind(s) == exp
         assert list(ind(s)) == ["=a", "=b", "=c"]  # sorted, deterministic
-        got = ind_batch(pd.Series([s], dtype=object))[0]
-        assert got == exp
-        assert list(got) == ["=a", "=b", "=c"]
+        keys, vals, rids, isna = ind_flat(
+            TokenCache(pd.DataFrame({"x": pd.Series([s], dtype=object)})),
+            "x", "f", lambda ks: np.asarray(ks, dtype=object))
+        assert keys.tolist() == ["f=a", "f=b", "f=c"]   # same order
+        assert vals.tolist() == [1.0] * 3 and rids.tolist() == [0] * 3
 
 
 class TestCsvVectorMissing:
