@@ -124,21 +124,6 @@ def asof_join(
     # side: state sorts before turns at equal ts iff exact matches allowed
     state_side, turn_side = (0, 1) if allow_exact else (2, 1)
 
-    t = turns
-    # NULL join keys never match (SQL equi-join / pd.merge_asof
-    # semantics): drop NULL-key state rows up front — without this the
-    # window's partitionBy groups NULL keys together and forward-fills
-    # state onto NULL-key turns.  NULL-key TURN rows pass through with
-    # NULL state columns.
-    s = state.select(by, on, *state_cols).where(F.col(by).isNotNull())
-    for c in state_cols:
-        t = t.withColumn(c, F.lit(None).cast(s.schema[c].dataType))
-    for c in turn_cols:
-        if c not in (by, on) and c not in state_cols:
-            s = s.withColumn(c, F.lit(None).cast(turns.schema[c].dataType))
-    t = t.withColumn(_SIDE, F.lit(turn_side))
-    s = s.withColumn(_SIDE, F.lit(state_side))
-
     if hot_keys is None and hot_key_threshold is not None:
         hot_keys = detect_hot_keys(turns, by, hot_key_threshold)
     hot_keys = list(hot_keys) if hot_keys else []
@@ -146,33 +131,38 @@ def asof_join(
     if hot_keys:
         hot = F.col(by).isin(hot_keys)
         # turns: deterministic pseudo-random salt from the order column
-        t = t.withColumn(
-            _SALT,
-            F.when(hot, F.pmod(F.xxhash64(F.col(on).cast("string"), F.lit(42)),
-                               F.lit(salt_buckets)).cast("int")).otherwise(F.lit(0)))
+        turn_salt = F.when(
+            hot, F.pmod(F.xxhash64(F.col(on).cast("string"), F.lit(42)),
+                        F.lit(salt_buckets)).cast("int")).otherwise(F.lit(0))
         # state: replicate hot-key state into every salt bucket
-        s = (s.withColumn(
-                "__salts",
-                F.when(hot, F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
-                 .otherwise(F.array(F.lit(0))))
-             .withColumn(_SALT, F.explode("__salts"))
-             .withColumn(_SALT, F.col(_SALT).cast("int"))
-             .drop("__salts"))
+        # (sequence of int literals is already array<int>; a cast
+        # around the generator would nest it in an expression)
+        state_salt = F.explode(
+            F.when(hot, F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
+             .otherwise(F.array(F.lit(0))))
         part_cols = [by, _SALT]
     else:
-        t = t.withColumn(_SALT, F.lit(0))
-        s = s.withColumn(_SALT, F.lit(0))
+        turn_salt = state_salt = F.lit(0)
         part_cols = [by]
 
-    unioned = t.unionByName(s)
+    # one projection per side of the union; each side's missing columns
+    # come out of the union as typed NULLs.  NULL join keys never match
+    # (SQL equi-join / pd.merge_asof semantics): drop NULL-key state rows
+    # up front — without this the window's partitionBy groups NULL keys
+    # together and forward-fills state onto NULL-key turns.  NULL-key
+    # TURN rows pass through with NULL state columns.
+    t = turns.select("*", F.lit(turn_side).alias(_SIDE),
+                     turn_salt.alias(_SALT))
+    s = state.where(F.col(by).isNotNull()).select(
+        by, on, *state_cols, F.lit(state_side).alias(_SIDE),
+        state_salt.alias(_SALT))
+    unioned = t.unionByName(s, allowMissingColumns=True)
 
     # state struct carries its own `on` value so the nearest
     # direction can compare distances without a second join
-    packed = unioned.withColumn(
-        "__state",
-        F.when(F.col(_SIDE) != turn_side,
-               F.struct(F.col(on).alias("__s_ts"),
-                        *[F.col(c).alias(c) for c in state_cols])))
+    packed = F.when(F.col(_SIDE) != turn_side,
+                    F.struct(F.col(on).alias("__s_ts"),
+                             *[F.col(c).alias(c) for c in state_cols]))
 
     def fill(asc: bool) -> Column:
         order_cols: list[Column] = [
@@ -183,12 +173,12 @@ def asof_join(
                                      F.col(tiebreaker)).asc_nulls_first())
         w = (Window.partitionBy(*part_cols).orderBy(*order_cols)
              .rowsBetween(Window.unboundedPreceding, 0))
-        return F.last("__state", ignorenulls=True).over(w)
+        return F.last(packed, ignorenulls=True).over(w)
 
     # distance arithmetic needs a numeric: timestamps (incl.
     # TIMESTAMP_NTZ, which cannot cast to double) go through
     # unix_micros, plain numerics cast directly
-    on_tn = unioned.schema[on].dataType.typeName()
+    on_tn = turns.schema[on].dataType.typeName()
     on_is_time = on_tn.startswith("timestamp") or on_tn == "date"
 
     def num(c: Column) -> Column:
@@ -196,26 +186,28 @@ def asof_join(
             return F.unix_micros(c.cast("timestamp"))
         return c.cast("double")
 
+    # the fill is one projection: both fills of "nearest" partition
+    # identically -> ONE exchange, two sorts
     if direction == "nearest":
-        # both fills partition identically -> ONE exchange, two
-        # sorts; pick per row by |state ts - turn ts|, exact ties
-        # to the backward row (pandas' rule: strictly-closer wins)
-        filled = (packed.withColumn("__fb", fill(True))
-                        .withColumn("__ff", fill(False)))
-
-        dist_b = num(F.col(on)) - num(F.col("__fb.__s_ts"))
-        dist_f = num(F.col("__ff.__s_ts")) - num(F.col(on))
-        choose_f = (F.col("__fb").isNull()
-                    | (F.col("__ff").isNotNull() & (dist_f < dist_b)))
-        filled = filled.withColumn(
-            "__filled",
-            F.when(choose_f, F.col("__ff")).otherwise(F.col("__fb")))
+        fills = [fill(True).alias("__fb"), fill(False).alias("__ff")]
     else:
         # forward as-of is backward as-of on reversed time: the fill
         # scans ts DESCENDING, and the side/tiebreaker rules carry over
         # unchanged because both are stated relative to scan order
-        filled = packed.withColumn("__filled",
-                                   fill(direction != "forward"))
+        fills = [fill(direction != "forward").alias("__m")]
+    filled = unioned.select(*turn_cols, _SIDE, *fills) \
+        .where(f"{_SIDE} = {turn_side}")
+
+    if direction == "nearest":
+        # pick per row by |state ts - turn ts|, exact ties to the
+        # backward row (pandas' rule: strictly-closer wins)
+        fb, ff = F.col("__fb"), F.col("__ff")
+        dist_b = num(F.col(on)) - num(fb["__s_ts"])
+        dist_f = num(ff["__s_ts"]) - num(F.col(on))
+        match = F.when(fb.isNull() | (ff.isNotNull() & (dist_f < dist_b)),
+                       ff).otherwise(fb)
+    else:
+        match = F.col("__m")
     if tolerance is not None:
         # staleness bound, applied AFTER the fill: |Δ| <= tolerance
         # keeps the match (inclusive, pd.merge_asof semantics); one
@@ -223,11 +215,7 @@ def asof_join(
         # returns the closest candidate in its direction, so a
         # filtered match can never hide an in-tolerance one.
         tol = float(tolerance) * (1e6 if on_is_time else 1.0)
-        dist = F.abs(num(F.col(on)) - num(F.col("__filled.__s_ts")))
-        filled = filled.withColumn(
-            "__filled",
-            F.when(F.col("__filled").isNotNull() & (dist <= tol),
-                   F.col("__filled")))
-    return filled.where(F.col(_SIDE) == turn_side).select(
-        *turn_cols,
-        *[F.col("__filled")[c].alias(c) for c in state_cols])
+        dist = F.abs(num(F.col(on)) - num(match["__s_ts"]))
+        match = F.when(match.isNotNull() & (dist <= tol), match)
+    return filled.select(*turn_cols,
+                         *[match[c].alias(c) for c in state_cols])

@@ -7,17 +7,23 @@ StatefulRowCreator.scala:36-75); here the per-conversation sequential
 semantics are declared as Spark Window specs so Catalyst plans one
 shuffle per partitioning and whole-stage-codegens the frame evaluation.
 
-All helpers take/return DataFrames and share a single
-``Window.partitionBy(by).orderBy(order)`` so consecutive features reuse
-the same sort (Catalyst collapses adjacent Window operators over the
-same spec into one physical Window).
+Each feature is a Column builder (``lag_col``, ``lead_col``,
+``backfill_col``, ``ts_delta_col``, ``session_id_col``) over one
+``Window.partitionBy(by).orderBy(order)`` spec; the ``with_*`` helpers
+are thin DataFrame wrappers over them.  Window expressions over one
+spec that sit in ONE projection become one physical ``Window``
+operator, whatever their frames.  Each ``with_*`` call is its own
+projection, so chaining them stacks a ``Window`` per call (two for
+``with_session_id``) with Projects between; build several features in one ``withColumns`` /
+``select`` instead (``plans/flagship.py``: two projections, two
+``Window`` operators, one exchange + sort).
 """
 
 from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, Window, WindowSpec, functions as F
+from pyspark.sql import Column, DataFrame, Window, WindowSpec, functions as F
 
 
 def turn_window(by: str = "conv_id", order: Sequence[str] = ("turn_idx",)) -> WindowSpec:
@@ -33,39 +39,73 @@ def epoch_seconds(c) -> "F.Column":
     return F.unix_micros(col.cast("timestamp_ltz")) / F.lit(1e6)
 
 
+def _running(by: str, order: Sequence[str]) -> WindowSpec:
+    return turn_window(by, order).rowsBetween(Window.unboundedPreceding, 0)
+
+
+def lag_col(c: str, k: int = 1, by: str = "conv_id",
+            order: Sequence[str] = ("turn_idx",)) -> Column:
+    """``c`` k turns back (NULL before the first)."""
+    return F.lag(c, k).over(turn_window(by, order))
+
+
+def lead_col(c: str, k: int = 1, by: str = "conv_id",
+             order: Sequence[str] = ("turn_idx",)) -> Column:
+    """``c`` k turns ahead (NULL past the last)."""
+    return F.lead(c, k).over(turn_window(by, order))
+
+
+def backfill_col(c: str, by: str = "conv_id",
+                 order: Sequence[str] = ("turn_idx",)) -> Column:
+    """Last-known value of ``c``: F.last(ignorenulls=True) over an
+    unbounded-preceding frame."""
+    return F.last(c, ignorenulls=True).over(_running(by, order))
+
+
+def ts_delta_col(ts: str = "ts", by: str = "conv_id",
+                 order: Sequence[str] = ("turn_idx",)) -> Column:
+    """Seconds since the previous turn (NULL on the first turn)."""
+    secs = epoch_seconds(ts)
+    return secs - F.lag(secs, 1).over(turn_window(by, order))
+
+
+def session_id_col(delta, gap_seconds: float = 1800.0, by: str = "conv_id",
+                   order: Sequence[str] = ("turn_idx",)) -> Column:
+    """Session index from 0 within each key: the running count of turns
+    whose ``delta`` (seconds since the previous turn: a column name, or
+    a Column such as ``ts_delta_col(...)``) exceeds ``gap_seconds``.  A
+    NULL delta (the first turn) opens no session."""
+    d = F.col(delta) if isinstance(delta, str) else delta
+    new_session = F.when(d > F.lit(float(gap_seconds)), F.lit(1)) \
+        .otherwise(F.lit(0))
+    return F.sum(new_session).over(_running(by, order))
+
+
 def with_lag_lead(df: DataFrame, cols: Sequence[str], by: str = "conv_id",
                   order: Sequence[str] = ("turn_idx",), k: int = 1,
                   lead: bool = True) -> DataFrame:
     """prev_<c>/next_<c> columns (F.lag/F.lead over the turn window)."""
-    w = turn_window(by, order)
-    out = df
+    new = {}
     for c in cols:
-        out = out.withColumn(f"prev_{c}", F.lag(c, k).over(w))
+        new[f"prev_{c}"] = lag_col(c, k, by, order)
         if lead:
-            out = out.withColumn(f"next_{c}", F.lead(c, k).over(w))
-    return out
+            new[f"next_{c}"] = lead_col(c, k, by, order)
+    return df.withColumns(new)
 
 
 def with_ts_delta(df: DataFrame, ts: str = "ts", by: str = "conv_id",
                   order: Sequence[str] = ("turn_idx",),
                   out_col: str = "dt_prev_sec") -> DataFrame:
     """Seconds since the previous turn (NULL on the first turn)."""
-    w = turn_window(by, order)
-    return df.withColumn(
-        out_col,
-        epoch_seconds(ts) - F.lag(epoch_seconds(ts), 1).over(w))
+    return df.withColumn(out_col, ts_delta_col(ts, by, order))
 
 
 def with_backfill(df: DataFrame, cols: Sequence[str], by: str = "conv_id",
                   order: Sequence[str] = ("turn_idx",),
                   prefix: str = "last_") -> DataFrame:
-    """Last-known-value carry-forward: F.last(ignorenulls=True) over an
-    unbounded-preceding frame."""
-    w = turn_window(by, order).rowsBetween(Window.unboundedPreceding, 0)
-    out = df
-    for c in cols:
-        out = out.withColumn(f"{prefix}{c}", F.last(c, ignorenulls=True).over(w))
-    return out
+    """Last-known-value carry-forward of each of ``cols``."""
+    return df.withColumns(
+        {f"{prefix}{c}": backfill_col(c, by, order) for c in cols})
 
 
 def with_session_id(df: DataFrame, ts: str = "ts", by: str = "conv_id",
@@ -76,14 +116,14 @@ def with_session_id(df: DataFrame, ts: str = "ts", by: str = "conv_id",
 
     ``session_window`` yields per-session aggregate rows; per-turn
     features need the id on every row, hence the cumulative-sum form
-    (SURVEY §2.6).  Sessions index from 0 within each key.
+    (SURVEY §2.6).  Sessions index from 0 within each key.  Standalone,
+    this computes its own ts delta (two ``Window`` operators); when
+    ``dt_prev_sec`` is already there, ``session_id_col("dt_prev_sec")``
+    reuses it.
     """
     order = list(order) if order else [ts]
-    w = turn_window(by, order)
-    gap = epoch_seconds(ts) - F.lag(epoch_seconds(ts), 1).over(w)
-    new_session = F.when(gap > F.lit(float(gap_seconds)), F.lit(1)).otherwise(F.lit(0))
-    return df.withColumn(out_col, F.sum(new_session).over(
-        turn_window(by, order).rowsBetween(Window.unboundedPreceding, 0)))
+    return df.withColumn(out_col, session_id_col(
+        ts_delta_col(ts, by, order), gap_seconds, by, order))
 
 
 def with_rolling_count(df: DataFrame, predicate, k: int,

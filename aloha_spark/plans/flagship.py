@@ -7,7 +7,11 @@ Stage order is chosen for shuffle economy at 100 TB scale:
    session id) — these are pure functions of the turns table, so they
    run on the *narrow* frame before any state columns are attached.
    All four share one ``Window.partitionBy(conv_id).orderBy(turn_idx)``
-   spec, so Catalyst plans a single exchange + sort for the lot.
+   spec and are built as two projections: lag + backfill + Δts in one
+   (one physical ``Window``, ``lag(epoch(ts))`` computed once), then
+   the session id as a running sum over that Δts (a second ``Window``).
+   Both sit on one exchange + sort; chaining the four ``with_*``
+   helpers instead stacks four ``Window`` operators.
 2. **Salted as-of join** attaches the latest state — window mode is a
    pure Catalyst plan (union + ``last(struct) ignorenulls`` over an
    unbounded-preceding frame), zero Python.  Running it *after* the
@@ -25,16 +29,16 @@ Stage order is chosen for shuffle economy at 100 TB scale:
 
 from __future__ import annotations
 
-from typing import Iterable, Optional
+from typing import Iterable, Optional, Sequence
 
 from pyspark.sql import DataFrame
 
 from ..operators.asof import asof_join
 from ..operators.windows import (
-    with_backfill,
-    with_lag_lead,
-    with_session_id,
-    with_ts_delta,
+    backfill_col,
+    lag_col,
+    session_id_col,
+    ts_delta_col,
 )
 from .pipeline import FeaturePipeline
 from .spec import PipelineSpec
@@ -76,21 +80,33 @@ FLAGSHIP_SPEC_SMALL = {
 
 def point_in_time_features(
     turns: DataFrame,
-    state: DataFrame,
+    state: Optional[DataFrame],
     *,
+    by: str = "conv_id",
+    on: str = "ts",
+    order: Sequence[str] = ("turn_idx",),
     state_cols: Optional[list] = None,
     hot_keys: Optional[Iterable] = None,
+    hot_key_threshold: Optional[int] = None,
     salt_buckets: int = 8,
     gap_seconds: float = 1800.0,
+    tolerance: Optional[float] = None,
 ) -> DataFrame:
-    """Stages 1-2: windowed turn features + salted as-of state attach."""
-    x = with_lag_lead(turns, ["text"], order=("turn_idx",), lead=False)
-    x = with_backfill(x, ["tool"], order=("turn_idx",))
-    x = with_ts_delta(x, order=("turn_idx",))
-    x = with_session_id(x, gap_seconds=gap_seconds, order=("turn_idx",))
+    """Stages 1-2: windowed turn features (``prev_text``, ``last_tool``,
+    ``dt_prev_sec``, ``session_id`` per ``by`` in ``order``) + salted
+    as-of state attach on ``on`` (skipped when ``state`` is None)."""
+    x = turns.withColumns({
+        "prev_text": lag_col("text", 1, by, order),
+        "last_tool": backfill_col("tool", by, order),
+        "dt_prev_sec": ts_delta_col(on, by, order),
+    }).withColumn("session_id",
+                  session_id_col("dt_prev_sec", gap_seconds, by, order))
+    if state is None:
+        return x
     return asof_join(
-        x, state, on="ts", by="conv_id", state_cols=state_cols,
-        hot_keys=hot_keys, salt_buckets=salt_buckets)
+        x, state, on=on, by=by, state_cols=state_cols, hot_keys=hot_keys,
+        hot_key_threshold=hot_key_threshold, salt_buckets=salt_buckets,
+        tolerance=tolerance)
 
 
 def flagship_vectors(

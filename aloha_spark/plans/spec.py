@@ -540,15 +540,14 @@ def try_compile_column(parsed: ParsedSpec) -> Optional[Column]:
     class _Bail(Exception):
         pass
 
+    # only "not Column-expressible" falls back to the batch tier; any
+    # other error (a bad spec, or no active session to build Columns
+    # in) raises instead of silently moving the feature to a slower tier
+    tree = ast.parse(parsed.expr, mode="eval")
+    _validate_ast(tree, parsed.variables)
     try:
-        tree = ast.parse(parsed.expr, mode="eval")
-        _validate_ast(tree, parsed.variables)
         return conv(tree)
     except _Bail:
-        return None
-    except ValueError:
-        raise
-    except Exception:
         return None
 
 

@@ -7,6 +7,8 @@ that is only right for one workload shape.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 
 def arrow_batch_rows(parallelism: int) -> int:
     """Arrow batch size (``spark.sql.execution.arrow.maxRecordsPerBatch``).
@@ -61,3 +63,61 @@ def worker_channel_confs() -> dict:
     works; the conf is still the safer default wherever Python workers
     colocate with executors."""
     return {"spark.python.unix.domain.socket.enabled": "true"}
+
+
+#: runtime SQL confs a job sets on whatever session it runs on (the
+#: Arrow batch size is added once the session's width is known)
+_JOB_SQL_CONFS = {
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+}
+_ARROW_BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+
+@contextmanager
+def job_session(app_name: str):
+    """The session a spark-submit job (``jobs/featurize.py``,
+    ``jobs/curate.py``) runs on.
+
+    Standalone, the job owns the session and stops it on exit.  Called
+    from a driver that already has an active session, the job runs on
+    that session, and on exit puts back the caller's values of the
+    runtime confs it set (``_JOB_SQL_CONFS`` and the Arrow batch size;
+    a conf the caller never set is unset again) and leaves the session
+    running.  Static confs in the builder do not change an existing
+    session."""
+    from pyspark.sql import SparkSession
+
+    caller = SparkSession.getActiveSession()
+    saved = None if caller is None else {
+        k: caller.conf.get(k, None) for k in (*_JOB_SQL_CONFS, _ARROW_BATCH)}
+    spark = (SparkSession.builder.appName(app_name)
+             .config(map=_JOB_SQL_CONFS)
+             # straggler mitigation on real clusters: every job stage is
+             # idempotent (deterministic transforms + lineage-gated
+             # bucket writes), so a speculative duplicate of a stuck
+             # task is always safe.  Quantile 0.9 + multiplier 3 only
+             # relaunches the long tail (e.g. a host with the
+             # kernel-preemption episodes documented in
+             # BENCH/BASELINE.md); no-op under local[N].
+             .config("spark.speculation", "true")
+             .config("spark.speculation.quantile", "0.9")
+             .config("spark.speculation.multiplier", "3")
+             .config(map=worker_channel_confs())
+             .getOrCreate())
+    # width known only now (spark-submit --master decides): Arrow batch
+    # size is a runtime conf, sized per arrow_batch_rows
+    spark.conf.set(_ARROW_BATCH, str(
+        arrow_batch_rows(spark.sparkContext.defaultParallelism)))
+    try:
+        yield spark
+    finally:
+        if saved is None:
+            spark.stop()
+        else:
+            for k, v in saved.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)

@@ -723,28 +723,17 @@ def curate(spark, args):
 def main(argv=None):
     args = parse_args(argv or sys.argv[1:])
 
-    from pyspark.sql import SparkSession
+    from aloha_spark.tuning import job_session
+
+    with job_session("aloha-spark-curate") as spark:
+        run(spark, args)
+
+
+def run(spark, args):
     import pyspark.sql.functions as F
 
     from aloha_spark.operators.dedup import release_intermediates
     from aloha_spark.plans.lineage import write_with_lineage
-    from aloha_spark.tuning import arrow_batch_rows, worker_channel_confs
-
-    embedded = SparkSession.getActiveSession() is not None
-    spark = (SparkSession.builder.appName("aloha-spark-curate")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             # idempotent stages + lineage-gated bucket writes: a
-             # speculative duplicate of a straggling task is always safe
-             .config("spark.speculation", "true")
-             .config("spark.speculation.quantile", "0.9")
-             .config("spark.speculation.multiplier", "3")
-             .config(map=worker_channel_confs())
-             .getOrCreate())
-    spark.conf.set(
-        "spark.sql.execution.arrow.maxRecordsPerBatch",
-        str(arrow_batch_rows(spark.sparkContext.defaultParallelism)))
 
     t0 = time.time()
     x, pairs, report = curate(spark, args)
@@ -858,8 +847,6 @@ def main(argv=None):
         "wall_sec": round(time.time() - t0, 1),
     })
     print(json.dumps(report))
-    if not embedded:      # don't tear down a caller's shared session
-        spark.stop()
 
 
 if __name__ == "__main__":

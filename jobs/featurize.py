@@ -66,63 +66,35 @@ def parse_args(argv):
 def main(argv=None):
     args = parse_args(argv or sys.argv[1:])
 
-    from pyspark.sql import SparkSession
+    from aloha_spark.tuning import job_session
 
-    from aloha_spark.operators.asof import asof_join
-    from aloha_spark.operators.windows import (
-        with_backfill, with_lag_lead, with_session_id, with_ts_delta)
+    with job_session("aloha-spark-featurize") as spark:
+        run(spark, args)
+
+
+def run(spark, args):
+    from aloha_spark.plans.flagship import point_in_time_features
     from aloha_spark.plans.lineage import (
         repair, verify_lineage, write_with_lineage)
     from aloha_spark.plans.pipeline import FeaturePipeline
     from aloha_spark.plans.spec import PipelineSpec
     from aloha_spark.sources.tables import read_table
-    from aloha_spark.tuning import arrow_batch_rows, worker_channel_confs
-
-    embedded = SparkSession.getActiveSession() is not None
-    spark = (SparkSession.builder.appName("aloha-spark-featurize")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             # straggler mitigation on real clusters: every stage here
-             # is idempotent (deterministic transforms + noop/overwrite
-             # bucket writes gated by the lineage table), so a
-             # speculative duplicate of a stuck task is always safe.
-             # Quantile 0.9 + multiplier 3 only relaunches the long
-             # tail (e.g. a host with the kernel-preemption episodes
-             # documented in BENCH/BASELINE.md); no-op under local[N].
-             .config("spark.speculation", "true")
-             .config("spark.speculation.quantile", "0.9")
-             .config("spark.speculation.multiplier", "3")
-             .config(map=worker_channel_confs())
-             .getOrCreate())
-    # width known only now (spark-submit --master decides): Arrow batch
-    # size is a runtime conf, sized per aloha_spark/tuning.py
-    spark.conf.set(
-        "spark.sql.execution.arrow.maxRecordsPerBatch",
-        str(arrow_batch_rows(spark.sparkContext.defaultParallelism)))
 
     t0 = time.time()
     with open(args.spec) as f:
         spec = PipelineSpec.from_json(f.read())
     pipe = FeaturePipeline(spec)
 
-    turns = read_table(spark, args.turns, args.format)
     # turn-side windows FIRST (narrow frame, one exchange serves all
-    # four specs), then the as-of join — see aloha_spark/plans/flagship.py
-    x = with_lag_lead(turns, ["text"], by=args.by, order=(args.order,),
-                      lead=False)
-    x = with_backfill(x, ["tool"], by=args.by, order=(args.order,))
-    x = with_ts_delta(x, ts=args.on, by=args.by, order=(args.order,))
-    x = with_session_id(x, ts=args.on, by=args.by, order=[args.order],
-                        gap_seconds=args.gap_seconds)
-    if args.state:
-        state = read_table(spark, args.state, args.format)
-        state_cols = (args.state_cols.split(",") if args.state_cols else None)
-        x = asof_join(x, state, on=args.on, by=args.by,
-                      state_cols=state_cols,
-                      hot_key_threshold=args.hot_key_threshold,
-                      salt_buckets=args.salt_buckets,
-                      tolerance=args.asof_tolerance)
+    # four features), then the as-of join — see aloha_spark/plans/flagship.py
+    state = read_table(spark, args.state, args.format) if args.state else None
+    x = point_in_time_features(
+        read_table(spark, args.turns, args.format), state,
+        by=args.by, on=args.on, order=(args.order,),
+        state_cols=args.state_cols.split(",") if args.state_cols else None,
+        hot_key_threshold=args.hot_key_threshold,
+        salt_buckets=args.salt_buckets, gap_seconds=args.gap_seconds,
+        tolerance=args.asof_tolerance)
 
     keep = [args.by, args.order, args.on]
     # featurization is row-local; rebalance away from conv-hash
@@ -178,8 +150,6 @@ def main(argv=None):
     result = {"sinks": results} if multi else results[args.output]
     result["wall_sec"] = wall
     print(json.dumps(result))
-    if not embedded:      # don't tear down a caller's shared session
-        spark.stop()
     if args.verify:
         sys.exit(1 if total_bad else 0)
 

@@ -508,11 +508,17 @@ def test_curate_snapshot_increment_and_append(spark, tmp_path):
     assert {"stage": "snapshot_exact_dedup", "rows": 1} \
         in report["stages"]
 
-    # drive the real job with --snapshot-append: survivors fold in
+    # drive the real job with --snapshot-append: survivors fold in;
+    # the job leaves the runtime confs of the session it ran on as it
+    # found them
+    confs = ("spark.sql.session.timeZone",
+             "spark.sql.execution.arrow.maxRecordsPerBatch")
+    before = {k: spark.conf.get(k, None) for k in confs}
     curate_job.main([
         "--docs", docs, "--out", str(tmp_path / "o2"),
         "--lineage", str(tmp_path / "l2"),
         "--dedup-snapshot", snap, "--snapshot-append"])
+    assert {k: spark.conf.get(k, None) for k in confs} == before
     args2 = curate_job.parse_args([
         "--docs", docs, "--out", str(tmp_path / "o3"),
         "--lineage", str(tmp_path / "l3"),

@@ -26,30 +26,27 @@ def job_inputs(spark, tmp_path):
     from aloha_spark.data.transcripts import make_state, make_transcripts
     from aloha_spark.plans.flagship import FLAGSHIP_SPEC
 
-    saved = {k: spark.conf.get(k, None) for k in _JOB_CONFS}
     turns = make_transcripts(spark, n_convs=12, turns_per_conv=6,
                              mega_turns=10)
     turns.write.parquet(str(tmp_path / "turns"))
     make_state(spark, turns).write.parquet(str(tmp_path / "state"))
     with open(tmp_path / "spec.json", "w") as f:
         json.dump(FLAGSHIP_SPEC, f)
-    yield turns.count()
-    for k, v in saved.items():
-        if v is None:
-            spark.conf.unset(k)
-        else:
-            spark.conf.set(k, v)
+    return turns.count()
 
 
-def _run(tmp_path, capsys, *extra):
+def _run(spark, tmp_path, capsys, *extra):
     argv = ["--turns", str(tmp_path / "turns"),
             "--state", str(tmp_path / "state"),
             "--out", str(tmp_path / "out"),
             "--lineage", str(tmp_path / "lineage"),
             "--spec", str(tmp_path / "spec.json"),
             "--num-buckets", "4", "--group-size", "2", "--verify", *extra]
+    before = {k: spark.conf.get(k, None) for k in _JOB_CONFS}
     with pytest.raises(SystemExit) as exit_:
         featurize_job.main(argv)
+    # the job restores every runtime conf it set on the caller's session
+    assert {k: spark.conf.get(k, None) for k in _JOB_CONFS} == before
     lines = [ln for ln in capsys.readouterr().out.splitlines()
              if ln.startswith("{")]
     return exit_.value.code, json.loads(lines[-1])
@@ -57,7 +54,7 @@ def _run(tmp_path, capsys, *extra):
 
 def test_verified_run_keeps_callers_session(spark, tmp_path, capsys,
                                             job_inputs):
-    code, res = _run(tmp_path, capsys, "--output", "vw")
+    code, res = _run(spark, tmp_path, capsys, "--output", "vw")
     assert code == 0
     assert res["lineage_mismatches"] == 0 and res["groups"] == 2
     assert res["written_buckets"] + res["skipped_buckets"] == 4
@@ -69,7 +66,7 @@ def test_verified_run_keeps_callers_session(spark, tmp_path, capsys,
 def test_multi_sink_fan_out_verifies_each_sink(spark, tmp_path, capsys,
                                                job_inputs):
     persisted = len(spark.sparkContext._jsc.getPersistentRDDs())
-    code, res = _run(tmp_path, capsys, "--output", "multi")
+    code, res = _run(spark, tmp_path, capsys, "--output", "multi")
     assert code == 0 and sorted(res["sinks"]) == ["libsvm", "sparse", "vw"]
     for name, r in res["sinks"].items():
         assert r["lineage_mismatches"] == 0 and r["groups"] == 2, name
@@ -77,6 +74,6 @@ def test_multi_sink_fan_out_verifies_each_sink(spark, tmp_path, capsys,
         assert n == job_inputs, name
     # no persisted upstream outlives the job
     assert len(spark.sparkContext._jsc.getPersistentRDDs()) == persisted
-    code, res = _run(tmp_path, capsys, "--output", "multi")
+    code, res = _run(spark, tmp_path, capsys, "--output", "multi")
     assert code == 0
     assert all(r["written_buckets"] == 0 for r in res["sinks"].values())

@@ -45,6 +45,21 @@ def test_column_tier_compiles_arithmetic(spark):
     assert [r.x for r in row] == [0.0, 14.0, 20.0]
 
 
+def test_column_tier_without_context_raises(monkeypatch):
+    """Only "not Column-expressible" falls back to the batch tier: with
+    no SparkContext to build Columns in, a Column-tier spec raises
+    instead of silently compiling to the per-row tier."""
+    from pyspark import SparkContext
+
+    monkeypatch.setattr(SparkContext, "_active_spark_context", None)
+    with pytest.raises(AssertionError):
+        try_compile_column(
+            parse_feature_spec("dt", "clamp(${dt_prev_sec:-0}, 0, 86400)"))
+    # a bag-producing spec never needs a Column: still the batch tier
+    assert try_compile_column(parse_feature_spec("bow", "bag(${text})")) \
+        is None
+
+
 def test_batch_tier_rejects_malicious_spec():
     p = parse_feature_spec("evil", "__import__('os').system('true')")
     from aloha_spark.plans.spec import compile_batch_fn

@@ -126,6 +126,33 @@ def test_flagship_windows_first_single_window_exchange(spark, tmp_path):
     assert "MapInPandas" not in plan  # join + windows are pure Catalyst
 
 
+def test_flagship_two_turn_window_operators(spark, tmp_path):
+    """The flagship point-in-time plan builds the turn features as two
+    projections over one window spec: exactly two turn-side ``Window``
+    operators (lag + backfill + ts-delta, then the session id's running
+    sum over that ts-delta) plus the as-of fill's one, the timestamp
+    ``lag`` computed once, and no exchange besides the turn window's
+    and the salted union's."""
+    from aloha_spark.data.transcripts import make_state, make_transcripts
+    from aloha_spark.plans.flagship import point_in_time_features
+    make_transcripts(spark, n_convs=5, turns_per_conv=5, mega_turns=10) \
+        .write.parquet(str(tmp_path / "t"))
+    turns = spark.read.parquet(str(tmp_path / "t"))
+    make_state(spark, turns).write.parquet(str(tmp_path / "s"))
+    state = spark.read.parquet(str(tmp_path / "s"))
+    out = point_in_time_features(turns, state, hot_keys=["mega"],
+                                 state_cols=["state_score"])
+    plan = _plan(out, "simple")
+    windows = re.findall(r"\bWindow \[.*\], \[([^\]]*)\], \[", plan)
+    assert len(windows) == 3, plan
+    turn_side = [w for w in windows if "__asof_salt" not in w]
+    assert len(turn_side) == 2, windows
+    # one lag for prev_text, one for the timestamp behind dt_prev_sec
+    # (the session id reuses dt_prev_sec instead of a second lag)
+    assert plan.count("lag(") == 2, plan
+    assert plan.count("Exchange hashpartitioning") == 2, plan
+
+
 def test_ivf_candidate_join_is_broadcast(spark):
     """IVF probe join must broadcast the (tiny) query side."""
     from aloha_spark.operators.similarity import ivf_topk

@@ -4,6 +4,7 @@ invariant under stable ordering."""
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from aloha_spark.data.transcripts import make_state, make_transcripts
@@ -90,6 +91,49 @@ def test_text_equality_survives_pipeline(spark):
         .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     got = got.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(got, exp)
+
+
+@pytest.mark.parametrize("kw", [
+    {"hot_keys": ["mega"]},
+    {"hot_key_threshold": 20},
+    {"hot_keys": ["mega"], "tolerance": 900.0},
+    {"direction": "nearest", "hot_key_threshold": 20},
+], ids=["salt-list", "salt-threshold", "tolerance", "nearest"])
+def test_point_in_time_builder_matches_helpers(spark, kw):
+    """The flagship's two-projection turn stage plus its as-of attach
+    gives exactly the rows of the composed public helpers followed by
+    ``asof_join`` (``exceptAll`` empty both ways, same row count)."""
+    from aloha_spark.operators.asof import asof_join
+    from aloha_spark.plans.flagship import point_in_time_features
+
+    turns = make_transcripts(spark, n_convs=8, turns_per_conv=12,
+                             mega_turns=40).cache()
+    state = make_state(spark, turns).cache()
+    cols = ["state_score", "state_tag"]
+    asof_kw = dict(kw, salt_buckets=4)
+    direction = asof_kw.pop("direction", None)
+    if direction is None:
+        got = point_in_time_features(turns, state, state_cols=cols,
+                                     gap_seconds=GAP, **asof_kw)
+    else:   # the builder joins backward: attach to its turn stage
+        got = asof_join(point_in_time_features(turns, None,
+                                               gap_seconds=GAP),
+                        state, state_cols=cols, direction=direction,
+                        **asof_kw)
+    w = with_lag_lead(turns, ["text"], lead=False)
+    w = with_backfill(w, ["tool"])
+    w = with_ts_delta(w)
+    w = with_session_id(w, gap_seconds=GAP, order=["turn_idx"])
+    want = asof_join(w, state, state_cols=cols,
+                     direction=direction or "backward", **asof_kw)
+    assert got.columns == want.columns
+    assert got.count() == want.count() == turns.count()
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+    # the case exercises state: some turns match
+    assert got.where(F.col("state_score").isNotNull()).count() > 0
+    turns.unpersist()
+    state.unpersist()
 
 
 class TestTopKPerGroup:
